@@ -13,12 +13,18 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-T0 = np.datetime64("2024-03-01T00:00:00", "us")
+# Start of the reference's dataset window and its historical window hop
+# (BASELINE.md: dataset time span; historical window hop).
+T0 = np.datetime64("2024-02-29T23:59:00", "us")
+HOP_WINDOW_S = 6 * 3600
 WORDS = (
     "join hash row batch scan column customer filter small slow merge order "
     "vector line table data agg value key big fast query sort group window "
     "spark stream part a the and"
 ).split()
+# Assumed mix (no published figure is used): a select majority, as
+# FIXTURES.md asks, with enough insert/copy that every table is ingested
+# several times per hop and selects fall between its ingestions.
 QUERY_TYPES = ("select", "insert", "copy", "update", "delete")
 QUERY_TYPE_P = (0.55, 0.15, 0.10, 0.15, 0.05)
 
@@ -28,15 +34,24 @@ QUERY_TYPE_P = (0.55, 0.15, 0.10, 0.15, 0.05)
 # ---------------------------------------------------------------------------
 
 
-def redset_log(seed: int, rows: int, instances: int = 4, tables: int = 12) -> pd.DataFrame:
+def redset_log(
+    seed: int, hops: int, rows_per_hop: int, instances: int = 4, tables: int = 12
+) -> pd.DataFrame:
     """A Redset-shaped query log sorted by arrival: several instances and
     users, CSV table-id lists, and a mix of select/insert/copy/update/delete.
-    ``execution_duration_ms`` is distinct per row, so a top-k over it is a
-    set with no ties."""
+    Hop ``h`` holds ``rows_per_hop`` rows arriving at distinct whole seconds
+    inside the ``h``-th 6 h window after ``T0``. ``execution_duration_ms``
+    is distinct per row, so a top-k over it is a set with no ties."""
     rng = np.random.default_rng(seed)
+    rows = hops * rows_per_hop
     qtype = rng.choice(QUERY_TYPES, rows, p=QUERY_TYPE_P)
-    gaps = rng.integers(1_000_000, 20_000_000, rows)  # 1-20 s, in µs
-    arrival = T0 + np.cumsum(gaps).astype("timedelta64[us]")
+    secs = np.concatenate(
+        [
+            h * HOP_WINDOW_S + np.sort(rng.choice(HOP_WINDOW_S, rows_per_hop, replace=False))
+            for h in range(hops)
+        ]
+    )
+    arrival = T0 + (secs * 1_000_000).astype("timedelta64[us]")
     tid = rng.integers(1, tables + 1, (rows, 3))
     n_read = rng.integers(1, 4, rows)
     reads = [

@@ -18,18 +18,18 @@ import inputs
 from checks import same_rows
 
 WARMUP_OPS = 1
-ROWS_PER_HOP = 200
+ROWS_PER_HOP = 1000  # the reference's analytical producer batch (BASELINE.md)
 TAIL_PCT = 75
 
 
 def n_ops(seconds: int, tiny: bool) -> int:
-    return 3 if tiny else max(3, round(seconds / 5))
+    return 3 if tiny else max(2, round(seconds / 8))
 
 
 def prepare(ctx, rep: int) -> dict:
     """Generate the log and stage one parquet file per hop."""
     hops = WARMUP_OPS + ctx.total_ops
-    log = inputs.redset_log(ctx.seed, hops * ROWS_PER_HOP)
+    log = inputs.redset_log(ctx.seed, hops, ROWS_PER_HOP)
     staged = ctx.path(f"staged{rep}")
     os.makedirs(staged)
     files = []

@@ -18,7 +18,7 @@ import sys
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORKLOADS = ["redset_replay", "analyst_queries", "curation_ingest"]
+WORKLOADS = ["redset_replay", "analyst_queries"]
 
 
 def _spec() -> dict:

@@ -4,11 +4,9 @@ n_ops(seconds, tiny), and the steps run.execute calls in order: prepare
 op, check, stop."""
 
 import analyst
-import ingest
 import replay
 
 WORKLOADS = {
     "redset_replay": replay,
     "analyst_queries": analyst,
-    "curation_ingest": ingest,
 }
