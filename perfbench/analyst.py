@@ -5,7 +5,8 @@ The mix is the registry's 15 ``bench``-tagged queries plus
 One op is one query: ``Query.build(spark, sf_dir)`` and then a full compute
 through the ``noop`` sink. The warm-up runs every query twice: once
 concurrently, checking its rows against the query's DuckDB oracle, and
-once in measurement order. Session state is what a user's session would
+once in measurement order. The measured phase runs the mix
+once per 10 s of ``--seconds``. Session state is what a user's session would
 have: no memo is cleared between ops.
 """
 
@@ -39,13 +40,17 @@ QUERIES = (
     "rl_top_revenue_orders",
     "llm_embedding_dedup_clusters",
 )
+# The correctness pass starts the queries whose cold run is longest
+# (7-10 s against 1-5 s), so that no thread is left running one alone at
+# the end of the pass.
+COLD_FIRST = ("llm_embedding_dedup_clusters", "ri_decile_histogram")
 SF = 0.002
 WARMUP_THREADS = 4
 TAIL_PCT = 75
 
 
 def n_ops(seconds: int, tiny: bool) -> int:
-    return 2 if tiny else len(QUERIES) * max(1, round(seconds / 16))
+    return 2 if tiny else len(QUERIES) * max(1, round(seconds / 10))
 
 
 def prepare(ctx, rep: int) -> dict:
@@ -69,13 +74,14 @@ def warmup(ctx, state: dict) -> None:
     """One correctness pass over the mix, WARMUP_THREADS queries at a
     time, then one plain pass in measurement order. The cold first run of a
     query is mostly single-threaded driver work (planning, codegen, JIT),
-    so concurrent queries use the idle cores. Measured straight after the
-    correctness pass, the mix ran about 15 % slower than on its next run,
-    and its p50 and p75 spread about twice as wide between runs."""
+    so concurrent queries use the idle cores. The first sequential pass
+    after the correctness pass ran 2-24 % slower than the next, by a
+    different amount in every run."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(WARMUP_THREADS) as pool:
-        list(pool.map(lambda name: _checked(ctx, state, name), QUERIES))
+        order = COLD_FIRST + tuple(q for q in QUERIES if q not in COLD_FIRST)
+        list(pool.map(lambda name: _checked(ctx, state, name), order))
     for i in range(-len(QUERIES), 0):
         op(ctx, state, i)
 

@@ -27,6 +27,10 @@ WORDS = (
 # several times per hop and selects fall between its ingestions.
 QUERY_TYPES = ("select", "insert", "copy", "update", "delete")
 QUERY_TYPE_P = (0.55, 0.15, 0.10, 0.15, 0.05)
+# Planted embedding clusters: size, and per-coordinate noise around the
+# cluster direction (64 dims: pairwise cosine about 0.9 inside a cluster).
+CLUSTER_SIZE = 4
+CLUSTER_NOISE = 0.04
 
 
 # ---------------------------------------------------------------------------
@@ -254,16 +258,41 @@ def registry_tables(seed: int, sf: float) -> dict[str, pd.DataFrame]:
         }
     )
     t["documents"] = documents(seed + 1, n_doc)
-    vecs = rng.standard_normal((n_vec, 64)).astype("float32")
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
     t["embeddings"] = pd.DataFrame(
         {
             "vec_id": np.arange(n_vec, dtype="int64"),
-            "embedding": list(vecs),
+            "embedding": list(embeddings(rng, n_vec)),
             "label": rng.integers(0, 10, n_vec).astype("int32"),
         }
     )
     return t
+
+
+def embeddings(rng: np.random.Generator, n: int, dim: int = 64) -> np.ndarray:
+    """Unit vectors with planted near-duplicate clusters: half of them in
+    clusters of CLUSTER_SIZE around one direction (pairwise cosine about
+    0.9), the rest alone on a direction of their own. The directions are
+    the axes of a seeded orthonormal basis and their negatives, so vectors
+    of different directions stay far below the registry's 0.35 near-dup
+    threshold. Every near-dup component the LSH blocking can find is then a
+    clique inside one cluster, and the connected-components loop runs the
+    same number of rounds for every seed; with independent random vectors
+    it found a seed-dependent handful of chance pairs, and took half as
+    long on a seed that found none."""
+    n_clusters = n // 2 // CLUSTER_SIZE
+    group = np.concatenate(
+        [
+            np.repeat(np.arange(n_clusters), CLUSTER_SIZE),
+            np.arange(n_clusters, n - n_clusters * (CLUSTER_SIZE - 1)),
+        ]
+    )
+    basis = np.linalg.qr(rng.standard_normal((dim, dim)))[0]
+    directions = np.concatenate([basis, -basis])
+    if group[-1] >= len(directions):
+        raise ValueError(f"{n} vectors need more than {len(directions)} directions")
+    vecs = directions[rng.permutation(len(directions))[group]] + rng.normal(0, CLUSTER_NOISE, (n, dim))
+    vecs = vecs[rng.permutation(n)]
+    return (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype("float32")
 
 
 def write_registry_tables(tables: dict[str, pd.DataFrame], sf_dir: str) -> dict[str, int]:

@@ -23,7 +23,7 @@ TAIL_PCT = 75
 
 
 def n_ops(seconds: int, tiny: bool) -> int:
-    return 3 if tiny else max(2, round(seconds / 8))
+    return 3 if tiny else max(2, seconds // 8)
 
 
 def prepare(ctx, rep: int) -> dict:

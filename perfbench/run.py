@@ -137,9 +137,15 @@ def detach_event_log(spark, listener) -> None:
     listener.stop()
 
 
-def nearest_rank(values: list[float], pct: float) -> float:
+def percentile(values: list[float], pct: float) -> float:
+    """Linear interpolation between the two nearest ranks (the median at
+    50). Unlike a nearest-rank percentile it does not jump by the gap
+    between two ops when their order swaps."""
     ordered = sorted(values)
-    return ordered[max(0, math.ceil(pct / 100.0 * len(ordered)) - 1)]
+    x = pct / 100.0 * (len(ordered) - 1)
+    lo = math.floor(x)
+    hi = min(lo + 1, len(ordered) - 1)
+    return ordered[lo] + (ordered[hi] - ordered[lo]) * (x - lo)
 
 
 def measure(wl, ctx: Ctx, state, first: int, n: int) -> dict:
@@ -215,7 +221,7 @@ def execute(wl, args) -> dict:
     metrics = {
         "setup_s": setup_s,
         "op_p50_s": median(op_s),
-        "op_tail_s": nearest_rank(op_s, wl.TAIL_PCT),
+        "op_tail_s": percentile(op_s, wl.TAIL_PCT),
         "run_s": plain["run_s"],
     }
     record = {
