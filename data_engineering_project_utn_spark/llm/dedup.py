@@ -1219,156 +1219,168 @@ def _incremental_candidates(
     )
 
 
+_VERIFY_THRESHOLD = {"jaccard": 0.5, "editdist": 0.97}
+
+
 def incremental_neardup(
     incoming: DataFrame,
-    corpus: DataFrame,
+    corpus: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 8,
     bands: int = 4,
     n: int = 5,
-    threshold: float = 0.5,
+    threshold: float | None = None,
+    verifier: str = "jaccard",
     corpus_shingles: DataFrame | None = None,
     corpus_bands: DataFrame | None = None,
     broadcast_batch: bool = False,
     band_stats: DataFrame | None = None,
     hot_band_cap: int | None = None,
+    band_index: DataFrame | None = None,
+    corpus_at_rest: DataFrame | None = None,
+    max_pushdown_keys: int = 65536,
 ) -> DataFrame:
     """Asymmetric near-dup join: which INCOMING docs near-duplicate any
     CORPUS doc — the production shape of dedup, where a new crawl batch is
     checked against everything already ingested instead of re-running the
-    corpus×corpus self-join.
+    corpus×corpus self-join.  The incoming batch's bands probe the
+    corpus's band frame (cost Σ|incoming ∩ bucket|·|corpus ∩ bucket|,
+    never corpus²), and verification touches only candidates.
 
-    Scale shape: the corpus side's band frame is exactly what a real
-    deployment stores at rest (bucketed by band hash), so candidate
-    generation is one bucket join of the (small) incoming bands against it
-    — cost Σ|incoming ∩ bucket|·|corpus ∩ bucket|, never corpus².  Exact
-    Jaccard verification touches only candidates.  Columns: doc_new,
-    doc_existing, jaccard.
+    ``verifier`` picks the verify step over the candidates:
 
-    ``corpus_shingles``: a caller-persisted ``shingle_frame`` of the
-    corpus — a STREAMING deployment pins it once per stream (see
-    ``make_curation_batch_fn``) so per-micro-batch cost is batch-side
-    work only, not a corpus re-shingle per trigger.
+    * ``"jaccard"`` (default ``threshold`` 0.5): exact shingle Jaccard
+      > threshold.  Columns: doc_new, doc_existing, jaccard.
+    * ``"editdist"`` (default ``threshold`` 0.97): the character-level
+      arm — normalized Levenshtein similarity ≥ threshold through the
+      banded DP (``_editdist_verified`` — length prefilter,
+      threshold-banded JVM DP, oracle-exact float filter).  Columns:
+      doc_new, doc_existing, edit_distance, edit_sim.
 
-    ``corpus_bands``: the corpus band frame AT REST (doc_id, band_idx,
-    band_hash — e.g. a bucketed warehouse table); when given, the probe
-    joins it directly instead of re-banding ``corpus_shingles``.
+    Batch-independence holds for both verifiers by the asymmetry: each
+    incoming doc's verdict depends only on (doc, corpus), so the union of
+    per-batch results equals the one-shot run over all batches at once
+    (streaming parity tested).
 
-    ``broadcast_batch``: opt-in for STREAMING callers whose batches are
-    bounded micro-batches; the batch-mode default sort-merges instead
-    (see ``_incremental_candidates`` — force-broadcasting a
-    corpus-proportional "batch" is the driver-OOM class).
+    The corpus-side mode follows the inputs the caller passes:
 
-    ``hot_band_cap`` / ``band_stats``: opt into the hot-band guard —
-    bands whose corpus bucket exceeds the cap are skipped (the capped
-    docs route to the SNM arm via ``hot_band_suspects``; oracle twin
-    ``llm_incremental_dedup_capped``).  Default None = the exact pair
-    set the uncapped gates pin.
+    * BATCH (``corpus``): candidates come from a sort-merge probe of the
+      corpus band frame — ``corpus_bands`` when given (the band frame AT
+      REST, e.g. a bucketed warehouse table: doc_id, band_idx,
+      band_hash), else banded from ``corpus_shingles`` (a caller-
+      persisted ``shingle_frame`` of the corpus — a STREAMING deployment
+      pins it once per stream, see ``make_curation_batch_fn``) or from
+      ``corpus`` itself.  With an at-rest band frame the edit-distance
+      arm never shingles the corpus at all (it verifies on TEXT).
+      ``broadcast_batch`` is the opt-in for STREAMING callers whose
+      batches are bounded micro-batches; the batch-mode default
+      sort-merges instead (see ``_incremental_candidates`` —
+      force-broadcasting a corpus-proportional "batch" is the driver-OOM
+      class).
+    * BOUNDED BATCH (``band_index`` + ``corpus_at_rest``): the
+      per-trigger streaming shape where NOTHING corpus-scale is scanned,
+      shuffled, or computed — batch shingles/bands (batch-sized,
+      persisted); candidate pairs via the IN-pushdown index probe
+      (``_indexed_candidates`` — reads only matched row groups); the
+      candidates' ``doc_existing`` ids push into the doc_id-sorted
+      bucketed corpus the same way (``_existing_rows_for``); the
+      verifier runs on batch × matched rows only.  Two driver
+      round-trips per trigger (band keys, candidate ids), each bounded
+      by the batch/candidate size — the price of turning a corpus-wide
+      join into an index lookup, identical to what any LSH service does
+      per query.  Value-identical to the batch mode on the same split
+      (parity-tested); NOT registered as an oracle gate with a
+      corpus-proportional batch, because collecting a
+      corpus-proportional key list would break the bounded contract this
+      mode exists to exploit.
+
+    ``hot_band_cap`` / ``band_stats`` (VERDICT r13 #2): opt into the
+    hot-band guard — batch bands whose corpus bucket exceeds the cap
+    (per ``band_stats``, see ``band_bucket_sizes``; the stats table
+    compaction maintains, ``refresh_band_stats``) are skipped before the
+    probe, so the candidate set (and, in the bounded mode, both driver
+    round-trips) stay bounded no matter how skewed the corpus is.  The
+    skipped docs are named by ``hot_band_suspects`` for the SNM arm
+    (2·window bound, flood-tested in ``TestHotBandGuard``; oracle twin
+    ``llm_incremental_dedup_capped``).  Each skipped pair saves a set
+    intersect under Jaccard and an O(L·εL) DP under edit distance.
+    Default None = the exact pair set the uncapped gates pin.
     """
+    if verifier not in _VERIFY_THRESHOLD:
+        raise ValueError(f"verifier must be 'jaccard' or 'editdist', got {verifier!r}")
+    if threshold is None:
+        threshold = _VERIFY_THRESHOLD[verifier]
+    indexed = band_index is not None
+    if indexed and corpus_at_rest is None:
+        raise ValueError("band_index requires corpus_at_rest")
     sh_in = track_persist(
         shingle_frame(parallelize_compute(incoming), id_col, text_col, n)
     )
-    sh_co = (
-        corpus_shingles
-        if corpus_shingles is not None
-        else track_persist(
-            shingle_frame(
-                corpus if corpus_bands is not None else parallelize_compute(corpus),
-                id_col,
-                text_col,
-                n,
+    sh_co = None
+    if indexed:
+        b_in = track_persist(_banded(sh_in, k, bands))
+        if hot_band_cap is not None:
+            stats = (
+                band_stats if band_stats is not None else band_bucket_sizes(band_index)
             )
-        )
-    )
-    b_co = corpus_bands if corpus_bands is not None else _banded(sh_co, k, bands)
-    cand = _incremental_candidates(
-        sh_in, b_co, k, bands, broadcast_batch, band_stats, hot_band_cap
-    )
-    sa = sh_in.select(F.col("doc_id").alias("doc_new"), F.col("shset").alias("sa"))
-    sb = sh_co.select(
-        F.col("doc_id").alias("doc_existing"), F.col("shset").alias("sb")
-    )
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("double")
-    union = (F.size("sa") + F.size("sb")).cast("double") - inter
-    # hint("merge") on the CORPUS side only: the batch side (sa) is
-    # genuinely small and may broadcast; sb is corpus-scale shsets
-    return (
-        cand.join(sa, "doc_new")
-        .join(sb.hint("merge"), "doc_existing")
-        .select("doc_new", "doc_existing", (inter / union).alias("jaccard"))
-        .filter(F.col("jaccard") > threshold)
-    )
-
-
-def incremental_editdist_neardup(
-    incoming: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    bands: int = 4,
-    n: int = 5,
-    threshold: float = 0.97,
-    corpus_shingles: DataFrame | None = None,
-    corpus_bands: DataFrame | None = None,
-    broadcast_batch: bool = False,
-    band_stats: DataFrame | None = None,
-    hot_band_cap: int | None = None,
-) -> DataFrame:
-    """The EDIT-DISTANCE arm of incremental dedup —
-    ``incremental_neardup``'s character-level twin: which INCOMING docs
-    Levenshtein-duplicate (normalized edit sim ≥ ``threshold``) any
-    CORPUS doc.  Asymmetric like the MinHash arm: the incoming batch's
-    bands probe the corpus's at-rest band frame (cost Σ|incoming ∩
-    bucket|·|corpus ∩ bucket|, never corpus²), and the banded DP
-    verifies batch×candidates only (``_editdist_verified`` — length
-    prefilter, threshold-banded JVM DP, oracle-exact float filter).
-
-    Batch-independence holds by the same asymmetry argument as the
-    MinHash arm: each incoming doc's verdict depends only on (doc,
-    corpus), so the union of per-batch results equals the one-shot run
-    over all batches at once (streaming parity tested).  Columns:
-    doc_new, doc_existing, edit_distance, edit_sim.
-
-    ``corpus_shingles`` / ``corpus_bands`` / ``broadcast_batch`` /
-    ``band_stats`` / ``hot_band_cap``: same contracts as
-    ``incremental_neardup`` — shingles pin once per stream, an at-rest
-    band frame skips corpus banding entirely, the batch side broadcasts
-    ONLY under the streaming bounded-batch contract, and the hot-band
-    guard skips over-cap bands (each skipped pair saves an O(L·εL) DP
-    here, the priciest verify in the ensemble).
-    """
-    sh_in = track_persist(
-        shingle_frame(parallelize_compute(incoming), id_col, text_col, n)
-    )
-    if corpus_bands is not None:
-        # at-rest band index: the corpus never shingles at all here —
-        # edit-distance verification only needs its TEXT
-        b_co = corpus_bands
+            b_in = track_persist(_split_hot_bands(b_in, stats, hot_band_cap)[0])
+        cand = track_persist(_indexed_candidates(b_in, band_index, max_pushdown_keys))
+        existing = _existing_rows_for(cand, corpus_at_rest, id_col, max_pushdown_keys)
     else:
-        sh_co = (
-            corpus_shingles
-            if corpus_shingles is not None
-            else track_persist(
-                shingle_frame(parallelize_compute(corpus), id_col, text_col, n)
+        existing = corpus
+        # an at-rest band frame spares the edit-distance arm any corpus
+        # shingles — it verifies on TEXT
+        if verifier == "jaccard" or corpus_bands is None:
+            sh_co = (
+                corpus_shingles
+                if corpus_shingles is not None
+                else track_persist(
+                    shingle_frame(
+                        corpus
+                        if corpus_bands is not None
+                        else parallelize_compute(corpus),
+                        id_col,
+                        text_col,
+                        n,
+                    )
+                )
             )
+        b_co = corpus_bands if corpus_bands is not None else _banded(sh_co, k, bands)
+        cand = _incremental_candidates(
+            sh_in, b_co, k, bands, broadcast_batch, band_stats, hot_band_cap
         )
-        b_co = _banded(sh_co, k, bands)
-    cand = _incremental_candidates(
-        sh_in, b_co, k, bands, broadcast_batch, band_stats, hot_band_cap
-    )
+    if verifier == "jaccard":
+        sa = sh_in.select(F.col("doc_id").alias("doc_new"), F.col("shset").alias("sa"))
+        sh_ex = shingle_frame(existing, id_col, text_col, n) if indexed else sh_co
+        sb = sh_ex.select(
+            F.col("doc_id").alias("doc_existing"), F.col("shset").alias("sb")
+        )
+        if not indexed:
+            # the batch side (sa) is genuinely small and may broadcast; sb
+            # is corpus-scale shsets
+            sb = sb.hint("merge")
+        inter = F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("double")
+        union = (F.size("sa") + F.size("sb")).cast("double") - inter
+        return (
+            cand.join(sa, "doc_new")
+            .join(sb, "doc_existing")
+            .select("doc_new", "doc_existing", (inter / union).alias("jaccard"))
+            .filter(F.col("jaccard") > threshold)
+        )
     ta = incoming.select(F.col(id_col).alias("doc_new"), F.col(text_col).alias("_ta"))
-    if not broadcast_batch:
-        # batch contract: the "incoming" text side may be
-        # corpus-proportional and is a static parquet estimate — the
-        # same 10-50x-underestimate broadcast class as the bands
-        ta = ta.hint("merge")
-    tb = corpus.select(
+    tb = existing.select(
         F.col(id_col).alias("doc_existing"), F.col(text_col).alias("_tb")
     )
-    # hint("merge") on the CORPUS text side always: _tb is corpus-scale
-    joined = cand.join(ta, "doc_new").join(tb.hint("merge"), "doc_existing")
+    if not indexed:
+        if not broadcast_batch:
+            # batch contract: the "incoming" text side may be
+            # corpus-proportional and is a static parquet estimate — the
+            # same 10-50x-underestimate broadcast class as the bands
+            ta = ta.hint("merge")
+        # the corpus text side is corpus-scale
+        tb = tb.hint("merge")
+    joined = cand.join(ta, "doc_new").join(tb, "doc_existing")
     return _editdist_verified(joined, ["doc_new", "doc_existing"], threshold)
 
 
@@ -1512,117 +1524,6 @@ def hot_band_suspects(
     )
     _, hot_rows = _split_hot_bands(b_in, band_stats, hot_band_cap)
     return hot_rows.select("doc_id").distinct()
-
-
-def incremental_neardup_indexed(
-    incoming: DataFrame,
-    band_index: DataFrame,
-    corpus_at_rest: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    bands: int = 4,
-    n: int = 5,
-    threshold: float = 0.5,
-    max_pushdown_keys: int = 65536,
-    band_stats: DataFrame | None = None,
-    hot_band_cap: int | None = None,
-) -> DataFrame:
-    """``incremental_neardup`` for BOUNDED batches against the corpus's
-    at-rest structures — the per-trigger streaming shape where NOTHING
-    corpus-scale is scanned, shuffled, or computed:
-
-    1. batch shingles/bands (batch-sized, persisted),
-    2. candidate pairs via the IN-pushdown index probe
-       (``_indexed_candidates`` — reads only matched row groups),
-    3. the candidates' ``doc_existing`` ids (bounded by the candidate
-       set) push into the doc_id-sorted bucketed corpus the same way,
-    4. exact Jaccard verifies batch × matched-rows only.
-
-    Two driver round-trips per trigger (band keys, candidate ids), each
-    bounded by the batch/candidate size — the price of turning a
-    corpus-wide join into an index lookup, identical to what any LSH
-    service does per query.  Value-identical to ``incremental_neardup``
-    on the same split (parity-tested); NOT registered as an oracle gate
-    with a corpus-proportional batch, because collecting a
-    corpus-proportional key list would break the bounded contract this
-    function exists to exploit.
-
-    ``hot_band_cap`` / ``band_stats`` (VERDICT r13 #2): the per-trigger
-    hot-band guard.  The at-rest index has no cap of its own — a
-    boilerplate band bucket shared by a big corpus slice × every batch
-    doc carrying it is |batch ∩ band|·|corpus ∩ band| verify pairs per
-    TRIGGER.  With a cap, the batch's hot bands (corpus bucket >
-    cap per ``band_stats`` — the stats table compaction maintains,
-    ``refresh_band_stats``) are skipped before the
-    key-collect, so both driver round-trips AND the candidate set stay
-    batch-bounded no matter how skewed the corpus is; the skipped docs
-    are named by ``hot_band_suspects`` for the SNM arm (2·window bound,
-    flood-tested in ``TestHotBandGuard``).
-    """
-    sh_in = track_persist(
-        shingle_frame(parallelize_compute(incoming), id_col, text_col, n)
-    )
-    b_in = track_persist(_banded(sh_in, k, bands))
-    if hot_band_cap is not None:
-        stats = (
-            band_stats if band_stats is not None else band_bucket_sizes(band_index)
-        )
-        b_in, _ = _split_hot_bands(b_in, stats, hot_band_cap)
-        b_in = track_persist(b_in)
-    cand = track_persist(_indexed_candidates(b_in, band_index, max_pushdown_keys))
-    hits = _existing_rows_for(cand, corpus_at_rest, id_col, max_pushdown_keys)
-    sh_hit = shingle_frame(hits, id_col, text_col, n)
-    sa = sh_in.select(F.col("doc_id").alias("doc_new"), F.col("shset").alias("sa"))
-    sb = sh_hit.select(
-        F.col("doc_id").alias("doc_existing"), F.col("shset").alias("sb")
-    )
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("double")
-    union = (F.size("sa") + F.size("sb")).cast("double") - inter
-    return (
-        cand.join(sa, "doc_new")
-        .join(sb, "doc_existing")
-        .select("doc_new", "doc_existing", (inter / union).alias("jaccard"))
-        .filter(F.col("jaccard") > threshold)
-    )
-
-
-def incremental_editdist_neardup_indexed(
-    incoming: DataFrame,
-    band_index: DataFrame,
-    corpus_at_rest: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    bands: int = 4,
-    n: int = 5,
-    threshold: float = 0.97,
-    max_pushdown_keys: int = 65536,
-    band_stats: DataFrame | None = None,
-    hot_band_cap: int | None = None,
-) -> DataFrame:
-    """``incremental_editdist_neardup`` over the at-rest index — the
-    edit-distance twin of ``incremental_neardup_indexed``: same
-    IN-pushdown candidate probe (including the ``hot_band_cap`` guard —
-    a flood is WORSE here, each skipped pair saving an O(L·εL) DP, not
-    a set intersect), then the threshold-banded DP verifies batch ×
-    matched-rows (whose texts come from the id-pruned bucketed corpus
-    scan, never a full pass)."""
-    sh_in = track_persist(
-        shingle_frame(parallelize_compute(incoming), id_col, text_col, n)
-    )
-    b_in = track_persist(_banded(sh_in, k, bands))
-    if hot_band_cap is not None:
-        stats = (
-            band_stats if band_stats is not None else band_bucket_sizes(band_index)
-        )
-        b_in = track_persist(_split_hot_bands(b_in, stats, hot_band_cap)[0])
-    cand = track_persist(_indexed_candidates(b_in, band_index, max_pushdown_keys))
-    hits = _existing_rows_for(cand, corpus_at_rest, id_col, max_pushdown_keys)
-    ta = incoming.select(F.col(id_col).alias("doc_new"), F.col(text_col).alias("_ta"))
-    tb = hits.select(F.col(id_col).alias("doc_existing"), F.col(text_col).alias("_tb"))
-    joined = cand.join(ta, "doc_new").join(tb, "doc_existing")
-    return _editdist_verified(joined, ["doc_new", "doc_existing"], threshold)
 
 
 def _existing_rows_for(

@@ -152,7 +152,12 @@ def pagerank_weighted(
     return ranks.select("node", F.col("r").alias("rank_fp"))
 
 
-def triangle_counts(pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b") -> DataFrame:
+def triangle_counts(
+    pairs: DataFrame,
+    a_col: str = "id_a",
+    b_col: str = "id_b",
+    orientation: str = "id",
+) -> DataFrame:
     """Per-node triangle participation counts over an undirected graph
     given as canonical pairs (a < b): (node, tri, deg, cc_num, cc_den)
     where ``tri`` is the number of triangles through the node, ``deg``
@@ -163,30 +168,42 @@ def triangle_counts(pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b") 
     doc-overlap graph (PageRank ranks hubs; triangles mark tight cliques
     of mutual near-dups that pairwise scores alone can't see).
 
-    Scale shape — the standard distributed triangle enumeration on the
-    DEGREE-ORACLE-FREE canonical orientation (a < b by id): each
-    triangle {x<y<z} is found exactly once as e1=(x,y) ⨝ e2=(y,z) ⨝
-    e3=(x,z) — two equi-join shuffles on single node keys plus one
-    pair-key join, never an all-pairs product.  Wedge count is
-    Σ_y deg⁺(y)·deg⁻(y) under the orientation; at 100 TB orient by
-    (degree, id) instead (the classic skew fix: high-degree nodes get
-    few out-edges) — same plan shape, one extra degree join.
+    Scale shape — the standard distributed triangle enumeration: under
+    a total order ≺ on nodes each triangle {u ≺ v ≺ w} is found exactly
+    once as (u→v) ⨝ (v→w) closed by (u→w) — two equi-join shuffles on
+    single node keys plus one pair-key join, never an all-pairs product.
+    Wedge count is Σ_v outdeg(v)·indeg(v) under the orientation, which
+    ``orientation`` picks; the triangle SET, and so the output, does not
+    depend on it (one oracle holds both plans to the same bits):
+
+    * ``"id"`` — the degree-oracle-free canonical orientation (a < b by
+      id), no extra join;
+    * ``"degree"`` — the (degree, id) orientation (``orient_by_degree``,
+      VERDICT r07 #5): the wedge join fans out per LOW-degree endpoints
+      only, the hub-skew fix for power-law graphs at 100 TB, at the cost
+      of one extra degree join.
     """
-    e = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")).distinct()
-    # wedges x<y<z from (x,y) and (y,z), closed by (x,z)
-    e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    tris = e1.join(e2, "y").join(e3, ["x", "z"])
+    if orientation == "degree":
+        from data_engineering_project_utn_spark.persist import track_persist
+
+        oriented, deg = orient_by_degree(pairs, a_col, b_col)
+        # three self-join consumers — persist so the degree joins run once
+        oriented = track_persist(oriented)
+    elif orientation == "id":
+        oriented = pairs.select(
+            F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+        ).distinct()
+        deg = _degrees(oriented, "src", "dst")
+    else:
+        raise ValueError(f"orientation must be 'id' or 'degree', got {orientation!r}")
+    e1 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    e2 = oriented.select(F.col("src").alias("v"), F.col("dst").alias("w"))
+    e3 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("w"))
+    tris = e1.join(e2, "v").join(e3, ["u", "w"])
     per_node = (
-        tris.select(F.explode(F.array("x", "y", "z")).alias("node"))
+        tris.select(F.explode(F.array("u", "v", "w")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("tri"))
-    )
-    deg = (
-        undirect(e, "a", "b")
-        .groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
     )
     return deg.join(per_node, "node", "left").select(
         "node",
@@ -194,6 +211,15 @@ def triangle_counts(pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b") 
         "deg",
         (F.coalesce(F.col("tri"), F.lit(0).cast("long")) * 2).alias("cc_num"),
         (F.col("deg") * (F.col("deg") - 1)).cast("long").alias("cc_den"),
+    )
+
+
+def _degrees(e: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """(node, deg) over a distinct undirected pair frame."""
+    return (
+        undirect(e, a_col, b_col)
+        .groupBy(F.col("src").alias("node"))
+        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
     )
 
 
@@ -215,14 +241,10 @@ def orient_by_degree(
 
     Scale shape: one degree aggregation + two broadcast-or-shuffle
     equi-joins of the pair list against the degree frame — the "one
-    extra degree join" the id-orientation docstring budgets for 100 TB.
+    extra degree join" ``triangle_counts(orientation="degree")`` pays.
     """
     e = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")).distinct()
-    deg = (
-        undirect(e, "a", "b")
-        .groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    deg = _degrees(e, "a", "b")
     withdeg = e.join(
         deg.select(F.col("node").alias("a"), F.col("deg").alias("_dega")), "a"
     ).join(deg.select(F.col("node").alias("b"), F.col("deg").alias("_degb")), "b")
@@ -234,39 +256,3 @@ def orient_by_degree(
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
     )
     return oriented, deg
-
-
-def triangle_counts_degree_ordered(
-    pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b"
-) -> DataFrame:
-    """``triangle_counts`` on the (degree, id) orientation — identical
-    output (the triangle SET doesn't depend on the orientation; held to
-    the same oracle as the id-oriented gate), different physical plan:
-    the wedge join fans out per LOW-degree endpoints only, the hub-skew
-    fix the id-oriented docstring names for 100 TB (VERDICT r07 #5).
-
-    Same join shape: each triangle {p ≺ q ≺ r} under the total order ≺
-    = (degree, id) appears exactly once as (p→q) ⨝ (q→r) closed by
-    (p→r) — two single-key equi-joins + one pair-key join, never
-    all-pairs."""
-    from data_engineering_project_utn_spark.persist import track_persist
-
-    oriented, deg = orient_by_degree(pairs, a_col, b_col)
-    # three self-join consumers — persist so the degree joins run once
-    oriented = track_persist(oriented)
-    e1 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    e2 = oriented.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    e3 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-    tris = e1.join(e2, "v").join(e3, ["u", "w"])
-    per_node = (
-        tris.select(F.explode(F.array("u", "v", "w")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("tri"))
-    )
-    return deg.join(per_node, "node", "left").select(
-        "node",
-        F.coalesce(F.col("tri"), F.lit(0).cast("long")).alias("tri"),
-        "deg",
-        (F.coalesce(F.col("tri"), F.lit(0).cast("long")) * 2).alias("cc_num"),
-        (F.col("deg") * (F.col("deg") - 1)).cast("long").alias("cc_den"),
-    )

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from data_engineering_project_utn_spark.functions.scalar import (
     categorize_cluster,
-    dsum,
     mmss,
 )
 
@@ -53,27 +52,6 @@ def leaderboard_user_queries(leaderboard: DataFrame, k: int = 5) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("query_count"))
         .orderBy(F.desc("query_count"), "user_id")
         .limit(k)
-    )
-
-
-def query_type_distribution(metrics: DataFrame) -> DataFrame:
-    """Query count per type (`Dashboard_Live_Final.py:452-459`)."""
-    return (
-        metrics.groupBy("query_type")
-        .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy(F.desc("count"), "query_type")
-    )
-
-
-def compile_metrics_totals(compile_metrics: DataFrame) -> DataFrame:
-    """Scalar sums of planner counters + scan/spill volume
-    (`Dashboard_Live_Final.py:542-548`)."""
-    return compile_metrics.agg(
-        F.sum("num_joins").alias("total_joins"),
-        F.sum("num_scans").alias("total_scans"),
-        F.sum("num_aggregations").alias("total_aggregations"),
-        dsum("mbytes_scanned").alias("total_mbytes_scanned"),
-        dsum("mbytes_spilled").alias("total_mbytes_spilled"),
     )
 
 

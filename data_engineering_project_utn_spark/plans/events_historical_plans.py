@@ -18,46 +18,51 @@ from data_engineering_project_utn_spark.plans.events_shared import (
     _output_table,
     events_as_flat,
 )
-from data_engineering_project_utn_spark.plans.registry import must_replace, register
+from data_engineering_project_utn_spark.plans.registry import (
+    Builder,
+    must_replace,
+    register,
+)
 from data_engineering_project_utn_spark.tables import load_table
 
-@register(
+def _ingestion_intervals(salted: bool) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """As-of next-ingestion intervals via lead() — replaces the
+        reference's O(n²) self-join (J1/J2 → W2;
+        `Dashboard_Historical_Final.py:216-238`,
+        `Dashboard/update_tables.py:55-78`).
+
+        ``salted`` (``ri_ingestion_intervals_salted``): the skew-salted
+        as-of window (bucket-split + boundary repair,
+        operators/intervals.ingestion_intervals_salted) held to the
+        IDENTICAL oracle as the plain window — the driver verifies the
+        hot-key scale path end-to-end."""
+        flat = events_as_flat(spark, sf_dir)
+        if salted:
+            iv = iv_ops.ingestion_intervals_salted(flat, salt_interval="1 day")
+        else:
+            iv = iv_ops.ingestion_intervals(flat)
+        return iv.select(
+            "instance_id",
+            "query_id",
+            "write_table_id",
+            F.col("current_timestamp").alias("ingest_ts"),
+            F.col("next_timestamp").alias("next_ingest_ts"),
+        )
+
+    return build
+
+
+register(
     "ri_ingestion_intervals",
     oracle=INTERVALS_CTE + "SELECT * FROM intervals",
     tags=("reference", "historical", "window", "bench"),
-)
-def ri_ingestion_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of next-ingestion intervals via lead() — replaces the reference's
-    O(n²) self-join (J1/J2 → W2; `Dashboard_Historical_Final.py:216-238`,
-    `Dashboard/update_tables.py:55-78`)."""
-    flat = events_as_flat(spark, sf_dir)
-    return iv_ops.ingestion_intervals(flat).select(
-        "instance_id",
-        "query_id",
-        "write_table_id",
-        F.col("current_timestamp").alias("ingest_ts"),
-        F.col("next_timestamp").alias("next_ingest_ts"),
-    )
-
-
-@register(
+)(_ingestion_intervals(salted=False))
+register(
     "ri_ingestion_intervals_salted",
     oracle=INTERVALS_CTE + "SELECT * FROM intervals",
     tags=("reference", "historical", "window", "skew", "scale"),
-)
-def ri_ingestion_intervals_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-salted as-of window (bucket-split + boundary repair,
-    operators/intervals.ingestion_intervals_salted) held to the IDENTICAL
-    oracle as the plain window — the driver verifies the hot-key scale
-    path end-to-end."""
-    flat = events_as_flat(spark, sf_dir)
-    return iv_ops.ingestion_intervals_salted(flat, salt_interval="1 day").select(
-        "instance_id",
-        "query_id",
-        "write_table_id",
-        F.col("current_timestamp").alias("ingest_ts"),
-        F.col("next_timestamp").alias("next_ingest_ts"),
-    )
+)(_ingestion_intervals(salted=True))
 
 
 @register(
@@ -366,42 +371,41 @@ def _decile_rel(spark: SparkSession, sf_dir: str, dedup: bool = True) -> DataFra
     )
 
 
-@register(
+def _decile_histogram(distributed: bool) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """Relative-ingestion-position NTILE(10) histogram (F9/W1/A12;
+        `Dashboard_Historical_Final.py:428-528`).  Null-next rows (no later
+        ingestion) are excluded — their relative position is undefined and
+        NULL-ordering differs between engines.
+
+        ``distributed`` (``ri_decile_histogram``): the *distributed* NTILE
+        (no single-partition stage — asserted in test_plans.py).  The
+        DISTINCT over rel rides the ranking's own range exchange
+        (``dedup=True`` + a not-yet-distinct rel) — one wide shuffle of
+        rel instead of two, plan-asserted.  Otherwise
+        (``ri_decile_histogram_window``): the plain global-window NTILE
+        over a distinct rel (one reducer — wins below the ~10M-row
+        crossover), held to the identical oracle so the driver verifies
+        both strategies stay bit-identical."""
+        rel = _decile_rel(spark, sf_dir, dedup=not distributed)
+        return hist_ops.decile_histogram(
+            rel, distributed=distributed, dedup=distributed
+        ).withColumnRenamed("count", "n_queries")
+
+    return build
+
+
+register(
     "ri_decile_histogram",
     oracle=_DECILE_ORACLE,
     tags=("reference", "historical", "ntile", "bench"),
-)
-def ri_decile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relative-ingestion-position NTILE(10) histogram (F9/W1/A12;
-    `Dashboard_Historical_Final.py:428-528`).  Null-next rows (no later
-    ingestion) are excluded — their relative position is undefined and
-    NULL-ordering differs between engines.  Runs the *distributed* NTILE
-    (no single-partition stage — asserted in test_plans.py); the window
-    twin below pins the small-data strategy under the same oracle.  The
-    DISTINCT over rel rides the ranking's own range exchange
-    (``dedup=True`` + a not-yet-distinct rel) — one wide shuffle of rel
-    instead of two, plan-asserted."""
-    rel = _decile_rel(spark, sf_dir, dedup=False)
-    return hist_ops.decile_histogram(rel, dedup=True).withColumnRenamed(
-        "count", "n_queries"
-    )
-
-
-@register(
+)(_decile_histogram(distributed=True))
+register(
     "ri_decile_histogram_window",
     priority=1,
     oracle=_DECILE_ORACLE,
     tags=("reference", "historical", "ntile"),
-)
-def ri_decile_histogram_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same histogram through the plain global-window NTILE (one reducer —
-    wins below the ~10M-row crossover), held to the identical oracle so the
-    driver verifies both strategies stay bit-identical.  (Formerly the
-    headline; the scale-safe distributed plan is benched now.)"""
-    rel = _decile_rel(spark, sf_dir)
-    return hist_ops.decile_histogram(rel, distributed=False).withColumnRenamed(
-        "count", "n_queries"
-    )
+)(_decile_histogram(distributed=False))
 
 
 @register(

@@ -6,6 +6,7 @@ mapping and its SQL twin have ONE definition each.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -140,12 +141,16 @@ def _output_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet, so reuse is semantics-preserving (the cache() the reference
     gets from DuckDB table materialization, SURVEY §4.1)."""
     key = (id(spark), sf_dir)
-    if key not in _OUTPUT_TABLE_CACHE:
+    memo = _OUTPUT_TABLE_CACHE.get(key)
+    # the memo lives as long as Spark's cache entry: after
+    # spark.catalog.clearCache() (or an unpersist) the frame's storage
+    # level reads NONE — ``is_cached`` does not reset — and a rebuild
+    # re-persists it
+    if memo is None or memo.storageLevel == StorageLevel.NONE:
         flat = events_as_flat(spark, sf_dir)
-        _OUTPUT_TABLE_CACHE[key] = iv_ops.output_table(
-            flat, iv_ops.ingestion_intervals(flat)
-        ).persist()
-    return _OUTPUT_TABLE_CACHE[key]
+        memo = iv_ops.output_table(flat, iv_ops.ingestion_intervals(flat)).persist()
+        _OUTPUT_TABLE_CACHE[key] = memo
+    return memo
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,11 @@ from data_engineering_project_utn_spark.plans.llm_shared import (
     _TOKS,
     _cm_bucket_sql,
 )
-from data_engineering_project_utn_spark.plans.registry import must_replace, register
+from data_engineering_project_utn_spark.plans.registry import (
+    Builder,
+    must_replace,
+    register,
+)
 from data_engineering_project_utn_spark.tables import load_table
 
 _EDIT_SIM = (
@@ -91,25 +95,51 @@ def llm_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+_MINHASH_NEARDUP_ORACLE = "WITH " + _MINHASH_CTES + """
+    SELECT doc_a, doc_b, jaccard FROM j WHERE jaccard > 0.5
+    """
+
+
+def _minhash_neardup(bucketed: bool) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """MinHash+LSH near-duplicate detection, exact-Jaccard verified.
+
+        shingle(5-gram) → 8-perm minhash → 4 bands → bucket self-join →
+        Jaccard > 0.5.  Only same-bucket docs are ever compared — the
+        shuffle key space is the band buckets, never all-pairs (see
+        llm/dedup.py).  ``max_bucket_size`` stays None: the EXACT pair set
+        this oracle models at every SF (the skew cap is opt-in; its oracle
+        twin is llm_minhash_capped).
+
+        ``bucketed`` (``llm_minhash_neardup_bucketed``, same oracle — a
+        physical layout choice must not move a value): read the AT-REST
+        doc_id-bucketed corpus (``_dedup_corpus_bucketed``).  The two
+        exact-Jaccard verify sides then read the bucketed table with NO
+        exchange (plan-asserted — only the candidate pair set
+        hash-exchanges on doc_a/doc_b, once each); the shingle columns
+        derive as a narrow projection over the bucketed scan
+        (clustering-preserving) and persist once.  This claws back the SMJ
+        pin's per-query cost while keeping the pin's scale guarantee:
+        nothing corpus-sized is ever broadcast OR re-shuffled."""
+        d = sh = None
+        if bucketed:
+            from data_engineering_project_utn_spark.persist import track_persist
+
+            bkt = _dedup_corpus_bucketed(spark, sf_dir)
+            sh = track_persist(dd.shingle_frame(bkt, "doc_id", "text", 5))
+        else:
+            d = parallelize_compute(load_table(spark, sf_dir, "documents"))
+        return dd.minhash_neardup(d, threshold=0.5, shingles=sh)
+
+    return build
+
+
+register(
     "llm_minhash_neardup",
     priority=0,
-    oracle="WITH " + _MINHASH_CTES + """
-    SELECT doc_a, doc_b, jaccard FROM j WHERE jaccard > 0.5
-    """,
+    oracle=_MINHASH_NEARDUP_ORACLE,
     tags=("llm", "dedup", "minhash", "bench"),
-)
-def llm_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-duplicate detection, exact-Jaccard verified.
-
-    shingle(5-gram) → 8-perm minhash → 4 bands → bucket self-join →
-    Jaccard > 0.5.  Only same-bucket docs are ever compared — the shuffle
-    key space is the band buckets, never all-pairs (see llm/dedup.py).
-    """
-    d = parallelize_compute(load_table(spark, sf_dir, "documents"))
-    # max_bucket_size=None pins the EXACT pair set this oracle models at
-    # every SF (the skew cap is opt-in; its oracle twin is llm_minhash_capped)
-    return dd.minhash_neardup(d, k=8, bands=4, n=5, threshold=0.5, max_bucket_size=None)
+)(_minhash_neardup(bucketed=False))
 
 
 def _dedup_corpus_bucketed(
@@ -135,7 +165,7 @@ def _dedup_corpus_bucketed(
     join clustering.
 
     Same build-once convention as the Q9 bucketed facts
-    (``plans/relational.py:_q9_bucketed_join``): tables are tagged by the
+    (``plans/relational.py:_q9_join``): tables are tagged by the
     sf_dir basename plus a filesystem fingerprint of the source parquet,
     so a regenerated sf_dir rebuilds even at unchanged cardinality."""
     import re
@@ -195,8 +225,8 @@ def _dedup_band_index_bucketed(
     * BATCH (``llm_incremental_dedup_at_rest``): the incoming side's
       bands sort-merge against the index — bucketing satisfies the join
       clustering, so the only exchange is the (batch-sized) probe side's.
-    * BOUNDED-BATCH / STREAMING (``llm.dedup.incremental_neardup_indexed``):
-      the batch's distinct band hashes push into the index scan as an IN
+    * BOUNDED-BATCH / STREAMING (``llm.dedup.incremental_neardup`` with
+      ``band_index``): the batch's distinct band hashes push into the index scan as an IN
       filter — the sort column's row-group stats skip everything but the
       matched buckets, so per-trigger scan cost tracks the MATCHES, not
       the corpus.
@@ -242,31 +272,11 @@ def _drop_stale_fingerprinted(spark: SparkSession, prefix: str, keep: str) -> No
             spark.sql(f"DROP TABLE IF EXISTS `{t}`")
 
 
-@register(
+register(
     "llm_minhash_neardup_bucketed",
-    oracle="WITH " + _MINHASH_CTES + """
-    SELECT doc_a, doc_b, jaccard FROM j WHERE jaccard > 0.5
-    """,
+    oracle=_MINHASH_NEARDUP_ORACLE,
     tags=("llm", "dedup", "minhash", "bucketed", "scale-twin"),
-)
-def llm_minhash_neardup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``llm_minhash_neardup`` over the AT-REST bucketed shingle corpus —
-    sharing the anchor's oracle verbatim (bucketing is a physical layout
-    choice and must not move a value).
-
-    Plan at any scale: the two exact-Jaccard verify sides read the
-    doc_id-bucketed table with NO exchange (plan-asserted — only the
-    candidate pair set hash-exchanges on doc_a/doc_b, once each); the
-    shingle columns derive as a narrow projection over the bucketed scan
-    (clustering-preserving) and persist once, exactly like the anchor.
-    This claws back the SMJ pin's per-query cost while keeping the pin's
-    scale guarantee: nothing corpus-sized is ever broadcast OR
-    re-shuffled."""
-    from data_engineering_project_utn_spark.persist import track_persist
-
-    bkt = _dedup_corpus_bucketed(spark, sf_dir)
-    sh = track_persist(dd.shingle_frame(bkt, "doc_id", "text", 5))
-    return dd.minhash_neardup(None, threshold=0.5, shingles=sh)
+)(_minhash_neardup(bucketed=True))
 
 
 @register(
@@ -531,42 +541,66 @@ def llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+def _incremental_dedup(verifier: str, at_rest: bool) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The production dedup shape: a new batch (every 3rd doc plays the
+        incoming crawl) checked against the already-ingested corpus via an
+        asymmetric band-bucket join — never a corpus×corpus self-join (see
+        ``llm.dedup.incremental_neardup``).  Same signature family as
+        llm_minhash_neardup; the oracle splits its band CTE into the same
+        incoming/existing sides.
+
+        ``verifier``: ``"jaccard"`` (``llm_incremental_dedup``, exact
+        Jaccard > 0.5) or ``"editdist"`` (``llm_incremental_editdist``,
+        VERDICT r11 #7 — the banded DP verifies batch×candidates only at
+        edit sim ≥ 0.97, the verify expression of
+        ``llm_editdist_neardup``).
+
+        ``at_rest`` (the ``_at_rest`` twins, VERDICT r12 #1, sharing the
+        anchors' oracles verbatim — a disk layout must not move a value):
+        probe the corpus's AT-REST band index instead of re-deriving and
+        re-shuffling the corpus band frame every run (and, in the
+        streaming shape, every TRIGGER).  The band frame lives
+        bucketed+sorted on (band_hash, band_idx)
+        (``_dedup_band_index_bucketed``), so the probe sort-merges with NO
+        exchange and NO sort on the corpus side — only the batch's own
+        bands shuffle — and verification reads the doc_id-bucketed corpus
+        exchange-free like ``llm_minhash_neardup_bucketed``
+        (plan-asserted in ``test_bucketed_join``).  The edit-distance arm
+        then needs no corpus shingles at all (bands from the index,
+        verification on TEXT), so its corpus-side per-run compute drops
+        to the bucketed text scan the banded DP reads anyway."""
+        corpus_bands = None
+        if at_rest:
+            # text sides from the doc_id-bucketed corpus, the corpus band
+            # side from the band index; the doc_id split pushes into both
+            # bucketed scans as a data filter, which keeps their clustering
+            d = _dedup_corpus_bucketed(spark, sf_dir)
+            corpus_bands = _dedup_band_index_bucketed(spark, sf_dir).filter(
+                F.col("doc_id") % 3 != 0
+            )
+        else:
+            d = parallelize_compute(load_table(spark, sf_dir, "documents"))
+        incoming = d.filter(F.col("doc_id") % 3 == 0)
+        corpus = d.filter(F.col("doc_id") % 3 != 0)
+        return dd.incremental_neardup(
+            incoming, corpus, verifier=verifier, corpus_bands=corpus_bands
+        )
+
+    return build
+
+
+register(
     "llm_incremental_dedup",
     priority=1,
     oracle=_INCR_DEDUP_ORACLE,
     tags=("llm", "dedup", "incremental"),
-)
-def llm_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production dedup shape: a new batch (every 3rd doc plays the
-    incoming crawl) checked against the already-ingested corpus via an
-    asymmetric band-bucket join — never a corpus×corpus self-join (see
-    llm/dedup.py incremental_neardup).  Same signature family and exact-
-    Jaccard verification as llm_minhash_neardup; the oracle splits its
-    band CTE into the same incoming/existing sides."""
-    d = parallelize_compute(load_table(spark, sf_dir, "documents"))
-    incoming = d.filter(F.col("doc_id") % 3 == 0)
-    corpus = d.filter(F.col("doc_id") % 3 != 0)
-    return dd.incremental_neardup(incoming, corpus, threshold=0.5)
-
-
-@register(
+)(_incremental_dedup("jaccard", at_rest=False))
+register(
     "llm_incremental_editdist",
     oracle=_INCR_EDITDIST_ORACLE,
     tags=("llm", "dedup", "incremental", "editdist"),
-)
-def llm_incremental_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The edit-distance arm of incremental dedup (VERDICT r11 #7): a new
-    batch (every 3rd doc plays the incoming crawl) Levenshtein-verified
-    against the already-ingested corpus — bands propose asymmetrically
-    against the corpus's at-rest band frame, the banded DP verifies
-    batch×candidates only (see ``llm.dedup.incremental_editdist_neardup``).
-    Same oracle split as ``llm_incremental_dedup``, same verify expression
-    as ``llm_editdist_neardup``."""
-    d = parallelize_compute(load_table(spark, sf_dir, "documents"))
-    incoming = d.filter(F.col("doc_id") % 3 == 0)
-    corpus = d.filter(F.col("doc_id") % 3 != 0)
-    return dd.incremental_editdist_neardup(incoming, corpus, threshold=0.97)
+)(_incremental_dedup("editdist", at_rest=False))
 
 
 #: The incremental sorted-neighborhood oracle (insertion-rank semantics,
@@ -592,27 +626,51 @@ _INCR_SNM_ORACLE = "WITH " + _MINHASH_CTES + """,
     """
 
 
-@register(
+def _incremental_snm(at_rest: bool) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The INCREMENTAL arm of sorted-neighborhood blocking (VERDICT r12
+        #7) — the last blocking family to gain one: each incoming doc
+        (every 3rd doc plays the crawl batch) is Jaccard-verified against
+        the ``window`` corpus docs on each side of its would-be position
+        in the corpus's merge/purge fingerprint order.  The batch ranks
+        against the corpus's rank BLOCK STARTS (batch + N/w rows through
+        ``with_global_rank``), never a re-sort of the full union; both
+        probe joins key on the rank structure's _blk clustering (see
+        ``llm.dedup.incremental_snm_pairs``).  Candidate bound 2·window
+        per incoming doc — the no-skew guarantee that makes this the
+        ensemble's flood-proof arm.
+
+        ``at_rest`` (``llm_incremental_snm_at_rest``, same oracle): probe
+        the corpus's AT-REST rank structure.  The rank index is
+        _blk-bucketed (both probe joins exchange-free on the corpus side),
+        the block directory is its own N/w-row table (the insertion
+        ranking reads it directly instead of filter-scanning N index
+        rows), and verification shingles derive from the doc_id-bucketed
+        corpus text restricted to the matched neighbors.  With the r13
+        band index this completes the set: all three incremental blocking
+        arms run off at-rest structures with zero corpus-side
+        exchanges."""
+        index = {}
+        if at_rest:
+            d = _dedup_corpus_bucketed(spark, sf_dir)
+            idx, starts = _snm_rank_index_bucketed(spark, sf_dir, window=3, n=5)
+            index = {"corpus_ranked": idx, "block_starts": starts}
+        else:
+            d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        incoming = d.filter(F.col("doc_id") % 3 == 0)
+        corpus = d.filter(F.col("doc_id") % 3 != 0)
+        return dd.incremental_snm_pairs(
+            incoming, corpus, window=3, threshold=0.5, **index
+        )
+
+    return build
+
+
+register(
     "llm_incremental_snm",
     oracle=_INCR_SNM_ORACLE,
     tags=("llm", "dedup", "incremental", "snm"),
-)
-def llm_incremental_snm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The INCREMENTAL arm of sorted-neighborhood blocking (VERDICT r12
-    #7) — the last blocking family to gain one: each incoming doc (every
-    3rd doc plays the crawl batch) is Jaccard-verified against the
-    ``window`` corpus docs on each side of its would-be position in the
-    corpus's merge/purge fingerprint order.  The batch ranks against the
-    corpus's rank BLOCK STARTS (batch + N/w rows through
-    ``with_global_rank``), never a re-sort of the full union; both probe
-    joins key on the rank structure's _blk clustering (see
-    ``llm.dedup.incremental_snm_pairs``).  Candidate bound 2·window per
-    incoming doc — the no-skew guarantee that makes this the ensemble's
-    flood-proof arm."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    incoming = d.filter(F.col("doc_id") % 3 == 0)
-    corpus = d.filter(F.col("doc_id") % 3 != 0)
-    return dd.incremental_snm_pairs(incoming, corpus, window=3, threshold=0.5)
+)(_incremental_snm(at_rest=False))
 
 
 def _snm_rank_index_bucketed(
@@ -682,29 +740,11 @@ def _snm_rank_index_bucketed(
     return idx, dir_tbl
 
 
-@register(
+register(
     "llm_incremental_snm_at_rest",
     oracle=_INCR_SNM_ORACLE,
     tags=("llm", "dedup", "incremental", "snm", "bucketed", "scale-twin"),
-)
-def llm_incremental_snm_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``llm_incremental_snm`` probing the corpus's AT-REST rank
-    structure — sharing the anchor's oracle verbatim.  The rank index is
-    _blk-bucketed (both probe joins exchange-free on the corpus side),
-    the block directory is its own N/w-row table (the insertion ranking
-    reads it directly instead of filter-scanning N index rows), and
-    verification shingles derive from the doc_id-bucketed corpus text
-    restricted to the matched neighbors.  With the r13 band index this
-    completes the set: all three incremental blocking arms now run off
-    at-rest structures with zero corpus-side exchanges."""
-    bkt = _dedup_corpus_bucketed(spark, sf_dir)
-    idx, starts = _snm_rank_index_bucketed(spark, sf_dir, window=3, n=5)
-    incoming = bkt.filter(F.col("doc_id") % 3 == 0)
-    corpus = bkt.filter(F.col("doc_id") % 3 != 0)
-    return dd.incremental_snm_pairs(
-        incoming, corpus, window=3, threshold=0.5,
-        corpus_ranked=idx, block_starts=starts,
-    )
+)(_incremental_snm(at_rest=True))
 
 
 # Fresh-plus-delta oracle (VERDICT r13 #4): the SNM window runs twice —
@@ -769,64 +809,16 @@ def llm_incremental_snm_fresh_delta(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-def _incremental_at_rest_inputs(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(incoming, corpus, corpus_bands) for the at-rest incremental
-    twins: text sides from the doc_id-bucketed corpus (exchange-free
-    verify joins), the corpus band side from the at-rest band index
-    (exchange-free probe — bucketing IS the band-join clustering; the
-    doc_id split pushes into both bucketed scans as a data filter,
-    which preserves their clustering)."""
-    bkt = _dedup_corpus_bucketed(spark, sf_dir)
-    bidx = _dedup_band_index_bucketed(spark, sf_dir)
-    incoming = bkt.filter(F.col("doc_id") % 3 == 0)
-    corpus = bkt.filter(F.col("doc_id") % 3 != 0)
-    corpus_bands = bidx.filter(F.col("doc_id") % 3 != 0)
-    return incoming, corpus, corpus_bands
-
-
-@register(
+register(
     "llm_incremental_dedup_at_rest",
     oracle=_INCR_DEDUP_ORACLE,
     tags=("llm", "dedup", "incremental", "bucketed", "scale-twin"),
-)
-def llm_incremental_dedup_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``llm_incremental_dedup`` probing the corpus's AT-REST band index
-    (VERDICT r12 #1) — sharing the anchor's oracle verbatim (a disk
-    layout must not move a value).
-
-    The anchor's remaining 100 TB scale term was the corpus side of the
-    band probe: every run (and, in the streaming shape, every TRIGGER)
-    re-derived the corpus band frame and re-shuffled it into the join.
-    Here the band frame lives bucketed+sorted on (band_hash, band_idx)
-    (``_dedup_band_index_bucketed``), so the probe sort-merges with NO
-    exchange and NO sort on the corpus side — only the batch's own bands
-    shuffle — and the Jaccard verify reads shingles projected in-scan
-    from the doc_id-bucketed corpus, exchange-free like
-    ``llm_minhash_neardup_bucketed`` (plan-asserted for all of the
-    above in ``test_bucketed_join``)."""
-    incoming, corpus, corpus_bands = _incremental_at_rest_inputs(spark, sf_dir)
-    return dd.incremental_neardup(
-        incoming, corpus, threshold=0.5, corpus_bands=corpus_bands
-    )
-
-
-@register(
+)(_incremental_dedup("jaccard", at_rest=True))
+register(
     "llm_incremental_editdist_at_rest",
     oracle=_INCR_EDITDIST_ORACLE,
     tags=("llm", "dedup", "incremental", "editdist", "bucketed", "scale-twin"),
-)
-def llm_incremental_editdist_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``llm_incremental_editdist`` probing the at-rest band index —
-    same layout win as ``llm_incremental_dedup_at_rest`` plus one more:
-    the edit-distance arm needs no corpus shingles at all (bands from
-    the index, verification on TEXT), so the corpus-side per-run compute
-    drops to the bucketed text scan the banded DP reads anyway."""
-    incoming, corpus, corpus_bands = _incremental_at_rest_inputs(spark, sf_dir)
-    return dd.incremental_editdist_neardup(
-        incoming, corpus, threshold=0.97, corpus_bands=corpus_bands
-    )
+)(_incremental_dedup("editdist", at_rest=True))
 
 
 # Hot-band guard gates (VERDICT r13 #2).  The synthetic corpus has no
@@ -1446,29 +1438,42 @@ _PREFIX_JACCARD_ORACLE = f"""
     """
 
 
-@register(
+def _jaccard_prefix_join(positional: bool) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """EXACT thresholded Jaccard self-join via prefix filtering
+        (``llm/dedup.jaccard_prefix_join``, AllPairs/PPJoin family): every
+        doc pair with shingle-Jaccard ≥ 1/2, found by joining only the
+        rarity-ordered PREFIXES (first s − ⌈s/2⌉ + 1 shingles per doc —
+        the rarest-common-shingle lemma guarantees completeness), then
+        verified with exact integer intersection counts; the threshold
+        comparison is inter·2 ≥ union in BIGINT so no engine can disagree
+        on a boundary pair.  The exact complement to the MinHash gate:
+        same 25 driver pairs at sf0.01 but with PROOF of no false
+        negatives, at Σ_prefix df² pair cost instead of corpus².
+        Non-empty floor-asserted.
+
+        ``positional`` (``llm_jaccard_prefix_pos``, same oracle): the
+        PPJoin POSITIONAL filter — a prefix match at positions (pa, pb)
+        caps the achievable overlap at min(sza−pa, szb−pb) + 1, so
+        candidate pairs whose every match fails o·(tn+td) ≥ tn·(sza+szb)
+        are pruned BEFORE the verify join; the candidate set shrinks
+        (subset-tested) while the lemma keeps the RESULT identical."""
+        d = parallelize_compute(load_table(spark, sf_dir, "documents"))
+        return (
+            dd.jaccard_prefix_join(d, tn=1, td=2, positional=positional)
+            .orderBy(F.desc("jaccard"), "id_a", "id_b")
+            .limit(20)
+        )
+
+    return build
+
+
+register(
     "llm_jaccard_prefix_join",
     priority=2,
     oracle=_PREFIX_JACCARD_ORACLE,
     tags=("llm", "dedup", "jaccard"),
-)
-def llm_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT thresholded Jaccard self-join via prefix filtering
-    (``llm/dedup.jaccard_prefix_join``, AllPairs/PPJoin family): every
-    doc pair with shingle-Jaccard ≥ 1/2, found by joining only the
-    rarity-ordered PREFIXES (first s − ⌈s/2⌉ + 1 shingles per doc — the
-    rarest-common-shingle lemma guarantees completeness), then verified
-    with exact integer intersection counts; the threshold comparison is
-    inter·2 ≥ union in BIGINT so no engine can disagree on a boundary
-    pair.  The exact complement to the MinHash gate: same 25 driver
-    pairs at sf0.01 but with PROOF of no false negatives, at Σ_prefix
-    df² pair cost instead of corpus².  Non-empty floor-asserted."""
-    d = parallelize_compute(load_table(spark, sf_dir, "documents"))
-    return (
-        dd.jaccard_prefix_join(d, tn=1, td=2)
-        .orderBy(F.desc("jaccard"), "id_a", "id_b")
-        .limit(20)
-    )
+)(_jaccard_prefix_join(positional=False))
 
 
 @register(
@@ -1903,29 +1908,12 @@ def llm_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register(
     "llm_jaccard_prefix_pos",
     priority=2,
     oracle=_PREFIX_JACCARD_ORACLE,
     tags=("llm", "dedup", "jaccard"),
-)
-def llm_jaccard_prefix_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PPJoin POSITIONAL filter on the exact prefix join
-    (``jaccard_prefix_join(positional=True)``): a prefix match at
-    positions (pa, pb) caps the achievable overlap at
-    min(sza−pa, szb−pb) + 1, so candidate pairs whose every match fails
-    o·(tn+td) ≥ tn·(sza+szb) are pruned BEFORE the verify join — the
-    candidate set shrinks (subset-tested) while the rarest-common-token
-    lemma keeps the RESULT identical, which is why this gate shares
-    ``llm_jaccard_prefix_join``'s oracle verbatim (the
-    ``llm_ivf_bcast`` same-oracle-twin pattern: bit-exact parity of the
-    pruned plan, not mere plausibility)."""
-    d = parallelize_compute(load_table(spark, sf_dir, "documents"))
-    return (
-        dd.jaccard_prefix_join(d, tn=1, td=2, positional=True)
-        .orderBy(F.desc("jaccard"), "id_a", "id_b")
-        .limit(20)
-    )
+)(_jaccard_prefix_join(positional=True))
 
 
 _SEMDEDUP_ORACLE = """
@@ -1968,77 +1956,69 @@ _SEMDEDUP_ORACLE = """
     """
 
 
-@register(
+def _semdedup_pairs(bcast: bool) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """Semantic near-duplicate report (SemDeDup, Abbas et al. 2023):
+        the top-20 most-cosine-similar IN-CLUSTER embedding pairs
+        (``llm/dedup.semantic_neardup_pairs`` — IVF coarse cells as the
+        blocking structure, cosine scored only within a cell).  The
+        embedding-space member of the dedup family: catches paraphrase /
+        re-encoding duplicates that share no n-grams, next to MinHash
+        (lexical), SimHash (bitwise), spans (substring), and containment
+        (asymmetric).
+
+        The quantizer size is DERIVED from the corpus, k = 2^⌈log2 √N⌉
+        (``derive_ivf_k`` — the same value-gated sizing rule as
+        ``llm_ivf_auto``, recomputed by the oracle from its own COUNT), so
+        the pair space Σ|cell|² ≈ N²/k = N^1.5 shrinks as the corpus grows
+        cells — a FIXED quantizer would make this gate quadratic per
+        doubling (measured: 8 fixed cells cost 4×/2× rows; derived cells
+        re-bound it).  Per-vector norms are computed once on the persisted
+        cell frame, not per pair (identical fold → identical doubles).
+
+        ``bcast`` (``llm_semdedup_bcast``, VERDICT r08 #3, same oracle):
+        the quantizer stays a DATAFRAME end-to-end — filtered from the
+        corpus itself (``vec_id < k``), packed into one broadcast row
+        (``similarity.ivf_cells_from_df``) and never collected to the
+        driver.  At 100 TB the derived k exceeds any driver-collect or
+        plan-literal budget; this is the path you deploy there.  The only
+        driver traffic is the corpus COUNT that sizes k — one long.
+        Otherwise the k centroids collect as a literal list."""
+        from data_engineering_project_utn_spark.persist import track_persist
+
+        e = track_persist(parallelize_compute(load_table(spark, sf_dir, "embeddings")))
+        k = sim_derive_k(e)
+        cents = e.filter(F.col("vec_id") < k)
+        if bcast:
+            cents = cents.select(
+                F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
+            )
+        else:
+            cents = [
+                (int(r["vec_id"]), list(r["embedding"]))
+                for r in cents.select("vec_id", "embedding").collect()
+            ]
+        return (
+            dd.semantic_neardup_pairs(e, cents)
+            .orderBy(F.desc("cos_sim"), "id_a", "id_b")
+            .limit(20)
+        )
+
+    return build
+
+
+register(
     "llm_semdedup_pairs",
     priority=2,
     oracle=_SEMDEDUP_ORACLE,
     tags=("llm", "dedup", "similarity", "semantic"),
-)
-def llm_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic near-duplicate report (SemDeDup, Abbas et al. 2023):
-    the top-20 most-cosine-similar IN-CLUSTER embedding pairs
-    (``llm/dedup.semantic_neardup_pairs`` — IVF coarse cells as the
-    blocking structure, cosine scored only within a cell).  The
-    embedding-space member of the dedup family: catches paraphrase /
-    re-encoding duplicates that share no n-grams, next to MinHash
-    (lexical), SimHash (bitwise), spans (substring), and containment
-    (asymmetric).
-
-    The quantizer size is DERIVED from the corpus, k = 2^⌈log2 √N⌉
-    (``derive_ivf_k`` — the same value-gated sizing rule as
-    ``llm_ivf_auto``, recomputed by the oracle from its own COUNT), so
-    the pair space Σ|cell|² ≈ N²/k = N^1.5 shrinks as the corpus grows
-    cells — a FIXED quantizer would make this gate quadratic per
-    doubling (measured: 8 fixed cells cost 4×/2× rows; derived cells
-    re-bound it).  Per-vector norms are computed once on the persisted
-    cell frame, not per pair (identical fold → identical doubles)."""
-    from data_engineering_project_utn_spark.llm import dedup as dd2
-
-    e = parallelize_compute(load_table(spark, sf_dir, "embeddings"))
-    from data_engineering_project_utn_spark.persist import track_persist
-
-    e = track_persist(e)
-    k = sim_derive_k(e)
-    cents = [
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in e.filter(F.col("vec_id") < k).select("vec_id", "embedding").collect()
-    ]
-    return (
-        dd2.semantic_neardup_pairs(e, cents)
-        .orderBy(F.desc("cos_sim"), "id_a", "id_b")
-        .limit(20)
-    )
-
-
-@register(
+)(_semdedup_pairs(bcast=False))
+register(
     "llm_semdedup_bcast",
     priority=2,
     oracle=_SEMDEDUP_ORACLE,
     tags=("llm", "dedup", "similarity", "semantic", "scale-twin"),
-)
-def llm_semdedup_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Large-quantizer twin of ``llm_semdedup_pairs`` (VERDICT r08 #3),
-    held to the SAME oracle: the derived-√N quantizer stays a DATAFRAME
-    end-to-end — built by filtering the corpus itself (``vec_id < k``),
-    packed into one broadcast row (``similarity.ivf_cells_from_df``) and
-    never collected to the driver.  At 100 TB the derived k = 2^⌈log2 √N⌉
-    exceeds any driver-collect or plan-literal budget; this is the path
-    you deploy there, value-gated here against the literal-list twin's
-    oracle (bit-identical folds on both carriers).  The only driver
-    traffic is the corpus COUNT that sizes k — one long."""
-    from data_engineering_project_utn_spark.llm import dedup as dd2
-    from data_engineering_project_utn_spark.persist import track_persist
-
-    e = track_persist(parallelize_compute(load_table(spark, sf_dir, "embeddings")))
-    k = sim_derive_k(e)
-    cdf = e.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
-    )
-    return (
-        dd2.semantic_neardup_pairs(e, cdf)
-        .orderBy(F.desc("cos_sim"), "id_a", "id_b")
-        .limit(20)
-    )
+)(_semdedup_pairs(bcast=True))
 
 
 def sim_derive_k(e: DataFrame) -> int:
@@ -2441,9 +2421,9 @@ def llm_sorted_neighborhood_multipass(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-def _shared_dedup_sources(spark: SparkSession, sf_dir: str):
+def _shared_dedup_sources(spark: SparkSession, sf_dir: str, at_rest: bool = False):
     """The three blocking families over ONE cached base — the ensemble
-    composition the overlap/combined gates run.
+    composition the overlap/combined gates run.  Returns (mh, ed, sn).
 
     Separate per-family pipelines each re-tokenize and re-persist the
     corpus (3 shingle frames + 2 identical banded candidate sets alive in
@@ -2454,17 +2434,36 @@ def _shared_dedup_sources(spark: SparkSession, sf_dir: str):
     banded candidate set across MinHash-verify, edit-distance-verify and
     sorted-neighborhood restores the sum-of-parts cost: tokenization once,
     banding once, candidates persisted once.
+
+    ``at_rest``: the three families ride ONE doc_id-bucketed (doc_id,
+    text) scan (``_dedup_corpus_bucketed``) and ONE persisted
+    clustering-preserving shingle projection — zero corpus-side verify
+    exchanges (the edit-distance texts join merge-pinned on the bucketed
+    scan).
     """
     from data_engineering_project_utn_spark.persist import track_persist
 
-    d = parallelize_compute(load_table(spark, sf_dir, "documents"))
+    if at_rest:
+        d = _dedup_corpus_bucketed(spark, sf_dir)
+    else:
+        d = parallelize_compute(load_table(spark, sf_dir, "documents"))
     sh = track_persist(dd.shingle_frame(d, "doc_id", "text", 5, with_key=True))
     banded = track_persist(dd._banded(sh, 8, 4))
     cand = track_persist(dd._candidates_from_banded(banded, None))
     mh = dd.minhash_neardup(d, threshold=0.5, shingles=sh, candidates=cand)
-    ed = dd.editdist_neardup(d, threshold=0.97, candidates=cand)
+    if at_rest:
+        ta = d.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("_ta"))
+        tb = d.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("_tb"))
+        ed = dd._editdist_verified(
+            cand.join(ta.hint("merge"), "doc_a").join(tb.hint("merge"), "doc_b"),
+            ["doc_a", "doc_b"],
+            0.97,
+        )
+    else:
+        ed = dd.editdist_neardup(d, threshold=0.97, candidates=cand)
     sn = dd.sorted_neighborhood_pairs(d, window=3, n=5, threshold=0.5, shingles=sh)
     return mh, ed, sn
+
 
 #: Shared oracle tail: the three pair sources (MinHash > 0.5, edit-sim
 #: ≥ 0.97, sorted-neighborhood ≥ 0.5) as canonical (lo, hi) CTEs riding
@@ -2575,9 +2574,7 @@ def llm_dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "llm_combined_dedup_clusters",
-    oracle="WITH RECURSIVE " + _MINHASH_CTES + ",\n    " + _PAIR_SOURCES_CTES + """,
+_COMBINED_CLUSTERS_ORACLE = "WITH RECURSIVE " + _MINHASH_CTES + ",\n    " + _PAIR_SOURCES_CTES + """,
     up AS (SELECT DISTINCT doc_a, doc_b FROM allp),
     edges AS (SELECT doc_a AS src, doc_b AS dst FROM up
               UNION SELECT doc_b, doc_a FROM up),
@@ -2588,120 +2585,84 @@ def llm_dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT src AS doc_id, LEAST(src, MIN(dst)) AS keeper_doc
     FROM reach GROUP BY src ORDER BY doc_id
-    """,
-    tags=("llm", "dedup", "clusters", "report"),
-)
-def llm_combined_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ENSEMBLE dedup decision: connected components over the UNION of
-    all three blocking families' verified pairs — the manifest a
-    production pipeline actually deletes from, since each family alone
-    has a recall hole the others cover (pinned by
-    ``llm_dedup_source_overlap``).  Same label-propagation operator and
-    keeper convention as every cluster gate; the three pair sources ride
-    one cached base (``_shared_dedup_sources`` — CC itself measured FLAT
-    at 2 rounds / ~5 s at both sf2 and sf4, the scaling cost was the
-    per-family re-materialization).
     """
-    mh, ed, sn = _shared_dedup_sources(spark, sf_dir)
-    return _combined_clusters_from(mh, ed, sn)
 
 
-def _combined_clusters_from(
-    mh: DataFrame, ed: DataFrame, sn: DataFrame
-) -> DataFrame:
-    """Union the three families' pairs (snm canonicalized to (lo, hi)) and
-    run the standard keeper machinery."""
-    pairs = (
-        mh.select("doc_a", "doc_b")
-        .unionByName(ed.select("doc_a", "doc_b"))
-        .unionByName(
-            sn.select(
-                F.least("doc_a", "doc_b").alias("doc_a"),
-                F.greatest("doc_a", "doc_b").alias("doc_b"),
-            )
-        )
-        .distinct()
-    )
-    return dd.dedup_clusters(pairs).orderBy("doc_id")
+def _combined_dedup_clusters(at_rest: bool) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The ENSEMBLE dedup decision: connected components over the UNION
+        of all three blocking families' verified pairs — the manifest a
+        production pipeline actually deletes from, since each family
+        alone has a recall hole the others cover (pinned by
+        ``llm_dedup_source_overlap``).  Same label-propagation operator
+        and keeper convention as every cluster gate; the three pair
+        sources ride one cached base (``_shared_dedup_sources`` — CC
+        itself measured FLAT at 2 rounds / ~5 s at both sf2 and sf4, the
+        scaling cost was the per-family re-materialization).
+
+        ``at_rest`` (``llm_combined_dedup_clusters_at_rest``, same oracle
+        — layout must not move a value): the production nightly shape,
+        all three families read the ONE doc_id-bucketed corpus, so there
+        are zero corpus-side verify exchanges and the only shuffles are
+        the band groupBy, the bounded candidate set, and the snm range
+        exchange."""
+        mh, ed, sn = _shared_dedup_sources(spark, sf_dir, at_rest)
+        return _ensemble_labels_from(mh, ed, sn).orderBy("doc_id")
+
+    return build
 
 
-@register(
+register(
+    "llm_combined_dedup_clusters",
+    oracle=_COMBINED_CLUSTERS_ORACLE,
+    tags=("llm", "dedup", "clusters", "report"),
+)(_combined_dedup_clusters(at_rest=False))
+
+
+def _dedup_golden_record(at_rest: bool) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """SURVIVORSHIP — the merge/purge pipeline's third step
+        (Hernández–Stolfo: block → cluster → merge each cluster into one
+        surviving record): per ensemble near-dup cluster, the canonical
+        member (longest text, ties to min doc_id — a deterministic total
+        order) plus the cluster summary a manifest keeps when the rest is
+        deleted.  Completes the ER story the three blocking families +
+        label propagation start: the output IS the dedup'd corpus
+        directory entry.  All-BIGINT output (member count, char totals) —
+        no float aggregation.
+
+        ``at_rest`` (``llm_dedup_golden_record_at_rest``, VERDICT r12 #3,
+        same oracle): blocking, verification, clustering AND survivorship
+        all read the one doc_id-bucketed corpus — the lengths join inside
+        ``golden_record`` is satisfied from the bucketed scan too, so the
+        merge/purge endgame adds only keeper-keyed exchanges on top of the
+        ensemble's.  The production ending — writing the surviving corpus
+        back as a bucketed table — is ``llm.dedup.surviving_corpus`` +
+        ``write_bucketed_table`` (sink-tested; a sweep gate must not CTAS
+        per run)."""
+        mh, ed, sn = _shared_dedup_sources(spark, sf_dir, at_rest)
+        labels = _ensemble_labels_from(mh, ed, sn)
+        if at_rest:
+            d = _dedup_corpus_bucketed(spark, sf_dir)
+        else:
+            d = load_table(spark, sf_dir, "documents")
+        return dd.golden_record(labels, d).orderBy("keeper_doc")
+
+    return build
+
+
+register(
     "llm_dedup_golden_record",
     oracle=_GOLDEN_RECORD_ORACLE,
     tags=("llm", "dedup", "clusters", "report"),
-)
-def llm_dedup_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVIVORSHIP — the merge/purge pipeline's third step (Hernández–
-    Stolfo: block → cluster → merge each cluster into one surviving
-    record): per ensemble near-dup cluster, the canonical member (longest
-    text, ties to min doc_id — a deterministic total order) plus the
-    cluster summary a manifest keeps when the rest is deleted.  Completes
-    the ER story the three blocking families + label propagation start:
-    the output IS the dedup'd corpus directory entry.  All-BIGINT output
-    (member count, char totals) — no float aggregation.
-    """
-    mh, ed, sn = _shared_dedup_sources(spark, sf_dir)
-    labels = _ensemble_labels_from(mh, ed, sn)
-    d = load_table(spark, sf_dir, "documents")
-    return dd.golden_record(labels, d).orderBy("keeper_doc")
+)(_dedup_golden_record(at_rest=False))
 
 
-@register(
+register(
     "llm_combined_dedup_clusters_at_rest",
-    oracle="WITH RECURSIVE " + _MINHASH_CTES + ",\n    " + _PAIR_SOURCES_CTES + """,
-    up AS (SELECT DISTINCT doc_a, doc_b FROM allp),
-    edges AS (SELECT doc_a AS src, doc_b AS dst FROM up
-              UNION SELECT doc_b, doc_a FROM up),
-    reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    )
-    SELECT src AS doc_id, LEAST(src, MIN(dst)) AS keeper_doc
-    FROM reach GROUP BY src ORDER BY doc_id
-    """,
+    oracle=_COMBINED_CLUSTERS_ORACLE,
     tags=("llm", "dedup", "clusters", "bucketed", "scale-twin"),
-)
-def llm_combined_dedup_clusters_at_rest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The ensemble dedup decision over the AT-REST bucketed corpus —
-    the production nightly shape: ALL THREE blocking families (MinHash
-    verify, edit-distance verify, sorted-neighborhood) read the ONE
-    doc_id-bucketed (doc_id, text) table (``_dedup_corpus_bucketed``);
-    shingles/fingerprints derive as ONE persisted clustering-preserving
-    projection, so there are zero corpus-side verify exchanges
-    (bucketing satisfies every id-keyed join from disk) and the only
-    shuffles are the band groupBy, the bounded candidate set, and the
-    snm range exchange.  Same oracle as ``llm_combined_dedup_clusters``
-    verbatim — layout must not move a value."""
-    _bkt, mh, ed, sn = _shared_dedup_sources_at_rest(spark, sf_dir)
-    return _combined_clusters_from(mh, ed, sn)
-
-
-def _shared_dedup_sources_at_rest(spark: SparkSession, sf_dir: str):
-    """``_shared_dedup_sources`` over the AT-REST bucketed corpus: the
-    three blocking families ride ONE doc_id-bucketed (doc_id, text)
-    scan and ONE persisted clustering-preserving shingle projection —
-    zero corpus-side verify exchanges.  Returns (bkt, mh, ed, sn)."""
-    from data_engineering_project_utn_spark.persist import track_persist
-
-    bkt = _dedup_corpus_bucketed(spark, sf_dir)
-    sh = track_persist(dd.shingle_frame(bkt, "doc_id", "text", 5, with_key=True))
-    banded = track_persist(dd._banded(sh, 8, 4))
-    cand = track_persist(dd._candidates_from_banded(banded, None))
-    mh = dd.minhash_neardup(None, threshold=0.5, shingles=sh, candidates=cand)
-    ta = bkt.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("_ta"))
-    tb = bkt.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("_tb"))
-    ed = dd._editdist_verified(
-        cand.join(ta.hint("merge"), "doc_a").join(tb.hint("merge"), "doc_b"),
-        ["doc_a", "doc_b"],
-        0.97,
-    )
-    sn = dd.sorted_neighborhood_pairs(
-        None, window=3, n=5, threshold=0.5, shingles=sh
-    )
-    return bkt, mh, ed, sn
+)(_combined_dedup_clusters(at_rest=True))
 
 
 def _ensemble_labels_from(mh: DataFrame, ed: DataFrame, sn: DataFrame) -> DataFrame:
@@ -2720,21 +2681,8 @@ def _ensemble_labels_from(mh: DataFrame, ed: DataFrame, sn: DataFrame) -> DataFr
     )
 
 
-@register(
+register(
     "llm_dedup_golden_record_at_rest",
     oracle=_GOLDEN_RECORD_ORACLE,
     tags=("llm", "dedup", "clusters", "bucketed", "scale-twin"),
-)
-def llm_dedup_golden_record_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``llm_dedup_golden_record`` composed onto the at-rest layout
-    (VERDICT r12 #3): blocking, verification, clustering AND survivorship
-    all read the one doc_id-bucketed corpus — the lengths join inside
-    ``golden_record`` is satisfied from the bucketed scan too, so the
-    merge/purge endgame adds only keeper-keyed exchanges on top of the
-    ensemble's.  Shares the anchor's oracle verbatim.  The production
-    ending — writing the surviving corpus back as a bucketed table — is
-    ``llm.dedup.surviving_corpus`` + ``write_bucketed_table``
-    (sink-tested; a sweep gate must not CTAS per run)."""
-    bkt, mh, ed, sn = _shared_dedup_sources_at_rest(spark, sf_dir)
-    labels = _ensemble_labels_from(mh, ed, sn)
-    return dd.golden_record(labels, bkt).orderBy("keeper_doc")
+)(_dedup_golden_record(at_rest=True))

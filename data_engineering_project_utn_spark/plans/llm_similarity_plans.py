@@ -10,7 +10,7 @@ from data_engineering_project_utn_spark.llm import dedup as dd
 from data_engineering_project_utn_spark.llm import similarity as sim
 from data_engineering_project_utn_spark.llm.compute import parallelize_compute
 from data_engineering_project_utn_spark.plans.llm_shared import _dot
-from data_engineering_project_utn_spark.plans.registry import register
+from data_engineering_project_utn_spark.plans.registry import Builder, register
 from data_engineering_project_utn_spark.tables import load_table
 
 _IVF_ANN_ORACLE = f"""
@@ -42,51 +42,48 @@ _IVF_ANN_ORACLE = f"""
     """
 
 
-@register(
+def _ivf_ann(bcast: bool) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """IVF ANN top-10 (nprobe=1): 8 coarse centroids (vec_id 0-7 as the
+        deterministic quantizer), exact cosine within the probed cell.  The
+        centroid collect is 8 rows — a model parameter, not data movement.
+
+        Cell assignment is a literal-centroid projection (no shuffle — see
+        llm/similarity.py:ivf_cells); ``bcast`` (``llm_ivf_bcast``) forces
+        the *broadcast-centroid* scoring path instead
+        (``max_literal_centroids=0`` — the packed-array BroadcastHashJoin
+        plan a 65k-centroid quantizer requires).  Both paths fold identical
+        doubles, so one oracle proves bit-exact parity of the large-k plan,
+        not merely plausibility."""
+        e = parallelize_compute(load_table(spark, sf_dir, "embeddings"))
+        cents = [
+            (int(r["vec_id"]), list(r["embedding"]))
+            for r in e.filter(F.col("vec_id") < 8)
+            .select("vec_id", "embedding")
+            .collect()
+        ]
+        q = e.filter(F.col("vec_id") == 0).select(
+            F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
+        )
+        return sim.knn_ivf(
+            e, q, cents, k=10, max_literal_centroids=0 if bcast else None
+        )
+
+    return build
+
+
+register(
     "llm_ivf_ann",
     priority=0,
     oracle=_IVF_ANN_ORACLE,
     tags=("llm", "similarity", "ann", "ivf"),
-)
-def llm_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-10 (nprobe=1): 8 coarse centroids (vec_id 0-7 as the
-    deterministic quantizer), cell assignment as a literal-centroid
-    projection (no shuffle — see llm/similarity.py:ivf_cells), exact cosine
-    within the probed cell.  The centroid collect is 8 rows — a model
-    parameter, not data movement."""
-    e = parallelize_compute(load_table(spark, sf_dir, "embeddings"))
-    cents = [
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in e.filter(F.col("vec_id") < 8).select("vec_id", "embedding").collect()
-    ]
-    q = e.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    return sim.knn_ivf(e, q, cents, k=10)
-
-
-@register(
+)(_ivf_ann(bcast=False))
+register(
     "llm_ivf_bcast",
     priority=1,
     oracle=_IVF_ANN_ORACLE,
     tags=("llm", "similarity", "ann", "ivf", "broadcast"),
-)
-def llm_ivf_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """llm_ivf_ann through the *broadcast-centroid* scoring path
-    (``max_literal_centroids=0`` forces the packed-array BroadcastHashJoin
-    plan that a 65k-centroid quantizer requires — see
-    llm/similarity.py:ivf_cells).  Shares llm_ivf_ann's oracle verbatim:
-    both paths fold identical doubles, so the gate proves bit-exact parity
-    of the large-k plan, not merely plausibility."""
-    e = parallelize_compute(load_table(spark, sf_dir, "embeddings"))
-    cents = [
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in e.filter(F.col("vec_id") < 8).select("vec_id", "embedding").collect()
-    ]
-    q = e.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    return sim.knn_ivf(e, q, cents, k=10, max_literal_centroids=0)
+)(_ivf_ann(bcast=True))
 
 
 @register(
@@ -2441,147 +2438,139 @@ _IVFPQ_RESIDUAL_SQL = """
     """
 
 
-@register(
+def _ivfpq_residual_ann(bcast: bool) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The COMPLETE FAISS IndexIVFPQ query path, end to end:
+        coarse-probe the query's ``nprobe = 2`` nearest cells (the
+        ``ivf_probe_cells`` ranking — cosine desc, cid desc), score ONLY
+        those cells' vectors by residual ADC through the probed cells'
+        query tables (``similarity.pq_encode_adc_residual``), take the
+        top-10.  Composes the pieces the family gates individually:
+        multi-cell probing (``llm_ivf_nprobe``), residual encoding
+        (``llm_pq_recall_residual``), cell-restricted ADC
+        (``llm_ivfpq_ann``).  Spark filters on two literal cell ids while
+        the oracle re-derives them from its own ranking.
+
+        At rest this is THE billion-vector layout: cell-partitioned files
+        of m-byte residual codes; a query reads nprobe partitions' code
+        columns, nothing else — partition pruning does the candidate
+        selection.
+
+        The coarse quantizer's carrier is the strategy: by default the 8
+        centroids collect as a literal list, the probe list is folded
+        driver-side with the same left-fold/IEEE-sqrt doubles the plan
+        computes (the ``_ivf_scored`` literal-norm argument), and the
+        per-cell ADC tables are nested plan literals.  ``bcast``
+        (``llm_ivfpq_residual_bcast``, VERDICT r08 #7, same oracle): the
+        quantizer stays a DATAFRAME end to end — packed-broadcast
+        assignment, broadcast centroid-grid join for residuals, and the
+        per-(cell, code) ADC tables computed IN-PLAN and delivered by a
+        broadcast (cell, code) → dist lookup-join.  Under √N quantizer
+        sizing the literal tables grow with the corpus — this is the
+        layout that holds there; its plan SIZE is ncell-independent
+        (tested) while the literal carrier's is the pure scan you keep
+        below the threshold (plan-asserted).  Its driver traffic: the
+        query vector (one row), the 16 seed residuals (the codebook is a
+        model), and the 2-row probe-cell ranking — centroids never
+        collect."""
+        import math
+
+        from data_engineering_project_utn_spark.persist import track_persist
+
+        e = track_persist(parallelize_compute(load_table(spark, sf_dir, "embeddings")))
+        if bcast:
+            qv = list(
+                e.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
+            )
+            cents = e.filter(F.col("vec_id") < 8).select(
+                F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
+            )
+            qv_lit = F.array(*[F.lit(float(x)) for x in qv])
+            probed = [
+                int(r["cid"])
+                for r in cents.select("cid", sim.cosine(qv_lit, F.col("cv")).alias("c"))
+                .orderBy(F.desc("c"), F.desc("cid"))
+                .limit(2)
+                .collect()
+            ]
+            # the codebook is a model: 16 seed residuals (k·d ints),
+            # derived with the SAME broadcast machinery (ivf_cells_from_df
+            # + centroid grid join) and collected once — the centroid
+            # frame itself never collects
+            xq = F.transform(
+                F.col("embedding"),
+                lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("long"),
+            )
+            cgrid = cents.select(
+                F.col("cid").cast("int").alias("cid2"),
+                F.transform(
+                    F.col("cv"),
+                    lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("long"),
+                ).alias("cqv"),
+            )
+            seed_rows = (
+                sim.ivf_cells_from_df(
+                    e.filter((F.col("vec_id") >= 16) & (F.col("vec_id") < 32)), cents
+                )
+                .select("vec_id", "cell", xq.alias("_xq"))
+                .join(F.broadcast(cgrid), F.col("cell") == F.col("cid2"))
+                .select(
+                    "vec_id", F.zip_with("_xq", "cqv", lambda a, b: a - b).alias("rq")
+                )
+                .collect()
+            )
+            if len(seed_rows) != 16:
+                raise ValueError(f"seed ids 16..31 required; got {len(seed_rows)} rows")
+            res_cb = [
+                [int(v) for v in r["rq"]]
+                for r in sorted(seed_rows, key=lambda r: int(r["vec_id"]))
+            ]
+        else:
+            small = {
+                int(r["vec_id"]): list(r["embedding"])
+                for r in e.filter(F.col("vec_id") < 8)
+                .select("vec_id", "embedding")
+                .collect()
+            }
+            cents = [(j, small[j]) for j in range(8)]
+            qv = small[0]
+
+            def cos_to(cv: "list[float]") -> float:
+                d = sum(float(a) * float(b) for a, b in zip(qv, cv))
+                return d / (
+                    math.sqrt(sum(float(a) * float(a) for a in qv))
+                    * math.sqrt(sum(float(b) * float(b) for b in cv))
+                )
+
+            probed = [
+                cid
+                for cid, _ in sorted(cents, key=lambda c: (-cos_to(c[1]), -c[0]))[:2]
+            ]
+            res_cb = sim.residual_codebook(e, cents, lo=16, hi=32)
+        scored = sim.pq_encode_adc_residual(e, qv, cents, res_cb, m=2)
+        return (
+            scored.filter(F.col("cell").isin([int(c) for c in probed]))
+            .filter(F.col("vec_id") != 0)
+            .select("vec_id", "cell", "adc_dist")
+            .orderBy("adc_dist", "vec_id")
+            .limit(10)
+        )
+
+    return build
+
+
+register(
     "llm_ivfpq_residual_ann",
     priority=2,
     oracle=_IVFPQ_RESIDUAL_SQL,
     tags=("llm", "similarity", "ann", "ivf", "pq"),
-)
-def llm_ivfpq_residual_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPLETE FAISS IndexIVFPQ query path, end to end: coarse-probe
-    the query's ``nprobe = 2`` nearest cells (the ``ivf_probe_cells``
-    ranking — cosine desc, cid desc), score ONLY those cells' vectors by
-    residual ADC through the probed cells' query tables, take the
-    top-10.  Composes the pieces the family gates individually:
-    multi-cell probing (``llm_ivf_nprobe``), residual encoding
-    (``llm_pq_recall_residual``), cell-restricted ADC
-    (``llm_ivfpq_ann``).  The probe list is folded driver-side with the
-    same left-fold/IEEE-sqrt doubles the plan computes (the
-    ``_ivf_scored`` literal-norm argument), so Spark filters on two
-    literal cell ids while the oracle re-derives them from its own
-    ranking.
-
-    At rest this is THE billion-vector layout: cell-partitioned files
-    of m-byte residual codes; a query reads nprobe partitions' code
-    columns, nothing else — partition pruning does the candidate
-    selection."""
-    import math
-
-    from data_engineering_project_utn_spark.llm import similarity as sim2
-    from data_engineering_project_utn_spark.persist import track_persist
-
-    e = track_persist(parallelize_compute(load_table(spark, sf_dir, "embeddings")))
-    small = {
-        int(r["vec_id"]): list(r["embedding"])
-        for r in e.filter(F.col("vec_id") < 8).select("vec_id", "embedding").collect()
-    }
-    cents = [(j, small[j]) for j in range(8)]
-    qv = small[0]
-
-    def cos_to(cv: "list[float]") -> float:
-        d = sum(float(a) * float(b) for a, b in zip(qv, cv))
-        return d / (
-            math.sqrt(sum(float(a) * float(a) for a in qv))
-            * math.sqrt(sum(float(b) * float(b) for b in cv))
-        )
-
-    probed = [
-        cid
-        for cid, _ in sorted(cents, key=lambda c: (-cos_to(c[1]), -c[0]))[:2]
-    ]
-    res_cb = sim2.residual_codebook(e, cents, lo=16, hi=32)
-    scored = sim2.pq_encode_adc_residual(e, qv, cents, res_cb, m=2)
-    return (
-        scored.filter(F.col("cell").isin([int(c) for c in probed]))
-        .filter(F.col("vec_id") != 0)
-        .select("vec_id", "cell", "adc_dist")
-        .orderBy("adc_dist", "vec_id")
-        .limit(10)
-    )
-
-
-@register(
+)(_ivfpq_residual_ann(bcast=False))
+register(
     "llm_ivfpq_residual_bcast",
     priority=2,
     oracle=_IVFPQ_RESIDUAL_SQL,
     tags=("llm", "similarity", "ann", "ivf", "pq", "scale-twin"),
-)
-def llm_ivfpq_residual_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Derived-k twin of ``llm_ivfpq_residual_ann``, held to the SAME
-    oracle (VERDICT r08 #7): the coarse quantizer stays a DATAFRAME end
-    to end — packed-broadcast assignment, broadcast centroid-grid join
-    for residuals, and the per-(cell, code) ADC query tables computed
-    IN-PLAN on the centroid frame and delivered by a broadcast
-    (cell, code) → dist lookup-join (``pq_encode_adc_residual_bcast``)
-    instead of nested plan literals.  Under √N quantizer sizing the
-    literal tables grow with the corpus — this is the layout that holds
-    there: quantizer-indexed state is broadcast DATA, only the genuinely
-    model-size pieces (query vector, m·k codebook) remain literals; the
-    plan SIZE is ncell-independent (tested) while the literal twin's is
-    the pure scan you keep below the threshold (plan-asserted).
-
-    Driver traffic: the query vector (one row), the 16 seed residuals
-    (the codebook is a model), and the 2-row probe-cell ranking —
-    centroids never collect."""
-    from data_engineering_project_utn_spark.llm import similarity as sim2
-    from data_engineering_project_utn_spark.llm.similarity import cosine
-    from data_engineering_project_utn_spark.persist import track_persist
-
-    e = track_persist(parallelize_compute(load_table(spark, sf_dir, "embeddings")))
-    qv = list(
-        e.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    )
-    cdf = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
-    )
-    qv_lit = F.array(*[F.lit(float(x)) for x in qv])
-    probed = [
-        int(r["cid"])
-        for r in cdf.select("cid", cosine(qv_lit, F.col("cv")).alias("c"))
-        .orderBy(F.desc("c"), F.desc("cid"))
-        .limit(2)
-        .collect()
-    ]
-    # the codebook is a model: 16 seed residuals (k·d ints), derived
-    # with the SAME broadcast machinery (ivf_cells_from_df + centroid
-    # grid join) and collected once — the centroid frame itself never
-    # collects
-    xq = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("long"),
-    )
-    cgrid = cdf.select(
-        F.col("cid").cast("int").alias("cid2"),
-        F.transform(
-            F.col("cv"),
-            lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("long"),
-        ).alias("cqv"),
-    )
-    seed_rows = (
-        sim2.ivf_cells_from_df(
-            e.filter((F.col("vec_id") >= 16) & (F.col("vec_id") < 32)), cdf
-        )
-        .select("vec_id", "cell", xq.alias("_xq"))
-        .join(F.broadcast(cgrid), F.col("cell") == F.col("cid2"))
-        .select(
-            "vec_id", F.zip_with("_xq", "cqv", lambda a, b: a - b).alias("rq")
-        )
-        .collect()
-    )
-    if len(seed_rows) != 16:
-        raise ValueError(f"seed ids 16..31 required; got {len(seed_rows)} rows")
-    res_cb = [
-        [int(v) for v in r["rq"]]
-        for r in sorted(seed_rows, key=lambda r: int(r["vec_id"]))
-    ]
-    scored = sim2.pq_encode_adc_residual_bcast(e, qv, cdf, res_cb, m=2)
-    return (
-        scored.filter(F.col("cell").isin([int(c) for c in probed]))
-        .filter(F.col("vec_id") != 0)
-        .select("vec_id", "cell", "adc_dist")
-        .orderBy("adc_dist", "vec_id")
-        .limit(10)
-    )
+)(_ivfpq_residual_ann(bcast=True))
 
 
 def _ivf_2level_ann_oracle(nprobe: int = 2, k: int = 10) -> str:

@@ -22,7 +22,7 @@ from data_engineering_project_utn_spark.plans.llm_shared import (
     _cm_bucket_sql,
     _plog2_sql,
 )
-from data_engineering_project_utn_spark.plans.registry import register
+from data_engineering_project_utn_spark.plans.registry import Builder, register
 from data_engineering_project_utn_spark.tables import load_table
 
 @register(
@@ -1305,64 +1305,56 @@ _TRIANGLE_ORACLE = f"""
     """
 
 
-@register(
+def _graph_triangles(orientation: str) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """Triangle counts + exact-rational local clustering coefficients
+        over the rare-shingle document-overlap graph
+        (``llm/graph.triangle_counts``; edges = the same
+        ``rare_shingle_pairs`` blocking as the PageRank/sparse-cosine
+        gates, so the whole graph family shares one edge definition).
+        Triangles mark tight mutual near-dup cliques that pairwise
+        similarity scores can't see; cc stays an integer pair (2·tri,
+        deg·(deg−1)) so the gate is division-free.  Each triangle is found
+        exactly once as two wedge joins + one closing pair join — never an
+        all-pairs product; ≥ 1 triangle exists on the driver corpus at
+        every SF (any rare shingle with df ≥ 3 closes one), floor-asserted.
+
+        Registered once per enumeration ``orientation``, both held to the
+        same oracle: ``llm_graph_triangles`` orients by id,
+        ``llm_graph_triangles_degree`` by (degree, id) — the hub-skew fix
+        SCALE.md's argument names for 100 TB (VERDICT r07 #5): on a
+        power-law overlap graph the wedge fan-out follows LOW-degree
+        endpoints (max out-degree O(√|E|)) instead of whichever hub
+        happens to hold a low id; a planted-hub test asserts the
+        out-degree bound drops (tests/test_llm_ops.py::
+        TestTriangleOrientation)."""
+        from data_engineering_project_utn_spark.llm import graph as gr
+        from data_engineering_project_utn_spark.persist import track_persist
+
+        d = parallelize_compute(load_table(spark, sf_dir, "documents"))
+        edges = track_persist(tx.rare_shingle_pairs(d).select("id_a", "id_b"))
+        return (
+            gr.triangle_counts(edges, orientation=orientation)
+            .select(F.col("node").alias("doc_id"), "tri", "deg", "cc_num", "cc_den")
+            .orderBy(F.desc("tri"), F.desc("deg"), "doc_id")
+            .limit(20)
+        )
+
+    return build
+
+
+register(
     "llm_graph_triangles",
     priority=2,
     oracle=_TRIANGLE_ORACLE,
     tags=("llm", "graph"),
-)
-def llm_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle counts + exact-rational local clustering coefficients
-    over the rare-shingle document-overlap graph
-    (``llm/graph.triangle_counts``; edges = the same
-    ``rare_shingle_pairs`` blocking as the PageRank/sparse-cosine gates,
-    so the whole graph family shares one edge definition).  Triangles
-    mark tight mutual near-dup cliques that pairwise similarity scores
-    can't see; cc stays an integer pair (2·tri, deg·(deg−1)) so the gate
-    is division-free.  Canonical-orientation enumeration (x<y<z found
-    exactly once as two wedge joins + one closing pair join — never an
-    all-pairs product); ≥ 1 triangle exists on the driver corpus at
-    every SF (any rare shingle with df ≥ 3 closes one), floor-asserted."""
-    from data_engineering_project_utn_spark.llm import graph as gr
-    from data_engineering_project_utn_spark.persist import track_persist
-
-    d = parallelize_compute(load_table(spark, sf_dir, "documents"))
-    edges = track_persist(tx.rare_shingle_pairs(d).select("id_a", "id_b"))
-    return (
-        gr.triangle_counts(edges)
-        .select(F.col("node").alias("doc_id"), "tri", "deg", "cc_num", "cc_den")
-        .orderBy(F.desc("tri"), F.desc("deg"), "doc_id")
-        .limit(20)
-    )
-
-
-@register(
+)(_graph_triangles("id"))
+register(
     "llm_graph_triangles_degree",
     priority=2,
     oracle=_TRIANGLE_ORACLE,
     tags=("llm", "graph"),
-)
-def llm_graph_triangles_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree-ordered twin of ``llm_graph_triangles`` (VERDICT r07 #5):
-    the same triangle/cc output held to the SAME oracle, enumerated on
-    the (degree, id) orientation (``llm/graph.
-    triangle_counts_degree_ordered``) — the hub-skew fix SCALE.md's
-    argument names for 100 TB, now as code under a bit gate.  On a
-    power-law overlap graph the wedge fan-out follows LOW-degree
-    endpoints (max out-degree O(√|E|)) instead of whichever hub happens
-    to hold a low id; a planted-hub test asserts the out-degree bound
-    drops (tests/test_llm_ops.py::TestTriangleOrientation)."""
-    from data_engineering_project_utn_spark.llm import graph as gr
-    from data_engineering_project_utn_spark.persist import track_persist
-
-    d = parallelize_compute(load_table(spark, sf_dir, "documents"))
-    edges = track_persist(tx.rare_shingle_pairs(d).select("id_a", "id_b"))
-    return (
-        gr.triangle_counts_degree_ordered(edges)
-        .select(F.col("node").alias("doc_id"), "tri", "deg", "cc_num", "cc_den")
-        .orderBy(F.desc("tri"), F.desc("deg"), "doc_id")
-        .limit(20)
-    )
+)(_graph_triangles("degree"))
 
 
 @register(

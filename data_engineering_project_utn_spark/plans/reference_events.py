@@ -3,14 +3,12 @@ plans/llm.py): the historical (ri_*) and live (rl_*) families fingerprint
 independently; shared plumbing (events_as_flat, oracle CTE chain, the
 memoized output_table) lives in ``plans.events_shared``.
 
-Kept as the import point ``plans/__init__``/bench/tools use; the
-``_OUTPUT_TABLE_CACHE`` alias preserves the bench/probe cache-clear hook.
+Kept as the import point ``plans/__init__`` uses.
 """
 
 from data_engineering_project_utn_spark.plans import events_shared  # noqa: F401
 from data_engineering_project_utn_spark.plans import events_historical_plans  # noqa: F401
 from data_engineering_project_utn_spark.plans import events_live_plans  # noqa: F401
 from data_engineering_project_utn_spark.plans.events_shared import (  # noqa: F401
-    _OUTPUT_TABLE_CACHE,
     events_as_flat,
 )

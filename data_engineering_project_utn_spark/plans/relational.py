@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_engineering_project_utn_spark.functions.scalar import bucket_duration
-from data_engineering_project_utn_spark.plans.registry import register
+from data_engineering_project_utn_spark.plans.registry import Builder, register
 from data_engineering_project_utn_spark.tables import load_table
 
 
@@ -1481,77 +1481,27 @@ def rl_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "rl_product_type_profit",
-    priority=1,
-    oracle="""
-    SELECT n.n_name AS nation,
-           CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(14,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(5,2)))
-                    - CAST(p.p_retailprice AS DECIMAL(14,2))
-                      * CAST(l.l_quantity AS DECIMAL(14,2))) AS DOUBLE)
-               AS sum_profit
-    FROM lineitem l
-    JOIN part p ON p.p_partkey = l.l_partkey AND p.p_name LIKE '%ring%'
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    JOIN nation n ON n.n_nationkey = s.s_nationkey
-    JOIN orders o ON o.o_orderkey = l.l_orderkey
-    GROUP BY nation, o_year
-    ORDER BY nation, o_year DESC
-    """,
-    tags=("relational", "join", "agg"),
-)
-def rl_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9-shaped: product-type profit by nation and year — the
-    5-table star flake with a name-substring part filter.  Without a
-    partsupp table, unit cost is p_retailprice (profit = discounted
-    revenue − retailprice·qty — same expression tree as Q9's
-    ps_supplycost form, real columns).
+def _q9_join(
+    spark: SparkSession, sf_dir: str, bucketed: bool, buckets: int = 16
+) -> DataFrame:
+    """The Q9 join tree: lineitem ⋈ part(%ring%) ⋈ supplier ⋈ nation ⋈
+    orders.  The %ring% part filter broadcasts into the fact scan FIRST
+    (it cuts lineitem to the matching-part fraction before anything
+    else); supplier→nation broadcast; the one genuinely large join is
+    lineitem⋈orders on orderkey — a shuffle join on the fact's natural
+    key.
 
-    Plan for 100 TB: the %ring% part filter broadcasts into the fact
-    scan FIRST (it cuts lineitem to the matching-part fraction before
-    anything else); supplier→nation broadcast; the one genuinely large
-    join is lineitem⋈orders on orderkey — a shuffle join on the fact's
-    natural key, which bucketing by orderkey co-locates at rest.
-    Profit accumulates in exact DECIMAL; the (nation, year) group key
-    space is model-size so the final aggregation is map-side combined
-    down to ~nations×years rows."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("ring"))
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    o = load_table(spark, sf_dir, "orders")
-    profit = _dec("l_extendedprice") * (F.lit(1) - _dec("l_discount", 5, 2)) - _dec(
-        "p_retailprice"
-    ) * _dec("l_quantity")
-    return (
-        li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("long").alias("o_year"),
-        )
-        .agg(F.sum(profit).cast("double").alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
-    )
-
-
-def _q9_bucketed_join(spark: SparkSession, sf_dir: str, buckets: int = 16) -> DataFrame:
-    """The Q9 join tree over AT-REST BUCKETED facts: lineitem and orders
-    are persisted as catalog tables bucketed (and sorted) on their
-    orderkey with the same bucket count, so the one genuinely large
-    exchange in ``rl_product_type_profit`` — the lineitem⋈orders shuffle
-    — is satisfied from disk: NO Exchange above either scan
-    (plan-asserted in ``test_bucketed_join.test_q9_bucketed_fact_join_
-    has_no_shuffle``).  Dims still broadcast, and broadcast joins
-    preserve the streamed side's bucketing, so the part/supplier/nation
-    enrichment rides between the scan and the merge join without
-    re-clustering.  The merge hint pins the scale-representative
-    SortMergeJoin at test scale, where orders would otherwise fit under
-    the broadcast threshold.
+    ``bucketed``: read the facts AT REST — lineitem and orders persisted
+    as catalog tables bucketed (and sorted) on their orderkey with the
+    same bucket count, so that lineitem⋈orders shuffle is satisfied from
+    disk: NO Exchange above either scan (plan-asserted in
+    ``test_bucketed_join.test_q9_bucketed_fact_join_has_no_shuffle``).
+    Dims still broadcast, and broadcast joins preserve the streamed
+    side's bucketing, so the part/supplier/nation enrichment rides
+    between the scan and the merge join without re-clustering.  The
+    merge hint pins the scale-representative SortMergeJoin at test
+    scale, where orders would otherwise fit under the broadcast
+    threshold.
 
     The table write here is the DEMO of the layout; at warehouse scale
     the bucketed facts are maintained once by ingestion/compaction and
@@ -1586,6 +1536,9 @@ def _q9_bucketed_join(spark: SparkSession, sf_dir: str, buckets: int = 16) -> Da
     facts = {}
     for tbl, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
         src = load_table(spark, sf_dir, tbl)
+        if not bucketed:
+            facts[tbl] = src
+            continue
         fp = _fs_fingerprint(f"{sf_dir}/{tbl}.parquet")
         name = f"q9_{tbl}_bkt_{tag}_{fp}"
         if table_exists(spark, name):
@@ -1596,18 +1549,17 @@ def _q9_bucketed_join(spark: SparkSession, sf_dir: str, buckets: int = 16) -> Da
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     li, o = facts["lineitem"], facts["orders"]
+    if bucketed:
+        o = o.hint("merge")
     return (
         li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
         .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
         .join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .join(o.hint("merge"), li["l_orderkey"] == o["o_orderkey"])
+        .join(o, li["l_orderkey"] == o["o_orderkey"])
     )
 
 
-@register(
-    "rl_product_type_profit_bucketed",
-    priority=1,
-    oracle="""
+_Q9_ORACLE = """
     SELECT n.n_name AS nation,
            CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
            CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(14,2))
@@ -1622,32 +1574,56 @@ def _q9_bucketed_join(spark: SparkSession, sf_dir: str, buckets: int = 16) -> Da
     JOIN orders o ON o.o_orderkey = l.l_orderkey
     GROUP BY nation, o_year
     ORDER BY nation, o_year DESC
-    """,
-    tags=("relational", "join", "agg", "bucketed", "scale-twin"),
-)
-def rl_product_type_profit_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``rl_product_type_profit`` (TPC-H Q9 shape) over AT-REST BUCKETED
-    facts — the co-location demo VERDICT r10 #2 asked for, sharing the
-    anchor's oracle verbatim: bucketing is a physical layout choice and
-    must not move a single value.
+    """
 
-    Plan at any scale: two bucketed scans, three broadcast dims, one
-    exchange-free SortMergeJoin on orderkey, then ONE hash exchange for
-    the model-size (nation, year) aggregate — vs the anchor's plan where
-    the orderkey join re-shuffles the entire fact (1.47×/2× at sf2→sf4,
-    the repo's largest exchange; SCALE.md Q9 row)."""
-    profit = _dec("l_extendedprice") * (F.lit(1) - _dec("l_discount", 5, 2)) - _dec(
-        "p_retailprice"
-    ) * _dec("l_quantity")
-    return (
-        _q9_bucketed_join(spark, sf_dir)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("long").alias("o_year"),
+
+def _product_type_profit(bucketed: bool) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """TPC-H Q9-shaped: product-type profit by nation and year — the
+        5-table star flake with a name-substring part filter
+        (``_q9_join``).  Without a partsupp table, unit cost is
+        p_retailprice (profit = discounted revenue − retailprice·qty —
+        same expression tree as Q9's ps_supplycost form, real columns).
+        Profit accumulates in exact DECIMAL; the (nation, year) group key
+        space is model-size so the final aggregation is map-side combined
+        down to ~nations×years rows.
+
+        ``bucketed`` (``rl_product_type_profit_bucketed``, the co-location
+        demo VERDICT r10 #2 asked for, sharing the anchor's oracle
+        verbatim — bucketing is a physical layout choice and must not move
+        a single value): two bucketed scans, three broadcast dims, one
+        exchange-free SortMergeJoin on orderkey, then ONE hash exchange
+        for the model-size aggregate — vs the anchor's plan where the
+        orderkey join re-shuffles the entire fact (1.47×/2× at sf2→sf4,
+        the repo's largest exchange; SCALE.md Q9 row)."""
+        profit = _dec("l_extendedprice") * (
+            F.lit(1) - _dec("l_discount", 5, 2)
+        ) - _dec("p_retailprice") * _dec("l_quantity")
+        return (
+            _q9_join(spark, sf_dir, bucketed)
+            .groupBy(
+                F.col("n_name").alias("nation"),
+                F.year("o_orderdate").cast("long").alias("o_year"),
+            )
+            .agg(F.sum(profit).cast("double").alias("sum_profit"))
+            .orderBy("nation", F.desc("o_year"))
         )
-        .agg(F.sum(profit).cast("double").alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
-    )
+
+    return build
+
+
+register(
+    "rl_product_type_profit",
+    priority=1,
+    oracle=_Q9_ORACLE,
+    tags=("relational", "join", "agg"),
+)(_product_type_profit(bucketed=False))
+register(
+    "rl_product_type_profit_bucketed",
+    priority=1,
+    oracle=_Q9_ORACLE,
+    tags=("relational", "join", "agg", "bucketed", "scale-twin"),
+)(_product_type_profit(bucketed=True))
 
 
 @register(

@@ -868,20 +868,25 @@ def stateful_ema_tws(
 def incremental_dedup_batch_fn(
     corpus: DataFrame,
     sink,
-    threshold: float = 0.5,
+    threshold: float | None = None,
     band_index: DataFrame | None = None,
     corpus_at_rest: DataFrame | None = None,
+    verifier: str = "jaccard",
     **neardup_kwargs,
 ):
     """foreachBatch function for streaming incremental dedup: each incoming
     micro-batch of documents is near-dup-checked against the static corpus
-    (``llm.dedup.incremental_neardup``) and the flagged pairs handed to
+    (``llm.dedup.incremental_neardup`` with the given ``verifier`` —
+    ``"jaccard"`` or the character-level ``"editdist"``, each with its own
+    default threshold) and the flagged pairs handed to
     ``sink(pairs_df, batch_id)``.
 
     The asymmetric join is linear in the incoming batch and never compares
     incoming docs to each other, so the union of per-batch results equals
     the one-shot batch check over all batches at once — batching is purely
-    an execution schedule, not a semantic choice (tested).
+    an execution schedule, not a semantic choice (tested).  The batch
+    twins are the oracle-gated ``llm_incremental_dedup`` /
+    ``llm_incremental_editdist`` queries.
 
     Two corpus-side modes:
 
@@ -889,9 +894,8 @@ def incremental_dedup_batch_fn(
       the bucketed structures from
       ``plans.llm_dedup_plans._dedup_band_index_bucketed`` /
       ``_dedup_corpus_bucketed``): each trigger probes the index with
-      IN-pushdown (``llm.dedup.incremental_neardup_indexed``) — nothing
-      corpus-scale is scanned, shuffled, computed, or pinned; per-trigger
-      cost tracks the batch and its matches only.
+      IN-pushdown — nothing corpus-scale is scanned, shuffled, computed,
+      or pinned; per-trigger cost tracks the batch and its matches only.
     * otherwise: the corpus shingle frame is computed ONCE per stream and
       pinned; per-batch cost is batch-side work plus a cached-corpus
       band scan.  The pin is a LIFETIME boundary — call the returned
@@ -900,49 +904,20 @@ def incremental_dedup_batch_fn(
       many streams otherwise accumulates pinned corpus frames until
       ``release_all()``).
     """
-    from data_engineering_project_utn_spark.llm.compute import parallelize_compute
-    from data_engineering_project_utn_spark.llm.dedup import (
-        incremental_neardup,
-        incremental_neardup_indexed,
-        shingle_frame,
-    )
-    from data_engineering_project_utn_spark.persist import (
-        pin_for_correctness,
-        release_persisted,
-    )
+    from data_engineering_project_utn_spark.llm.dedup import incremental_neardup
+    from data_engineering_project_utn_spark.persist import release_persisted
 
-    indexed = band_index is not None and corpus_at_rest is not None
-    corpus_shingles = None
-    if not indexed:
-        # once per stream, exempt from the per-batch release below
-        # (lifetime boundary, not a correctness pin)
-        corpus_shingles = pin_for_correctness(
-            shingle_frame(
-                parallelize_compute(corpus),
-                neardup_kwargs.get("id_col", "doc_id"),
-                neardup_kwargs.get("text_col", "text"),
-                neardup_kwargs.get("n", 5),
-            )
-        )
+    mode = _lexical_probe_mode(corpus, band_index, corpus_at_rest, neardup_kwargs)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if indexed:
-            pairs = incremental_neardup_indexed(
-                batch_df,
-                band_index,
-                corpus_at_rest,
-                threshold=threshold,
-                **neardup_kwargs,
-            )
-        else:
-            pairs = incremental_neardup(
-                batch_df,
-                corpus,
-                threshold=threshold,
-                corpus_shingles=corpus_shingles,
-                broadcast_batch=True,
-                **neardup_kwargs,
-            )
+        pairs = incremental_neardup(
+            batch_df,
+            corpus,
+            threshold=threshold,
+            verifier=verifier,
+            **mode,
+            **neardup_kwargs,
+        )
         try:
             sink(pairs, batch_id)
         finally:
@@ -953,8 +928,39 @@ def incremental_dedup_batch_fn(
             # documented: the streaming job owns the session.
             release_persisted()
 
-    process.release_corpus_pins = _corpus_pin_releaser(corpus_shingles)
+    process.release_corpus_pins = _corpus_pin_releaser(mode.get("corpus_shingles"))
     return process
+
+
+def _lexical_probe_mode(
+    corpus: DataFrame,
+    band_index: DataFrame | None,
+    corpus_at_rest: DataFrame | None,
+    neardup_kwargs: dict,
+) -> dict:
+    """The corpus-side keyword arguments of ``incremental_neardup`` for a
+    stream: the at-rest IN-pushdown probe when ``band_index`` +
+    ``corpus_at_rest`` are given (pins NOTHING), else the corpus shingle
+    frame computed ONCE per stream — a lifetime pin, exempt from the
+    per-batch ``release_persisted`` — with the batch side broadcast
+    (foreachBatch micro-batches are bounded by the stream's trigger
+    contract, the safe side of the r12 build-side discipline; see
+    ``llm.dedup._incremental_candidates``)."""
+    if band_index is not None and corpus_at_rest is not None:
+        return {"band_index": band_index, "corpus_at_rest": corpus_at_rest}
+    from data_engineering_project_utn_spark.llm.compute import parallelize_compute
+    from data_engineering_project_utn_spark.llm.dedup import shingle_frame
+    from data_engineering_project_utn_spark.persist import pin_for_correctness
+
+    corpus_shingles = pin_for_correctness(
+        shingle_frame(
+            parallelize_compute(corpus),
+            neardup_kwargs.get("id_col", "doc_id"),
+            neardup_kwargs.get("text_col", "text"),
+            neardup_kwargs.get("n", 5),
+        )
+    )
+    return {"corpus_shingles": corpus_shingles, "broadcast_batch": True}
 
 
 def _corpus_pin_releaser(*frames):
@@ -973,81 +979,6 @@ def _corpus_pin_releaser(*frames):
         return freed
 
     return release
-
-
-def incremental_editdist_batch_fn(
-    corpus: DataFrame,
-    sink,
-    threshold: float = 0.97,
-    band_index: DataFrame | None = None,
-    corpus_at_rest: DataFrame | None = None,
-    **neardup_kwargs,
-):
-    """foreachBatch function for streaming EDIT-DISTANCE incremental dedup
-    — ``incremental_dedup_batch_fn``'s character-level twin: each incoming
-    micro-batch is Levenshtein-verified against the static corpus
-    (``llm.dedup.incremental_editdist_neardup`` — the batch's bands probe
-    the corpus band frame, the threshold-banded DP verifies
-    batch×candidates only) and the flagged pairs handed to
-    ``sink(pairs_df, batch_id)``.
-
-    Batch-independence by the same asymmetry argument: incoming docs are
-    never compared to each other, so the union of per-batch results
-    equals the one-shot check over all batches at once (tested).  The
-    batch twin is the oracle-gated ``llm_incremental_editdist`` query.
-    Same two corpus-side modes as ``incremental_dedup_batch_fn``:
-    at-rest index probe when ``band_index`` + ``corpus_at_rest`` are
-    given, else a once-per-stream shingle pin (freed via the returned
-    function's ``release_corpus_pins()``).
-    """
-    from data_engineering_project_utn_spark.llm.compute import parallelize_compute
-    from data_engineering_project_utn_spark.llm.dedup import (
-        incremental_editdist_neardup,
-        incremental_editdist_neardup_indexed,
-        shingle_frame,
-    )
-    from data_engineering_project_utn_spark.persist import (
-        pin_for_correctness,
-        release_persisted,
-    )
-
-    indexed = band_index is not None and corpus_at_rest is not None
-    corpus_shingles = None
-    if not indexed:
-        corpus_shingles = pin_for_correctness(
-            shingle_frame(
-                parallelize_compute(corpus),
-                neardup_kwargs.get("id_col", "doc_id"),
-                neardup_kwargs.get("text_col", "text"),
-                neardup_kwargs.get("n", 5),
-            )
-        )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if indexed:
-            pairs = incremental_editdist_neardup_indexed(
-                batch_df,
-                band_index,
-                corpus_at_rest,
-                threshold=threshold,
-                **neardup_kwargs,
-            )
-        else:
-            pairs = incremental_editdist_neardup(
-                batch_df,
-                corpus,
-                threshold=threshold,
-                corpus_shingles=corpus_shingles,
-                broadcast_batch=True,
-                **neardup_kwargs,
-            )
-        try:
-            sink(pairs, batch_id)
-        finally:
-            release_persisted()
-
-    process.release_corpus_pins = _corpus_pin_releaser(corpus_shingles)
-    return process
 
 
 def incremental_snm_batch_fn(
@@ -1172,7 +1103,7 @@ def make_ingest_batch_fn(
     appends are visible):
 
     1. near-dup probe via the IN-pushdown index probe
-       (``llm.dedup.incremental_neardup_indexed`` — bounded batch,
+       (``llm.dedup.incremental_neardup`` over ``band_index`` — bounded batch,
        nothing corpus-scale scanned or pinned);
     2. quality gate (``llm.text.quality_score`` ≥ ``min_quality``);
     3. survivors → ``accept_sink``, then APPENDED: (doc_id, text) to
@@ -1265,7 +1196,7 @@ def make_ingest_batch_fn(
         _banded,
         _free_local_checkpoint,
         hot_band_suspects,
-        incremental_neardup_indexed,
+        incremental_neardup,
         minhash_neardup,
         shingle_frame,
     )
@@ -1293,9 +1224,10 @@ def make_ingest_batch_fn(
         stats = (
             spark.table(band_stats_table) if hot_band_cap is not None else None
         )
-        pairs = incremental_neardup_indexed(
-            batch_df, bidx, bkt, threshold=threshold, k=k, bands=bands, n=n,
+        pairs = incremental_neardup(
+            batch_df, threshold=threshold, k=k, bands=bands, n=n,
             band_stats=stats, hot_band_cap=hot_band_cap,
+            band_index=bidx, corpus_at_rest=bkt,
         )
         if hot_band_cap is not None and suspect_sink is not None:
             suspect_sink(
@@ -1776,7 +1708,7 @@ def make_curation_batch_fn(
        corpus²; the corpus shingle frame pins ONCE per stream, so the
        per-trigger cost is batch-side work only), plus — when
        ``editdist_threshold`` is set — the EDIT-DISTANCE arm
-       (``incremental_editdist_neardup`` at its own, stricter threshold,
+       (``verifier="editdist"`` at its own, stricter threshold,
        sharing the same pinned corpus shingles: near-verbatim
        enforcement independent of the Jaccard knob),
     2. if the semantic arm is configured (``corpus_embeddings`` +
@@ -1809,37 +1741,18 @@ def make_curation_batch_fn(
     ``llm_curation_gate`` query.
     """
     from data_engineering_project_utn_spark.llm import text as tx
-    from data_engineering_project_utn_spark.llm.compute import parallelize_compute
     from data_engineering_project_utn_spark.llm.dedup import (
-        incremental_editdist_neardup,
-        incremental_editdist_neardup_indexed,
         incremental_neardup,
-        incremental_neardup_indexed,
         incremental_semantic_neardup,
-        shingle_frame,
     )
     from data_engineering_project_utn_spark.persist import (
-        pin_for_correctness,
         release_persisted,
         track_persist,
     )
 
-    indexed = band_index is not None and corpus_at_rest is not None
-    corpus_shingles = None
-    if not indexed:
-        # corpus shingles: once per stream (lifetime boundary, same
-        # contract as corpus_cells below) — shared by the MinHash and
-        # edit-distance arms.  The at-rest mode (band_index +
-        # corpus_at_rest given) probes the bucketed structures with
-        # IN-pushdown instead and pins NOTHING for the lexical arms.
-        corpus_shingles = pin_for_correctness(
-            shingle_frame(
-                parallelize_compute(corpus),
-                neardup_kwargs.get("id_col", "doc_id"),
-                neardup_kwargs.get("text_col", "text"),
-                neardup_kwargs.get("n", 5),
-            )
-        )
+    # one corpus-side mode (at-rest index probe, or a once-per-stream
+    # shingle pin) shared by the MinHash and edit-distance arms
+    mode = _lexical_probe_mode(corpus, band_index, corpus_at_rest, neardup_kwargs)
 
     corpus_cells = None
     if corpus_embeddings is not None and centroids is not None:
@@ -1863,26 +1776,9 @@ def make_curation_batch_fn(
         )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        # broadcast_batch: foreachBatch micro-batches are bounded by the
-        # stream's trigger contract — the safe side of the r12 build-side
-        # discipline (see llm.dedup._incremental_candidates)
-        if indexed:
-            pairs = incremental_neardup_indexed(
-                batch_df,
-                band_index,
-                corpus_at_rest,
-                threshold=threshold,
-                **neardup_kwargs,
-            )
-        else:
-            pairs = incremental_neardup(
-                batch_df,
-                corpus,
-                threshold=threshold,
-                corpus_shingles=corpus_shingles,
-                broadcast_batch=True,
-                **neardup_kwargs,
-            )
+        pairs = incremental_neardup(
+            batch_df, corpus, threshold=threshold, **mode, **neardup_kwargs
+        )
         flagged = pairs.select(F.col("doc_new").alias("doc_id")).distinct()
         if editdist_threshold is not None:
             # arm short-circuit (VERDICT r12 #6): a doc the cheap Jaccard
@@ -1896,23 +1792,14 @@ def make_curation_batch_fn(
             # edp(batch) − edp(residue) ⊆ jaccard-flagged by definition.
             flagged = track_persist(flagged)
             residue = batch_df.join(flagged, "doc_id", "left_anti")
-            if indexed:
-                edp = incremental_editdist_neardup_indexed(
-                    residue,
-                    band_index,
-                    corpus_at_rest,
-                    threshold=editdist_threshold,
-                    **neardup_kwargs,
-                )
-            else:
-                edp = incremental_editdist_neardup(
-                    residue,
-                    corpus,
-                    threshold=editdist_threshold,
-                    corpus_shingles=corpus_shingles,
-                    broadcast_batch=True,
-                    **neardup_kwargs,
-                )
+            edp = incremental_neardup(
+                residue,
+                corpus,
+                threshold=editdist_threshold,
+                verifier="editdist",
+                **mode,
+                **neardup_kwargs,
+            )
             flagged = flagged.unionByName(
                 edp.select(F.col("doc_new").alias("doc_id"))
             ).distinct()
@@ -1972,7 +1859,7 @@ def make_curation_batch_fn(
     # corpus shingle + cell pins when the stream stops, without the
     # release_all() sledgehammer
     process.release_corpus_pins = _corpus_pin_releaser(
-        corpus_shingles, corpus_cells
+        mode.get("corpus_shingles"), corpus_cells
     )
     return process
 

@@ -52,13 +52,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if isinstance(field.dataType, T.TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view for spark.sql queries."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -207,9 +207,9 @@ def test_q9_bucketed_fact_join_has_no_shuffle(spark, sf_dir):
     matches the 100 TB plan); the fully-composed gate keeps exactly ONE
     hash exchange — the model-size (nation, year) aggregate."""
     from data_engineering_project_utn_spark.plans import all_queries
-    from data_engineering_project_utn_spark.plans.relational import _q9_bucketed_join
+    from data_engineering_project_utn_spark.plans.relational import _q9_join
 
-    j = _q9_bucketed_join(spark, sf_dir)
+    j = _q9_join(spark, sf_dir, bucketed=True)
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan, plan
     assert "SortMergeJoin" in plan
@@ -299,12 +299,14 @@ def test_deduped_corpus_write_back_bucketed(spark, sf_dir):
     count = N − Σ n_members + #clusters."""
     from data_engineering_project_utn_spark.llm import dedup as dd
     from data_engineering_project_utn_spark.plans.llm_dedup_plans import (
+        _dedup_corpus_bucketed,
         _ensemble_labels_from,
-        _shared_dedup_sources_at_rest,
+        _shared_dedup_sources,
     )
     from data_engineering_project_utn_spark.sources.io import write_bucketed_table
 
-    bkt, mh, ed, sn = _shared_dedup_sources_at_rest(spark, sf_dir)
+    mh, ed, sn = _shared_dedup_sources(spark, sf_dir, at_rest=True)
+    bkt = _dedup_corpus_bucketed(spark, sf_dir)
     labels = _ensemble_labels_from(mh, ed, sn).localCheckpoint()
     golden = dd.golden_record(labels, bkt).localCheckpoint()
     surviving = dd.surviving_corpus(labels, golden, bkt)

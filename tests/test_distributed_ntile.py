@@ -290,10 +290,8 @@ class TestBoundedRank:
         arithmetic bucket split (one hash exchange carrying the DISTINCT),
         not a sampled rangepartitioning, and still no SinglePartition."""
         from data_engineering_project_utn_spark.plans import all_queries
-        from data_engineering_project_utn_spark.plans import reference_events as _re
 
         spark.catalog.clearCache()
-        _re._OUTPUT_TABLE_CACHE.clear()
         df = all_queries()["ri_decile_histogram"].build(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Exchange SinglePartition" not in plan

@@ -2257,8 +2257,8 @@ class TestTriangleOrientation:
         return spark.createDataFrame(pd.DataFrame(pairs, columns=["id_a", "id_b"]))
 
     def test_degree_ordered_equals_id_ordered_on_random_graph(self, spark):
-        """The triangle set is orientation-independent: the degree-ordered
-        twin must return bit-identical (node, tri, deg, cc) rows."""
+        """The triangle set is orientation-independent: the degree
+        orientation must return bit-identical (node, tri, deg, cc) rows."""
         import itertools
         import random
 
@@ -2274,7 +2274,9 @@ class TestTriangleOrientation:
         )
         df = self._pairs(spark, pairs)
         a = sorted(map(tuple, gr.triangle_counts(df).collect()))
-        b = sorted(map(tuple, gr.triangle_counts_degree_ordered(df).collect()))
+        b = sorted(
+            map(tuple, gr.triangle_counts(df, orientation="degree").collect())
+        )
         assert a == b
 
     def test_planted_hub_out_degree_bound_drops(self, spark):
@@ -3508,9 +3510,7 @@ class TestResidualBcastTwin:
         )
         bc = sorted(
             tuple(r)
-            for r in sim.pq_encode_adc_residual_bcast(
-                embeddings, qv, cdf, cb, m=2
-            ).collect()
+            for r in sim.pq_encode_adc_residual(embeddings, qv, cdf, cb, m=2).collect()
         )
         assert lit == bc and len(lit) > 0
 
@@ -3542,7 +3542,7 @@ class TestResidualBcastTwin:
             cdf = embeddings.filter(F.col("vec_id") < ncell).select(
                 F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
             )
-            df = sim.pq_encode_adc_residual_bcast(embeddings, qv, cdf, cb, m=2)
+            df = sim.pq_encode_adc_residual(embeddings, qv, cdf, cb, m=2)
             plans[ncell] = df._jdf.queryExecution().executedPlan().toString()
             assert "BroadcastHashJoin" in plans[ncell]
         # 24 extra centroids as literals would add ~15k chars (24 cells
@@ -3891,11 +3891,11 @@ class TestIndexedIncrementalProbe:
         }
         got = {
             (r["doc_new"], r["doc_existing"], round(r["jaccard"], 12))
-            for r in dd.incremental_neardup_indexed(
+            for r in dd.incremental_neardup(
                 incoming,
-                band_index.filter(F.col("doc_id") >= 50),
-                corpus_bkt.filter(F.col("doc_id") >= 50),
                 threshold=0.3,
+                band_index=band_index.filter(F.col("doc_id") >= 50),
+                corpus_at_rest=corpus_bkt.filter(F.col("doc_id") >= 50),
             ).collect()
         }
         assert got == want and got  # non-vacuous at every SF fixture
@@ -3908,17 +3908,18 @@ class TestIndexedIncrementalProbe:
         cols = ("doc_new", "doc_existing", "edit_distance")
         want = {
             tuple(r[c] for c in cols)
-            for r in dd.incremental_editdist_neardup(
-                incoming, corpus, threshold=0.9
+            for r in dd.incremental_neardup(
+                incoming, corpus, threshold=0.9, verifier="editdist"
             ).collect()
         }
         got = {
             tuple(r[c] for c in cols)
-            for r in dd.incremental_editdist_neardup_indexed(
+            for r in dd.incremental_neardup(
                 incoming,
-                band_index.filter(F.col("doc_id") >= 50),
-                corpus_bkt.filter(F.col("doc_id") >= 50),
                 threshold=0.9,
+                verifier="editdist",
+                band_index=band_index.filter(F.col("doc_id") >= 50),
+                corpus_at_rest=corpus_bkt.filter(F.col("doc_id") >= 50),
             ).collect()
         }
         assert got == want
@@ -3932,7 +3933,9 @@ class TestIndexedIncrementalProbe:
         band_index, corpus_bkt = at_rest
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         incoming = docs.filter(F.col("doc_id") < 50)
-        out = dd.incremental_neardup_indexed(incoming, band_index, corpus_bkt)
+        out = dd.incremental_neardup(
+            incoming, band_index=band_index, corpus_at_rest=corpus_bkt
+        )
         out.collect()  # the id pushdown exists only after candidate collect
         plan = out._jdf.queryExecution().executedPlan().toString()
         scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
@@ -3954,13 +3957,14 @@ class TestIndexedIncrementalProbe:
         stats = dd.band_bucket_sizes(band_index)
         uncapped = {
             (r["doc_new"], r["doc_existing"])
-            for r in dd.incremental_neardup_indexed(
-                incoming, band_index, corpus_bkt, threshold=0.3
+            for r in dd.incremental_neardup(
+                incoming, threshold=0.3,
+                band_index=band_index, corpus_at_rest=corpus_bkt,
             ).collect()
         }
-        out = dd.incremental_neardup_indexed(
-            incoming, band_index, corpus_bkt, threshold=0.3,
-            band_stats=stats, hot_band_cap=1,
+        out = dd.incremental_neardup(
+            incoming, threshold=0.3, band_stats=stats, hot_band_cap=1,
+            band_index=band_index, corpus_at_rest=corpus_bkt,
         )
         capped = {(r["doc_new"], r["doc_existing"]) for r in out.collect()}
         assert capped <= uncapped
@@ -3972,9 +3976,9 @@ class TestIndexedIncrementalProbe:
         # huge cap restores exactness through the same code path
         exact = {
             (r["doc_new"], r["doc_existing"])
-            for r in dd.incremental_neardup_indexed(
-                incoming, band_index, corpus_bkt, threshold=0.3,
-                band_stats=stats, hot_band_cap=10**9,
+            for r in dd.incremental_neardup(
+                incoming, threshold=0.3, band_stats=stats, hot_band_cap=10**9,
+                band_index=band_index, corpus_at_rest=corpus_bkt,
             ).collect()
         }
         assert exact == uncapped
@@ -3983,16 +3987,18 @@ class TestIndexedIncrementalProbe:
         band_index, corpus_bkt = at_rest
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         empty = docs.filter(F.lit(False))
-        assert dd.incremental_neardup_indexed(empty, band_index, corpus_bkt).count() == 0
+        assert dd.incremental_neardup(
+            empty, band_index=band_index, corpus_at_rest=corpus_bkt
+        ).count() == 0
         # a batch whose shingles match nothing: unique synthetic text
         import pandas as pd
 
         loner = spark.createDataFrame(
             pd.DataFrame({"doc_id": [999999], "text": ["zq xv qj wk vx kz jq " * 4]})
         )
-        assert (
-            dd.incremental_neardup_indexed(loner, band_index, corpus_bkt).count() == 0
-        )
+        assert dd.incremental_neardup(
+            loner, band_index=band_index, corpus_at_rest=corpus_bkt
+        ).count() == 0
 
     def test_empty_batch_schema_follows_id_types(self, spark):
         """ADVICE r13: the empty-batch frame's schema derives from the
@@ -4010,12 +4016,16 @@ class TestIndexedIncrementalProbe:
             dd.shingle_frame(corpus, "doc_id", "text", 5), 8, 4
         )
         empty = corpus.filter(F.lit(False))
-        out = dd.incremental_neardup_indexed(empty, band_index, corpus)
+        out = dd.incremental_neardup(
+            empty, band_index=band_index, corpus_at_rest=corpus
+        )
         assert out.schema["doc_new"].dataType.simpleString() == "string"
         assert out.schema["doc_existing"].dataType.simpleString() == "string"
         assert out.count() == 0
-        # and the edit-distance twin rides the same helper
-        out2 = dd.incremental_editdist_neardup_indexed(empty, band_index, corpus)
+        # and the edit-distance verifier rides the same helper
+        out2 = dd.incremental_neardup(
+            empty, verifier="editdist", band_index=band_index, corpus_at_rest=corpus
+        )
         assert out2.count() == 0
 
     def test_batch_factories_expose_release_handle(self, spark, sf_dir, at_rest):
@@ -4200,17 +4210,17 @@ class TestHotBandGuard:
         stats = dd.band_bucket_sizes(band_index)
         got = {
             (r["doc_new"], r["doc_existing"])
-            for r in dd.incremental_neardup_indexed(
-                batch, band_index, corpus,
-                threshold=0.5, band_stats=stats, hot_band_cap=8,
+            for r in dd.incremental_neardup(
+                batch, threshold=0.5, band_stats=stats, hot_band_cap=8,
+                band_index=band_index, corpus_at_rest=corpus,
             ).collect()
         }
         assert got == {(202, 1)}
-        # the edit-distance twin honors the same guard (each skipped
+        # the edit-distance verifier honors the same guard (each skipped
         # pair saves a banded DP, the priciest verify in the ensemble)
-        ed = dd.incremental_editdist_neardup_indexed(
-            batch, band_index, corpus,
-            threshold=0.9, band_stats=stats, hot_band_cap=8,
+        ed = dd.incremental_neardup(
+            batch, threshold=0.9, verifier="editdist", band_stats=stats,
+            hot_band_cap=8, band_index=band_index, corpus_at_rest=corpus,
         )
         assert not any(r["doc_new"] == 200 for r in ed.collect())
 

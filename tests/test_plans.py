@@ -52,6 +52,21 @@ def test_interval_core_never_nested_loop(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def test_output_table_memo_follows_spark_cache(spark, sf_dir):
+    """The memoized output_table (which ri_output_freshness returns) lives
+    as long as Spark's cache entry: after clearCache() the next build
+    re-persists it, with unchanged rows."""
+    from pyspark import StorageLevel
+
+    spark.catalog.clearCache()
+    first = QUERIES["ri_output_freshness"].build(spark, sf_dir)
+    rows = sorted(map(tuple, first.collect()))
+    spark.catalog.clearCache()
+    again = QUERIES["ri_output_freshness"].build(spark, sf_dir)
+    assert again.storageLevel != StorageLevel.NONE
+    assert sorted(map(tuple, again.collect())) == rows
+
+
 def test_star_join_broadcasts_dimensions(spark, sf_dir):
     """nation/region/supplier are broadcast-side; lineitem never shuffles
     through a nested loop."""

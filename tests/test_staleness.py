@@ -26,6 +26,22 @@ def test_impl_files_cover_builder_module_and_operator_closure():
     assert not any(f.endswith("__init__.py") for f in files)
 
 
+def test_every_builder_fingerprints_its_plan_module():
+    """A twin registered through a ``functools.partial`` (``__module__`` is
+    ``"functools"``) or a lambda from another module would fingerprint the
+    wrong files and never be marked stale: every registered builder's
+    closure must include its plan module."""
+    missing = [
+        name
+        for name, q in all_queries().items()
+        if not any(
+            f.startswith("data_engineering_project_utn_spark/plans/")
+            for f in impl_files(q.build)
+        )
+    ]
+    assert not missing, missing
+
+
 def test_fingerprint_is_deterministic():
     qs = all_queries()
     fn = qs["rl_pricing_summary"].build

@@ -586,9 +586,7 @@ class TestIncrementalDedupStream:
         union to the one-shot run."""
         import pandas as pd
 
-        from data_engineering_project_utn_spark.llm.dedup import (
-            incremental_editdist_neardup,
-        )
+        from data_engineering_project_utn_spark.llm.dedup import incremental_neardup
 
         base = "a long enough shared document body with many words " * 3
         corpus = spark.createDataFrame(
@@ -633,7 +631,9 @@ class TestIncrementalDedupStream:
         )
         q = (
             stream.writeStream.foreachBatch(
-                sp.incremental_editdist_batch_fn(corpus, sink, threshold=0.9)
+                sp.incremental_dedup_batch_fn(
+                    corpus, sink, threshold=0.9, verifier="editdist"
+                )
             )
             .option("checkpointLocation", str(tmp_path / "ed_ckpt"))
             .trigger(availableNow=True)
@@ -643,8 +643,11 @@ class TestIncrementalDedupStream:
 
         one_shot = {
             (r["doc_new"], r["doc_existing"], r["edit_distance"])
-            for r in incremental_editdist_neardup(
-                spark.createDataFrame(inc, doc_schema), corpus, threshold=0.9
+            for r in incremental_neardup(
+                spark.createDataFrame(inc, doc_schema),
+                corpus,
+                threshold=0.9,
+                verifier="editdist",
             ).collect()
         }
         assert set(collected) == one_shot
@@ -1359,10 +1362,7 @@ class TestCurationStream:
         wall-clock."""
         import pandas as pd
 
-        from data_engineering_project_utn_spark.llm.dedup import (
-            incremental_editdist_neardup,
-            incremental_neardup,
-        )
+        from data_engineering_project_utn_spark.llm.dedup import incremental_neardup
 
         base = "a long enough shared document body with many words " * 3
         corpus = spark.createDataFrame(
@@ -1383,8 +1383,12 @@ class TestCurationStream:
             "doc_id",
             "left_anti",
         )
-        full_dp = incremental_editdist_neardup(batch, corpus, threshold=0.9)
-        res_dp = incremental_editdist_neardup(residue, corpus, threshold=0.9)
+        full_dp = incremental_neardup(
+            batch, corpus, threshold=0.9, verifier="editdist"
+        )
+        res_dp = incremental_neardup(
+            residue, corpus, threshold=0.9, verifier="editdist"
+        )
         # the DP's input shrinks by exactly the Jaccard-flagged docs...
         assert res_dp.count() < full_dp.count()
         # ...and the composed flag set is identical either way

@@ -16,7 +16,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_engineering_project_utn_spark.plans import all_queries  # noqa: E402
-from data_engineering_project_utn_spark.plans import reference_events as _re  # noqa: E402
 from data_engineering_project_utn_spark.session import get_spark  # noqa: E402
 from tests.oracle_harness import compare  # noqa: E402
 
@@ -34,7 +33,6 @@ def main() -> int:
             print(f"{name}: NO-ORACLE (skipped)")
             continue
         spark.catalog.clearCache()
-        _re._OUTPUT_TABLE_CACHE.clear()
         r = compare(q.build(spark, sf_dir), q.oracle, sf_dir)
         ok = r["rows_match"] and r["cols_match"] and r["values_match"]
         if not ok:

