@@ -1,13 +1,14 @@
 """Registry mapping query name → (Spark builder, DuckDB oracle SQL).
 
 Single source of truth for the driver contract (``__spark_entry__.py``),
-the pytest oracle harness, and ``bench.py``.  Every registered query
-carries a DuckDB oracle (even the "hard" ones — SimHash via a hex-fold,
-dedup clustering via a recursive CTE, distributed/salted strategies held
-to their plain twins' oracles); ``oracle=None`` would fall back to the
-driver's weaker rows-only check, and nothing currently needs it.  Only the
-genuinely non-SQL operators (stateful streaming EMA state machines) stay
-outside the registry, verified by streaming parity tests instead.
+the pytest oracle harness, ``perfbench/`` and ``tools/run.py``.  Every
+registered query carries a DuckDB oracle (even the "hard" ones — SimHash
+via a hex-fold, dedup clustering via a recursive CTE, distributed/salted
+strategies held to their plain twins' oracles); ``oracle=None`` would fall
+back to the driver's weaker rows-only check, and nothing currently needs
+it.  Only the genuinely non-SQL operators (stateful streaming EMA state
+machines) stay outside the registry, verified by streaming parity tests
+instead.
 
 Determinism contract (how every query is written so the driver's
 order-insensitive value-hash matches bit-for-bit between Spark and DuckDB):

@@ -756,62 +756,6 @@ class TestIncrementalDedupStream:
         assert jsc.getPersistentRDDs().size() <= rdds_before
 
 
-class TestStatefulEMATws:
-    def test_transform_with_state_matches_batch_ema(self, spark, event_dir, tmp_path):
-        """The Spark 4 transformWithStateInPandas twin must produce the same
-        final per-key EMA as the batch fold (and therefore as the
-        applyInPandasWithState implementation, which is held to the same
-        batch parity below).
-
-        Environment gate: the TWS state-server protocol needs
-        google.protobuf (pyspark's transform_with_state_driver_worker
-        imports StateMessage_pb2), absent in this container and
-        uninstallable — same blocker class as the Kafka connector jar.
-        The processor logic itself is identical to make_ema_updater, which
-        IS exercised below."""
-        pytest.importorskip(
-            "google.protobuf",
-            reason="transformWithStateInPandas needs protobuf (state-server "
-            "protocol); absent in this environment",
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        stream = sp.file_stream(spark, event_dir, EVENT_SCHEMA, max_files_per_trigger=1)
-        ema_stream = sp.stateful_ema_tws(
-            stream,
-            key_col="instance_id",
-            value_col="execution_duration_ms",
-            order_col="arrival_timestamp",
-            alpha_short=0.02,
-            alpha_long=0.005,
-        )
-        _run_to_memory(ema_stream, "ema_tws", tmp_path, output_mode="update")
-        got = (
-            spark.table("ema_tws")
-            .toPandas()
-            .groupby("key")
-            .last()["ema_short"]
-            .to_dict()
-        )
-        batch = spark.read.schema(EVENT_SCHEMA).parquet(event_dir)
-        exp = {
-            str(r["instance_id"]): r["ema"]
-            for r in ema_ops.ema_by_key(
-                batch,
-                ["instance_id"],
-                "arrival_timestamp",
-                "execution_duration_ms",
-                alpha=0.02,
-            ).collect()
-        }
-        assert set(got) == set(exp)
-        for k in exp:
-            assert abs(got[k] - exp[k]) < 1e-9, k
-
-
 class TestStatefulEMA:
     def test_matches_batch_ema(self, spark, event_dir, tmp_path):
         stream = sp.file_stream(spark, event_dir, EVENT_SCHEMA, max_files_per_trigger=1)
@@ -1176,43 +1120,6 @@ class TestIncrementalHistoricalPipeline:
         got = pipe.read_output().filter(F.col("instance_id") == cold)
         assert got.exceptAll(exp).count() == 0
         assert exp.exceptAll(got).count() == 0
-
-    def test_wide_batch_prunes_via_join_not_isin(self, spark, tmp_path):
-        """Above max_isin_instances the recompute must prune the accumulator
-        with a broadcast semi join: correct output, and neither a driver id
-        list nor an O(touched)-element In expression in the plan (the
-        wide-backfill failure mode of the isin path)."""
-        # "wide" is relative to the threshold: forcing max_isin_instances
-        # below the fixture's instance count exercises exactly the code path
-        # a millions-of-instances backfill takes, at test scale
-        flat_pdf = flat_rows()
-        pipe = sp.IncrementalHistoricalPipeline(
-            spark,
-            accumulator_path=str(tmp_path / "acc"),
-            output_path=str(tmp_path / "out"),
-            max_isin_instances=1,
-        )
-        pipe.process_batch(spark.createDataFrame(flat_pdf), 0)
-
-        pruned = pipe.accumulated_for_batch(0)
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "LeftSemi" in plan
-        import re
-
-        in_lists = re.findall(r"IN \(([^)]*)\)", plan) + re.findall(
-            r"instance_id#\d+ IN ", plan
-        )
-        # no touched-id In expression anywhere in the wide-path plan
-        assert not any("," in s for s in in_lists), in_lists
-
-        got = pipe.read_output()
-        flat = spark.createDataFrame(flat_pdf)
-        exp = iv_ops.output_table(flat, iv_ops.ingestion_intervals(flat))
-        key = ["instance_id", "query_id", "arrival_timestamp", "last_write_table_insert"]
-        g = got.select(*key).toPandas().sort_values(key).reset_index(drop=True)
-        e = exp.select(*key).toPandas().sort_values(key).reset_index(drop=True)
-        assert len(g) == len(e) > 0
-        assert g.equals(e)
 
 
 class TestCurationStream:

@@ -74,15 +74,17 @@ def main(argv: list[str]) -> int:
     with open(os.path.join(REPO_ROOT, correctness_path), encoding="utf-8") as fh:
         rows = json.load(fh)
     if "queries_checked" in rows and "fails" in rows:
-        # A tools/sweep.py record: every oracle-bearing registry query that is
-        # not listed in ``fails`` passed the atomic full-registry sweep.
-        # Synthesize per-query green rows so the sweep attests the entries the
-        # driver's per-round budget did not re-check.
+        # A sweep record (``tools/run.py check --out``): every oracle-bearing
+        # registry query the sweep ran that is not listed in ``fails``
+        # passed it.  Records without ``queries`` come from full-registry
+        # sweeps.  Synthesize per-query green rows so the sweep attests the
+        # entries the driver's per-round budget did not re-check.
         fails = set(rows["fails"])
+        ran = rows.get("queries") or all_queries()
         rows = {
             name: {"err": None, "sweep_match": True}
             for name, q in all_queries().items()
-            if q.oracle is not None and name not in fails
+            if q.oracle is not None and name in ran and name not in fails
         }
 
     try:
