@@ -544,8 +544,8 @@ def sorted_neighborhood_pairs(
     ``window``·N — no bucket-skew term at all, the reason merge/purge
     remains the ER workhorse for adversarially skewed keys.
 
-    Scale: the global rank comes from ``with_global_rank`` (range
-    exchange + per-partition offsets, no SinglePartition stage); the
+    Scale: the global rank comes from ``with_global_rank`` (bucket
+    exchange + per-bucket offsets, no SinglePartition stage); the
     neighborhood join is an equi-join on rank-block ``rank DIV window``
     with each left row probing its own and the next block — every pair
     with gap ∈ [1, window] meets in exactly one block, so the join is
@@ -561,14 +561,14 @@ def sorted_neighborhood_pairs(
     LSH families, SNM pairs number ~window·N, so routing shsets through
     a ``_attach_pair_payload`` fold (decide-narrow-attach-once, guide
     §8) would cross ~7N payload rows (N id-join + 2·3N fold input)
-    versus the fused block join's 4N (range exchange + a-side ×2 +
+    versus the fused block join's 4N (bucket exchange + a-side ×2 +
     b-side) — measured noise-bound at sf0.1, structurally worse at
     scale.  The fused shape keeps the payload on the pairing join.
 
     ``shingles``: a caller-persisted ``shingle_frame(..., with_key=True)``
     — both merge/purge passes (and any co-running blocking family) then
     rank off the SAME cached (doc_id, _k, shset) child, so multipass is
-    two range exchanges over one tokenization instead of two full
+    two bucket exchanges over one tokenization instead of two full
     re-tokenizations (the ``reverse_key`` pass derives ``reverse(_k)``
     from the shared column)."""
     from data_engineering_project_utn_spark.operators.histogram import (
@@ -645,19 +645,18 @@ def snm_ranked_corpus(
     n: int = 5,
     window: int = 3,
     shingles: DataFrame | None = None,
-    pin: bool = False,
 ) -> DataFrame:
     """The corpus's sorted-neighborhood structure AT REST: (doc_id, _k,
     shset, _rank0, _blk) — global rank over the merge/purge fingerprint
     order plus the width-``window`` rank block, hash-clustered on _blk so
-    every incremental probe join is satisfied from the pinned clustering
-    (a streaming deployment computes this ONCE per stream; batch gates
-    once per run, same cost class as the anchor's own ranking).
+    every incremental probe join is satisfied from the persisted
+    clustering (a streaming deployment computes this ONCE per stream;
+    batch gates once per run, same cost class as the anchor's own
+    ranking).
 
-    ``pin=True`` registers the persist as a stream-LIFETIME boundary
-    (``pin_for_correctness``) instead of a per-query perf persist, so a
-    foreachBatch loop's per-trigger ``release_persisted()`` keeps it;
-    free it via the batch fn's ``release_corpus_pins()``."""
+    Returned unpersisted: the caller owns the persist — a tracked one for
+    a single query (``incremental_snm_pairs``), a plain one that outlives
+    every per-trigger release for a stream (``incremental_snm_batch_fn``)."""
     w = int(window)
     sh = (
         shingles
@@ -668,17 +667,14 @@ def snm_ranked_corpus(
     from data_engineering_project_utn_spark.operators.histogram import (
         with_global_rank,
     )
-    from data_engineering_project_utn_spark.persist import pin_for_correctness
-
     ranked = with_global_rank(
         sh.select("doc_id", "_k", "shset"), ["_k", "doc_id"]
     )
-    out = (
+    return (
         ranked.select("doc_id", "_k", "shset", "_rank0")
         .withColumn("_blk", F.expr(f"_rank0 DIV {w}"))
         .repartition(F.col("_blk"))
     )
-    return pin_for_correctness(out) if pin else track_persist(out)
 
 
 def incremental_snm_pairs(
@@ -706,7 +702,7 @@ def incremental_snm_pairs(
     BLOCKS, the full union is never re-sorted:
 
     1. the corpus rank structure (``snm_ranked_corpus``) exists at rest /
-       pinned once per stream;
+       persisted once per stream;
     2. the batch's insertion BLOCK comes from ranking (batch keys ∪ the
        N/w block-START keys) — batch + corpus/w rows, never N — with the
        same ``with_global_rank`` machinery (no SinglePartition): starts
@@ -720,7 +716,7 @@ def incremental_snm_pairs(
        by construction — one more _blk equi-join, ≤ 3w rows per batch
        doc, shsets riding along for in-join Jaccard verification.
 
-    Both probe joins key on the pinned clustering, so per-trigger
+    Both probe joins key on the persisted clustering, so per-trigger
     exchanges are batch-sized only.  Candidate bound: 2·window per
     incoming doc — merge/purge's hard no-skew guarantee, which is the
     reason this arm exists alongside LSH (a band-bucket flood cannot
@@ -733,7 +729,7 @@ def incremental_snm_pairs(
     cr = (
         corpus_ranked
         if corpus_ranked is not None
-        else snm_ranked_corpus(corpus, id_col, text_col, n, w)
+        else track_persist(snm_ranked_corpus(corpus, id_col, text_col, n, w))
     )
     bk = track_persist(
         shingle_frame(parallelize_compute(incoming), id_col, text_col, n,
@@ -780,7 +776,7 @@ def incremental_snm_pairs(
     else:
         # batch contract: an at-rest index is a static parquet estimate —
         # merge-pin it away from the broadcast build side (the bucketed
-        # sort on _blk makes the SMJ exchange- and sort-free); a pinned
+        # sort on _blk makes the SMJ exchange- and sort-free); a persisted
         # in-memory structure is stat-accurate and may choose freely
         cr_probe = cr.hint("merge") if "shset" not in cr.columns else cr
     lt = (F.col("c._k") < F.col("b._bk")) | (
@@ -813,7 +809,7 @@ def incremental_snm_pairs(
         )
     )
     if "shset" in cr.columns:
-        # pinned/in-memory rank structure: shsets ride the neighbor join
+        # persisted in-memory rank structure: shsets ride the neighbor join
         inter = F.size(F.array_intersect(F.col("_sa"), F.col("c.shset"))).cast(
             "double"
         )

@@ -12,7 +12,7 @@ single-shuffle ops:
   md5(doc_id) falls under its stratum's rate threshold.  Scan-speed, no
   shuffle, rates exact in expectation at any scale.
 * ``shard_assignment`` — md5-ordered global rank (the distributed
-  range-partition machinery from ``operators.histogram.with_global_rank`` —
+  bucket-exchange machinery from ``operators.histogram.with_global_rank`` —
   no single-partition stage) round-robined over n shards: shard sizes
   differ by at most 1 row, deterministically.
 * ``pack_sequences`` — per-stream running token total (window cumsum over
@@ -76,7 +76,7 @@ def shard_assignment(
     """Deterministic global shuffle + sharding: order the corpus by
     md5(doc_id) (a reproducible pseudorandom permutation), round-robin the
     global rank over ``n_shards``.  Shard sizes differ by ≤ 1 row.  The
-    global rank is distributed (range partition + broadcast offsets — see
+    global rank is distributed (bucket exchange + broadcast offsets — see
     with_global_rank); output keeps the hash so downstream stages can
     re-derive the order without re-ranking."""
     hashed = docs.withColumn("_shuffle_key", doc_hash(id_col))

@@ -1519,7 +1519,7 @@ def pca_cells_balanced(
     BENCH_ann_at_rest.json), so per-axis bin boundaries here are EXACT
     order statistics instead: boundary i = the projection value at global
     rank ⌊i·N/grid⌋ (0-based), computed by the distributed
-    ``with_global_rank`` (range-partition + model-size offset collect —
+    ``with_global_rank`` (bucket exchange + model-size offset collect —
     no single-partition stage), giving ~N/grid rows per stripe and
     ~N/grid² per cell REGARDLESS of the projection's distribution.
 

@@ -24,7 +24,7 @@ from collections.abc import Callable
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-from data_engineering_project_utn_spark.persist import pin_scope
+from data_engineering_project_utn_spark.persist import persist_scope
 
 
 class ResultCache:
@@ -121,13 +121,13 @@ class ResultCache:
                     return snapshot
                 gen_at_start = self._generation
             # build outside the registry lock: a slow rebuild must not block
-            # get() on other keys.  pin_scope: correctness pins the build
-            # registers (e.g. with_global_rank's range-partition pin under
-            # a decile/shard query) are freed as soon as the snapshot is
+            # get() on other keys.  persist_scope: the intermediates the
+            # build tracks (e.g. a global rank's bucketed frame under a
+            # decile/shard query) are freed as soon as the snapshot is
             # materialized — the snapshot's own blocks carry the answer, so
-            # a TTL loop rebuilding pin-bearing queries holds pinned
-            # storage for one build, not session lifetime.
-            with pin_scope():
+            # a TTL loop holds intermediate storage for one build, not
+            # session lifetime.
+            with persist_scope():
                 fresh = build().persist(StorageLevel.MEMORY_AND_DISK)
                 fresh.count()  # materialize once, at refresh time
             with self._lock:

@@ -8,21 +8,30 @@ into NTILE(10) deciles over a *global* ordering, counted per
 
 Scale note (SURVEY.md §7.2): ``F.ntile`` over a global ORDER BY is a
 single-partition window — the one-reducer bottleneck at 100 TB.
-``distributed_ntile`` reproduces NTILE *exactly* without it: range-partition
-on the sort key (equal keys co-locate; partition i's keys all precede
-partition i+1's), collect only the P per-partition counts to the driver,
-convert them to global rank offsets, then assign bins arithmetically from
-the closed-form NTILE definition.  Two jobs, no single-partition stage,
-bit-identical to the window version (asserted in tests).
+``distributed_ntile`` reproduces NTILE *exactly* without it: split the
+sort key into ordered buckets at fixed bounds (equal keys share a bucket;
+bucket i's keys all precede bucket i+1's), collect only the per-bucket
+counts to the driver, convert them to global rank offsets, then assign
+bins arithmetically from the closed-form NTILE definition.  No
+single-partition stage, bit-identical to the window version (asserted in
+tests).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_engineering_project_utn_spark.functions.scalar import epoch_ms
-from data_engineering_project_utn_spark.persist import pin_for_correctness, track_persist
+from data_engineering_project_utn_spark.persist import track_persist
+
+
+#: Rank buckets per output partition.  Over-bucketing smooths both the
+#: hash placement of bucket ids onto partitions and the sampling error of
+#: drawn bounds.
+_BUCKETS_PER_PARTITION = 4
+#: Sort keys sampled per bucket when the bounds are drawn from the data.
+_SAMPLE_PER_BUCKET = 20
 
 
 def with_global_rank(
@@ -30,133 +39,70 @@ def with_global_rank(
     order_cols: list[str],
     num_partitions: int | None = None,
     dedup: bool = False,
+    domain: "tuple[float, float] | None" = None,
 ) -> DataFrame:
-    """Attach a 0-based global rank over a total order, computed distributed:
-    range-partition on the sort key, collect only the P per-partition counts
-    (model-size, like IVF centroids — never rows), turn them into rank
-    offsets, broadcast them back.  No single-partition stage anywhere.
+    """Attach a 0-based global rank over a total order, computed distributed.
     Output columns: input + ``_rank0`` (bigint), ``_total`` (bigint).
+
+    Each row gets a bucket id that is monotone in its sort key, from
+    B = 4·P bucket bounds fixed before the plan runs.  The rows ride a
+    hash exchange on the bucket into P partitions; only the B per-bucket
+    counts are collected (model-size, like IVF centroids — never rows),
+    turned into rank offsets on the driver and broadcast back; a window
+    within each bucket finishes the order.  No single-partition stage
+    anywhere.  Because the bounds are literals in the plan, every
+    re-evaluation assigns every row to the same bucket, so the bucketed
+    frame is a releasable perf persist (``track_persist``): recomputing
+    it after a release cannot desynchronize the offsets.
+
+    The bounds come from one of two places:
+
+    * ``domain=(lo, hi)`` — the FIRST sort column has a known numeric
+      domain (relative positions, ratios): bucket =
+      clamp(floor((x − lo)/(hi − lo) · B)), no sampling job.  NULLs go
+      to bucket 0 and NaNs to the top bucket (ASC NULLS FIRST,
+      NaN-greatest); values outside [lo, hi] clamp into the edge buckets.
+      A value-concentrated domain hot-spots one bucket.
+    * otherwise one job draws a hash-ordered sample of at most 20·B sort
+      keys; B − 1 of them become literal struct bounds, and bucket =
+      Σ (struct(order_cols) >= bound_i).  Spark's struct comparison
+      orders keys exactly as ``ORDER BY … ASC`` does (NULLs first, NaN
+      greatest, −0.0 = 0.0), and the sum is monotone in the key for ANY
+      set of bounds: a poor sample can only unbalance the buckets, never
+      make a rank wrong.
 
     ``order_cols`` must define a total order (add tiebreakers) for the
     assignment to be deterministic.
 
-    ``dedup=True`` folds a full-row DISTINCT into the range exchange:
-    RangePartitioning on ``order_cols`` satisfies the deduplication's
+    ``dedup=True`` folds a full-row DISTINCT into the bucket exchange:
+    hash partitioning on the bucket satisfies the deduplication's
     clustering requirement whenever ``order_cols`` covers every column of
-    ``df`` (duplicate rows share the sort key, so they co-locate), so the
-    aggregate rides the exchange the ranking needs anyway — one shuffle
-    where a caller-side ``dropDuplicates()`` would pay two
-    (plan-asserted in test_plans.py).  Requires ``order_cols`` ⊇ the
-    frame's columns; asserted, because a partial cover would silently
-    leave cross-partition duplicates."""
+    ``df`` (duplicate rows share the sort key, so they share a bucket),
+    so the aggregate rides the exchange the ranking needs anyway — one
+    shuffle where a caller-side ``dropDuplicates()`` would pay two
+    (plan-asserted in tests).  Requires ``order_cols`` ⊇ the frame's
+    columns; asserted, because a partial cover would silently leave
+    cross-partition duplicates."""
     p = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    cols = [F.col(c) for c in order_cols]
     if dedup and not set(df.columns) <= set(order_cols):
         raise ValueError(
             "dedup=True needs order_cols to cover every column: "
             f"{sorted(set(df.columns) - set(order_cols))} uncovered"
         )
-    # persist is CORRECTNESS here, not caching: repartitionByRange samples
-    # its boundaries, and the offsets branch and the rank branch would
-    # otherwise each evaluate the exchange — with possibly different
-    # sampled boundaries, desynchronizing offsets from partition contents
-    # (caught by the sf0.1 oracle gate; ReuseExchange is not guaranteed
-    # under AQE).  One materialization pins one partitioning for both.
-    # pin, don't track: release_persisted() must never free this (recompute
-    # would resample range boundaries and desync the offsets — see persist.py)
-    ranged = df.repartitionByRange(p, *cols)
-    if dedup:
-        ranged = ranged.dropDuplicates()
-    ranged = pin_for_correctness(ranged.withColumn("_pid", F.spark_partition_id()))
-    # Per-partition counts → rank offsets + grand total.  The P counts are
-    # collected to the driver (model-size: one long per partition) and the
-    # prefix sum computed there — a declarative window over the count frame
-    # would plan an Exchange SinglePartition, and the benched headline
-    # asserts no such stage exists anywhere in its plan.
-    cnt_rows = ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt")).collect()
-    counts = {int(r["_pid"]): int(r["_cnt"]) for r in cnt_rows}
-    total = sum(counts.values())
-    acc = 0
-    rows = []
-    for pid in sorted(counts):
-        rows.append((pid, acc, total))
-        acc += counts[pid]
-    offsets = ranged.sparkSession.createDataFrame(
-        rows, schema="_pid int, _offset bigint, _total bigint"
-    )
-    w = Window.partitionBy("_pid").orderBy(*cols)
-    rank0 = (F.row_number().over(w) + F.col("_offset") - 1).cast("bigint")
-    return (
-        ranged.join(F.broadcast(offsets), "_pid")
-        .withColumn("_rank0", rank0)
-        .drop("_pid", "_offset")
-    )
-
-
-def with_global_rank_bounded(
-    df: DataFrame,
-    order_cols: list[str],
-    lo: float,
-    hi: float,
-    num_partitions: int | None = None,
-    dedup: bool = False,
-    buckets_per_partition: int = 4,
-) -> DataFrame:
-    """``with_global_rank`` for sort keys whose FIRST column has a known
-    bounded numeric domain [lo, hi] (relative positions, ratios,
-    percentages): the range split is ARITHMETIC — bucket =
-    clamp(floor((x − lo)/(hi − lo) · B)) — so there is no boundary-
-    sampling job (``repartitionByRange`` spends one extra pass over the
-    child to sample split points) and the partitioning is DETERMINISTIC,
-    which drops the correctness-pin a sampled exchange needs (re-
-    evaluation cannot resample different boundaries; the persist below
-    is a releasable optimization, not a pin).  Global order still holds:
-    every row with the same leading value shares a bucket, buckets are
-    ordered by construction, and the within-bucket window over the full
-    sort key finishes the total order.  NULLs sort first (bucket 0) and
-    NaNs last (top bucket), matching ASC NULLS FIRST / NaN-greatest.
-
-    B = ``buckets_per_partition``·P buckets ride a plain hash exchange
-    (bucket placement by hash — physical scrambling is irrelevant
-    because ranks come from per-BUCKET offsets, not partition ids;
-    over-bucketing smooths hash collisions).  Cost vs the sampled
-    version: one exchange + two jobs instead of one sampling pass + one
-    exchange + two jobs.  Skew: a value-concentrated domain hot-spots a
-    bucket — callers with unknown or adversarial distributions should
-    use ``with_global_rank``; this variant is the measured win for the
-    decile headline, whose domain is uniform-ish by construction.
-
-    ``dedup=True`` as in ``with_global_rank`` (requires ``order_cols``
-    to cover every input column; duplicates share the leading value, so
-    they share a bucket)."""
-    p = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if not lo < hi:
-        # an inverted domain would make the bucket expression DECREASING
-        # in x (globally scrambled ranks, no exception); lo == hi would
-        # NULL every finite bucket via divide-by-zero
-        raise ValueError(f"domain must satisfy lo < hi, got ({lo}, {hi})")
-    if dedup and not set(df.columns) <= set(order_cols):
-        raise ValueError(
-            "dedup=True needs order_cols to cover every column: "
-            f"{sorted(set(df.columns) - set(order_cols))} uncovered"
-        )
-    nb = p * buckets_per_partition
-    x = F.col(order_cols[0])
-    # branch order matters: NULL and NaN first (least/greatest SKIP nulls
-    # instead of propagating them, so a null reaching the clamp would land
-    # in the TOP bucket); the clamp runs on the double BEFORE the int cast
-    # so ±Infinity strays clamp instead of overflowing the ANSI cast
-    frac = (x - F.lit(float(lo))) / F.lit(float(hi - lo)) * nb
-    clamped = F.greatest(F.least(frac, F.lit(float(nb - 1))), F.lit(0.0))
-    bkt = (
-        F.when(x.isNull(), F.lit(0))
-        .when(F.isnan(x), F.lit(nb - 1))
-        .otherwise(F.floor(clamped).cast("int"))
-    )
+    nb = p * _BUCKETS_PER_PARTITION
+    if domain is None:
+        bkt = _sampled_bucket(df, order_cols, nb)
+    else:
+        bkt = _domain_bucket(F.col(order_cols[0]), *domain, nb)
     bucketed = df.withColumn("_bkt", bkt).repartition(p, F.col("_bkt"))
     if dedup:
         bucketed = bucketed.dropDuplicates()
     bucketed = track_persist(bucketed)
+    # Per-bucket counts → rank offsets + grand total.  The B counts are
+    # collected to the driver (model-size: one long per bucket) and the
+    # prefix sum computed there — a declarative window over the count frame
+    # would plan an Exchange SinglePartition, and the benched headline
+    # asserts no such stage exists anywhere in its plan.
     cnt_rows = bucketed.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt")).collect()
     counts = {int(r["_bkt"]): int(r["_cnt"]) for r in cnt_rows}
     total = sum(counts.values())
@@ -178,6 +124,53 @@ def with_global_rank_bounded(
     )
 
 
+def _domain_bucket(x: Column, lo: float, hi: float, nb: int) -> Column:
+    """The arithmetic bucket of a leading sort column with domain [lo, hi]."""
+    if not lo < hi:
+        # an inverted domain would make the bucket expression DECREASING
+        # in x (globally scrambled ranks, no exception); lo == hi would
+        # NULL every finite bucket via divide-by-zero
+        raise ValueError(f"domain must satisfy lo < hi, got ({lo}, {hi})")
+    # branch order matters: NULL and NaN first (least/greatest SKIP nulls
+    # instead of propagating them, so a null reaching the clamp would land
+    # in the TOP bucket); the clamp runs on the double BEFORE the int cast
+    # so ±Infinity strays clamp instead of overflowing the ANSI cast
+    frac = (x - F.lit(float(lo))) / F.lit(float(hi - lo)) * nb
+    clamped = F.greatest(F.least(frac, F.lit(float(nb - 1))), F.lit(0.0))
+    return (
+        F.when(x.isNull(), F.lit(0))
+        .when(F.isnan(x), F.lit(nb - 1))
+        .otherwise(F.floor(clamped).cast("int"))
+    )
+
+
+def _sampled_bucket(df: DataFrame, order_cols: list[str], nb: int) -> Column:
+    """The bucket of a sort key against ``nb − 1`` bounds drawn once, on
+    the driver, from a pseudo-random sample of the keys (one job).  The
+    sample is the keys of smallest hash, so it depends on the rows alone,
+    never on their partitioning or order: the same input always gets the
+    same bounds, and so the same plan."""
+    cols = [F.col(c) for c in order_cols]
+    sample = (
+        df.select(*cols)
+        .orderBy(F.xxhash64(*cols), *cols)
+        .limit(_SAMPLE_PER_BUCKET * nb)
+        .orderBy(*cols)
+        .collect()
+    )
+    picks = [sample[i * len(sample) // nb] for i in range(1, nb)] if sample else []
+    bounds = [b for i, b in enumerate(picks) if i == 0 or b != picks[i - 1]]
+    types = [df.schema[c].dataType for c in order_cols]
+    key = F.struct(*cols)
+    bkt = F.lit(0)
+    for b in bounds:
+        bound = F.struct(
+            *[F.lit(v).cast(t).alias(c) for v, t, c in zip(b, types, order_cols)]
+        )
+        bkt = bkt + (key >= bound).cast("int")
+    return bkt
+
+
 def distributed_ntile(
     df: DataFrame,
     order_cols: list[str],
@@ -190,17 +183,11 @@ def distributed_ntile(
     """Exact NTILE(n) over a global total order, computed distributed
     (see ``with_global_rank``): closed-form bin arithmetic over the global
     rank — N rows into n bins → the first r = N mod n bins hold q+1 rows
-    (q = N div n), the rest hold q rows.  ``dedup`` folds a full-row
-    DISTINCT into the range exchange (see ``with_global_rank``);
-    ``domain=(lo, hi)`` switches to the sampling-free arithmetic range
-    split of ``with_global_rank_bounded`` when the leading sort column's
-    domain is known."""
-    if domain is not None:
-        ranked = with_global_rank_bounded(
-            df, order_cols, domain[0], domain[1], num_partitions, dedup=dedup
-        )
-    else:
-        ranked = with_global_rank(df, order_cols, num_partitions, dedup=dedup)
+    (q = N div n), the rest hold q rows.  ``dedup`` and ``domain`` as in
+    ``with_global_rank``."""
+    ranked = with_global_rank(
+        df, order_cols, num_partitions, dedup=dedup, domain=domain
+    )
     rank0 = F.col("_rank0")
     q = F.floor(F.col("_total") / n_bins)
     r = F.col("_total") % n_bins
@@ -220,7 +207,7 @@ def relative_to_next(
 
     ``dedup=False`` defers the DISTINCT to a downstream operator that can
     satisfy it from an exchange it already pays for (the decile headline
-    folds it into ``distributed_ntile``'s range partitioning — one
+    folds it into ``distributed_ntile``'s bucket exchange — one
     shuffle instead of two)."""
     keys = analytical.select(F.col("table_id").alias("read_table_id")).distinct()
     num = epoch_ms(F.col("arrival_timestamp"), F.col("last_write_table_insert"))
@@ -238,17 +225,10 @@ def relative_to_next(
     return out.dropDuplicates() if dedup else out
 
 
-# Below this many rel rows the one-reducer window NTILE beats the two-job
-# distributed plan (fixed job overhead dominates); above it the single
-# sort task becomes the bottleneck.  Rough local[32] measurement — the
-# exact value matters little because both strategies are bit-identical.
-DECILE_AUTO_CROSSOVER_ROWS = 10_000_000
-
-
 def decile_histogram(
     rel: DataFrame,
     n_bins: int = 10,
-    distributed: bool | str = True,
+    distributed: bool = True,
     dedup: bool = False,
 ) -> DataFrame:
     """NTILE(n) over global ORDER BY relative_to_next → counts per
@@ -264,23 +244,12 @@ def decile_histogram(
     heavily reduced) rel rows, which wins below the ~10M-row crossover;
     both strategies are bit-identical (same oracle, asserted in tests), so
     small-data callers may pin it as a measured optimization.
-    ``distributed="auto"`` spends one count job on the (already reduced)
-    rel frame and picks the strategy by ``DECILE_AUTO_CROSSOVER_ROWS`` —
-    the stats-driven selection the reference's fixed SQL can't make.
 
     ``dedup=True`` takes a NOT-yet-distinct rel frame and satisfies the
-    DISTINCT from the strategy's own exchange (the range partitioning in
+    DISTINCT from the strategy's own exchange (the bucket exchange in
     the distributed plan) instead of a second upstream shuffle — pair
     with ``relative_to_next(..., dedup=False)``.
     """
-    if distributed == "auto":
-        # the count and the chosen strategy share one scan; released via
-        # persist.release_persisted() in long-lived sessions (safe: either
-        # strategy recomputes rel to the same rows)
-        if dedup:
-            rel, dedup = rel.dropDuplicates(), False
-        rel = track_persist(rel)
-        distributed = rel.count() >= DECILE_AUTO_CROSSOVER_ROWS
     if distributed:
         binned = distributed_ntile(
             rel,
@@ -316,21 +285,14 @@ def decile_by_percent_rank(
     Bucket = floor(percent_rank · n) + 1 clipped to n, with
     percent_rank = rank0 / (N − 1) over the global total order — the exact
     arithmetic SQL ``percent_rank()`` defines, but via ``with_global_rank``
-    (range partition + broadcast offsets) instead of an empty-partition
+    (bucket exchange + broadcast offsets) instead of an empty-partition
     window, which Spark would plan as Exchange SinglePartition.  Differs
     from NTILE at bucket boundaries when group sizes don't divide evenly —
     a different (equally standard) quantile convention, value-checked by
     its own percent_rank oracle (``ri_decile_percentrank``).  ``dedup``
-    and ``domain`` as in ``distributed_ntile``: fold the DISTINCT into
-    the rank exchange, and switch to the sampling-free arithmetic range
-    split when the leading sort column's domain is known."""
+    and ``domain`` as in ``with_global_rank``."""
     order_cols = ["relative_to_next", "instance_id", "query_id", "read_table_id"]
-    if domain is not None:
-        ranked = with_global_rank_bounded(
-            rel, order_cols, domain[0], domain[1], dedup=dedup
-        )
-    else:
-        ranked = with_global_rank(rel, order_cols, dedup=dedup)
+    ranked = with_global_rank(rel, order_cols, dedup=dedup, domain=domain)
     # single-row edge: SQL percent_rank defines 0 when N == 1 (0/0 → NaN here)
     pct = F.when(F.col("_total") == 1, F.lit(0.0)).otherwise(
         F.col("_rank0") / (F.col("_total") - 1)

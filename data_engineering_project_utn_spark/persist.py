@@ -1,38 +1,16 @@
 """Tracked DataFrame persists — a release hook for operator-internal caches.
 
-Two classes of pin, with different release rules:
-
-* **Perf persists** (``track_persist``): avoid recomputing expensive
-  intermediates (shingle frames, blocked projections).  Releasing them is
-  always safe — materialized results keep their values; un-materialized
-  results silently recompute from lineage to the same answer.
-  ``release_persisted()`` frees these.
-* **Correctness persists** (``pin_for_correctness``): the computation is
-  only correct while the pinned blocks exist.  The one case today:
-  ``with_global_rank`` collects per-partition counts from a
-  ``repartitionByRange`` whose boundary *sampling* is not stable across
-  re-evaluation — recompute could resample different boundaries and
-  desynchronize the broadcast offsets from partition contents (silently
-  wrong ranks).  These are NEVER released by ``release_persisted()``;
-  ``release_all()`` frees them too and must only run when no result built
-  on them will be used again (session teardown, or a foreachBatch loop
-  that fully materializes each batch's outputs — note the streaming
-  incremental-dedup hook releases only perf pins for exactly this reason).
-
-Between per-call and all-or-nothing there is ``pin_scope()``: a context
-manager that captures every correctness pin — and every perf persist,
-which is always safe to free — registered on the current thread inside
-the ``with`` block and unpersists them on exit.  A
-long-lived process that rebuilds pin-bearing queries repeatedly (the
-ResultCache-TTL dashboard loop) wraps each build-and-materialize in a
-scope so pinned executor storage is bounded by one build, not session
-lifetime.  The contract is the caller's: exit the scope only after fully
-materializing every result built on the scope's pins.  ``release_pin``
-is the single-frame equivalent.
-
-All registries are thread-safe (foreachBatch sinks run on stream
-execution threads); scopes are additionally thread-local, so concurrent
-builds never release each other's pins.
+``track_persist`` persists an expensive intermediate (shingle frames,
+blocked projections, a global rank's bucketed frame).  Freeing one is
+always safe: materialized results keep their values, and un-materialized
+ones recompute from lineage to the same answer.  ``release_persisted()``
+frees them all; ``persist_scope()`` frees those that THIS thread tracks
+inside a ``with`` block on exit, so a loop that rebuilds queries (the
+ResultCache-TTL dashboard, a foreachBatch trigger) holds storage for one
+build, not for the session.  Frames that must outlive every per-batch
+release (a stream's corpus side) are plain ``.persist()`` calls owned by
+their factory.  The registry is thread-safe; scopes are thread-local, so
+concurrent builds never release each other's frames.
 """
 
 from __future__ import annotations
@@ -44,117 +22,49 @@ from pyspark.sql import DataFrame
 
 _LOCK = threading.Lock()
 _PERSISTED: list[DataFrame] = []
-_PINNED: list[DataFrame] = []
 _TL = threading.local()
 
 
-def _scope_stack() -> list[list[DataFrame]]:
-    if not hasattr(_TL, "stack"):
-        _TL.stack = []
-    return _TL.stack
-
-
-def _perf_scope_stack() -> list[list[DataFrame]]:
-    if not hasattr(_TL, "perf_stack"):
-        _TL.perf_stack = []
-    return _TL.perf_stack
+def _scopes() -> list[list[DataFrame]]:
+    if not hasattr(_TL, "scopes"):
+        _TL.scopes = []
+    return _TL.scopes
 
 
 def track_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` as a releasable perf cache (see module docstring).
-    Inside a ``pin_scope()`` on this thread the handle belongs to the
-    scope and is unpersisted at exit — always safe for perf persists
-    (materialized results keep their values; unmaterialized ones
-    recompute identically), and it keeps scope-wrapped rebuild loops
-    (ResultCache TTL) from accumulating perf storage across builds just
-    like correctness pins."""
+    """Persist ``df`` as a releasable cache: owned by the innermost
+    ``persist_scope()`` of this thread, else by the global registry."""
     handle = df.persist()
-    perf_stack = _perf_scope_stack()
-    if perf_stack:
-        perf_stack[-1].append(handle)
+    scopes = _scopes()
+    if scopes:
+        scopes[-1].append(handle)
     else:
         with _LOCK:
             _PERSISTED.append(handle)
     return handle
 
 
-def pin_for_correctness(df: DataFrame) -> DataFrame:
-    """Persist ``df`` as a correctness pin: excluded from
-    ``release_persisted()`` because recomputing it could change the answer
-    (e.g. resampled range-partition boundaries).  Inside a ``pin_scope()``
-    on this thread, the pin belongs to the scope (released at scope exit);
-    otherwise it lives until ``release_pin``/``release_all``."""
-    handle = df.persist()
-    stack = _scope_stack()
-    if stack:
-        stack[-1].append(handle)
-    else:
-        with _LOCK:
-            _PINNED.append(handle)
-    return handle
-
-
 @contextlib.contextmanager
-def pin_scope():
-    """Scope correctness pins to a block: every ``pin_for_correctness``
-    registered by THIS thread inside the block is unpersisted on exit.
-    Exit only after materializing every result built on the block's pins —
-    downstream lazy evaluation after exit would recompute (and for range
-    pins possibly resample) the unpinned frame."""
+def persist_scope():
+    """Unpersist on exit every frame this thread tracks inside the block."""
     scope: list[DataFrame] = []
-    perf_scope: list[DataFrame] = []
-    _scope_stack().append(scope)
-    _perf_scope_stack().append(perf_scope)
+    _scopes().append(scope)
     try:
         yield scope
     finally:
-        _scope_stack().pop()
-        _perf_scope_stack().pop()
+        _scopes().pop()
         for h in scope:
             h.unpersist()
-        for h in perf_scope:
-            h.unpersist()
-
-
-def release_pin(df: DataFrame) -> bool:
-    """Unpersist one globally-registered correctness pin (identity match).
-    Returns False if ``df`` is not a registered pin (already released, or
-    scope-owned).  Same caller contract as ``pin_scope`` exit."""
-    with _LOCK:
-        for i, h in enumerate(_PINNED):
-            if h is df:
-                del _PINNED[i]
-                break
-        else:
-            return False
-    df.unpersist()
-    return True
 
 
 def release_persisted() -> None:
-    """Unpersist every releasable perf intermediate.  Correctness pins
-    stay.  Also drains THIS thread's active perf scopes — a per-batch
-    release hook running inside a ``pin_scope()`` (a scope-wrapped
-    driver pumping micro-batches) must still free each batch's perf
-    frames, or N batches accumulate N× persisted state until scope
-    exit; freeing a perf persist early is always safe (identical
-    recompute)."""
+    """Unpersist every globally tracked frame and drain this thread's open
+    scopes (a per-batch release inside a scope frees each batch's frames)."""
     with _LOCK:
         handles = _PERSISTED[:]
         _PERSISTED.clear()
-    for perf_scope in _perf_scope_stack():
-        handles.extend(perf_scope)
-        perf_scope.clear()
-    for h in handles:
-        h.unpersist()
-
-
-def release_all() -> None:
-    """Unpersist everything, including correctness pins.  Only call when no
-    DataFrame built on a pinned frame will be evaluated again."""
-    release_persisted()
-    with _LOCK:
-        handles = _PINNED[:]
-        _PINNED.clear()
+    for scope in _scopes():
+        handles.extend(scope)
+        scope.clear()
     for h in handles:
         h.unpersist()

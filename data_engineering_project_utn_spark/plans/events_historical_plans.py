@@ -380,7 +380,7 @@ def _decile_histogram(distributed: bool) -> Builder:
 
         ``distributed`` (``ri_decile_histogram``): the *distributed* NTILE
         (no single-partition stage — asserted in test_plans.py).  The
-        DISTINCT over rel rides the ranking's own range exchange
+        DISTINCT over rel rides the ranking's own bucket exchange
         (``dedup=True`` + a not-yet-distinct rel) — one wide shuffle of
         rel instead of two, plan-asserted.  Otherwise
         (``ri_decile_histogram_window``): the plain global-window NTILE
@@ -424,7 +424,7 @@ register(
 def ri_decile_percentrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The percent-rank decile convention under its own value gate: bucket =
     floor(pct·10)+1 clipped, computed via the distributed global rank
-    (range partition + broadcast offsets — no single-partition window; see
+    (bucket exchange + broadcast offsets — no single-partition window; see
     operators/histogram.py decile_by_percent_rank).  The oracle runs DuckDB's
     actual percent_rank() over the same total order, so the rank machinery
     and the boundary arithmetic are both value-checked — keeping the 100×

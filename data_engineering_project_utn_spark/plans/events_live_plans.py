@@ -511,7 +511,7 @@ def rl_producer_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     send); this reconstructs the same assignment over a total (ts,
     event_id) order and publishes the per-batch manifest (size, time
     span).  The global index comes from operators/histogram.py
-    with_global_rank — range partition + broadcast offsets, no
+    with_global_rank — bucket exchange + broadcast offsets, no
     single-partition window — so the batching is itself a distributed op,
     not a driver enumeration."""
     e = load_table(spark, sf_dir, "events")
@@ -976,7 +976,7 @@ def rl_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the per-user frame is ONE user-key aggregation of the raw
     stream; the three quartile ranks run on that aggregated frame
-    through ``with_global_rank`` — range-partitioned distributed ranks,
+    through ``with_global_rank`` — bucket-partitioned distributed ranks,
     NO single-partition window anywhere (plan-asserted), the same
     machinery as ``ri_decile_percentrank``/``shard_assignment``; the
     oracle's row_number() is the semantics, not the plan."""

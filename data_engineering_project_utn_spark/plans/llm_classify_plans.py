@@ -334,8 +334,8 @@ def llm_model_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     caller picks the threshold.
 
     Scale shape: scoring is one literal-weight JVM fold per row; the
-    rank cut rides the distributed global-rank machinery (range
-    exchange + per-partition offsets, no SinglePartition stage).
+    rank cut rides the distributed global-rank machinery (bucket
+    exchange + per-bucket offsets, no SinglePartition stage).
     """
     from data_engineering_project_utn_spark.llm import text as tx
     from data_engineering_project_utn_spark.operators.histogram import (
@@ -475,7 +475,7 @@ def llm_probe_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     concentrates positives in the low deciles, a chance-level one
     spreads them flat, and either way the number is GATED, not assumed.
 
-    The decile split is the distributed exact NTILE (range exchange +
+    The decile split is the distributed exact NTILE (bucket exchange +
     closed-form bin arithmetic, no SinglePartition window — same
     machinery as the decile headline); scoring is one literal-weight
     fold per row; training is the shared 3-step recurrence.

@@ -135,7 +135,7 @@ def llm_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global shuffle + round-robin sharding: every training
     run reads byte-identical shards (md5 order is the permutation — no RNG
-    state to lose).  The global rank is the distributed range-partition
+    state to lose).  The global rank is the distributed bucket-exchange
     machinery (with_global_rank — no single-partition window; the oracle's
     row_number() is the semantics, not the plan), shard sizes differ by ≤1."""
     d = load_table(spark, sf_dir, "documents")

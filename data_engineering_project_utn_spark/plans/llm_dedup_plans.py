@@ -21,6 +21,7 @@ from data_engineering_project_utn_spark.plans.llm_shared import (
     _SHINGLES,
     _TOKS,
     _cm_bucket_sql,
+    _reach_ctes,
 )
 from data_engineering_project_utn_spark.plans.registry import (
     Builder,
@@ -345,7 +346,7 @@ def llm_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     a HARD window·N pair bound (no bucket-skew term), complementing the
     probabilistic LSH gates on the same table and threshold.
 
-    The Spark plan is a range exchange (global rank, per-partition
+    The Spark plan is a bucket exchange (global rank, per-bucket
     offsets) plus ONE equi-join on rank-block — pinned linear; the
     DuckDB oracle reproduces the identical total order (ASCII keys →
     binary collation agrees cross-engine) and window semantics.
@@ -438,13 +439,7 @@ def llm_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority=0,
     oracle="WITH RECURSIVE " + _MINHASH_CTES + """
     , pairs AS (SELECT doc_a, doc_b FROM j WHERE jaccard > 0.5),
-    edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              UNION SELECT doc_b, doc_a FROM pairs),
-    reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    )
+    """ + _reach_ctes("pairs") + """
     SELECT src AS doc_id, LEAST(src, MIN(dst)) AS keeper_doc
     FROM reach GROUP BY src ORDER BY doc_id
     """,
@@ -1553,13 +1548,7 @@ _QUALITY_RENAMED = must_replace(
     priority=2,
     oracle="WITH RECURSIVE " + _MINHASH_CTES + ",\n    " + _QUALITY_RENAMED + """
     , pairs AS (SELECT doc_a, doc_b FROM j WHERE jaccard > 0.5),
-    edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              UNION SELECT doc_b, doc_a FROM pairs),
-    reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
+    """ + _reach_ctes("pairs") + """,
     comp AS (SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
              FROM reach GROUP BY src),
     ranked AS (SELECT c.component, c.doc_id, qq.quality,
@@ -1766,13 +1755,7 @@ def llm_contamination_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority=2,
     oracle="WITH RECURSIVE " + _MINHASH_CTES + """
     , pairs AS (SELECT doc_a, doc_b FROM j WHERE jaccard > 0.5),
-    edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              UNION SELECT doc_b, doc_a FROM pairs),
-    reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
+    """ + _reach_ctes("pairs") + """,
     comp AS (SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
              FROM reach GROUP BY src),
     sizes AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS cluster_size
@@ -2299,13 +2282,7 @@ def llm_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
            WHERE 1.0 - CAST(levenshtein(da.text, db.text) AS DOUBLE)
                  / CAST(greatest(length(da.text), length(db.text), 1) AS DOUBLE)
                  >= 0.97),
-    edges AS (SELECT doc_a AS src, doc_b AS dst FROM ep
-              UNION SELECT doc_b, doc_a FROM ep),
-    reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    )
+    """ + _reach_ctes("ep") + """
     SELECT src AS doc_id, LEAST(src, MIN(dst)) AS keeper_doc
     FROM reach GROUP BY src ORDER BY doc_id
     """,
@@ -2379,7 +2356,7 @@ def llm_sorted_neighborhood_multipass(spark: SparkSession, sf_dir: str) -> DataF
     the canonical pair key.  Both passes rank off ONE cached keyed
     frame (``shingle_frame(with_key=True)`` — the reversed pass derives
     ``reverse(_k)`` from the shared column), so the second pass costs a
-    range exchange + block join, not a second tokenization/shingle
+    bucket exchange + block join, not a second tokenization/shingle
     materialization.
 
     Oracle note: the brute jac CTE scores all id-ordered pairs — oracle
@@ -2501,13 +2478,7 @@ _PAIR_SOURCES_CTES = f"""mhp AS (SELECT doc_a, doc_b FROM j WHERE jaccard > 0.5)
 #: value).
 _GOLDEN_RECORD_ORACLE = "WITH RECURSIVE " + _MINHASH_CTES + ",\n    " + _PAIR_SOURCES_CTES + """,
     up AS (SELECT DISTINCT doc_a, doc_b FROM allp),
-    edges AS (SELECT doc_a AS src, doc_b AS dst FROM up
-              UNION SELECT doc_b, doc_a FROM up),
-    reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
+    """ + _reach_ctes("up") + """,
     lab AS (SELECT src AS doc_id, LEAST(src, MIN(dst)) AS keeper_doc
             FROM reach GROUP BY src),
     m AS (SELECT l.keeper_doc, l.doc_id, CAST(length(d.text) AS BIGINT) AS len
@@ -2576,13 +2547,7 @@ def llm_dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COMBINED_CLUSTERS_ORACLE = "WITH RECURSIVE " + _MINHASH_CTES + ",\n    " + _PAIR_SOURCES_CTES + """,
     up AS (SELECT DISTINCT doc_a, doc_b FROM allp),
-    edges AS (SELECT doc_a AS src, doc_b AS dst FROM up
-              UNION SELECT doc_b, doc_a FROM up),
-    reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    )
+    """ + _reach_ctes("up") + """
     SELECT src AS doc_id, LEAST(src, MIN(dst)) AS keeper_doc
     FROM reach GROUP BY src ORDER BY doc_id
     """

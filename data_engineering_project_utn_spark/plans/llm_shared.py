@@ -146,6 +146,21 @@ _MINHASH_CTES = f"""tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
           JOIN sh sb ON sb.doc_id = c.doc_b)"""
 
 
+
+def _reach_ctes(pairs: str) -> str:
+    """Oracle fragment: CTEs ``edges`` (both directions of every
+    (doc_a, doc_b) row of CTE ``pairs``) and ``reach(src, dst)``, their
+    transitive closure — the recursive-CTE connected components behind
+    every cluster oracle (component = LEAST(src, MIN(dst)) per src).
+    Needs ``WITH RECURSIVE``."""
+    return f"""edges AS (SELECT doc_a AS src, doc_b AS dst FROM {pairs}
+              UNION SELECT doc_b, doc_a FROM {pairs}),
+    reach(src, dst) AS (
+        SELECT src, dst FROM edges
+        UNION
+        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+    )"""
+
 # Oracle fragment: piecewise-linear fixed-point log₂ (== functions/
 # scalar.plog2_sql — exponent from the binary bit length, mantissa
 # linearly interpolated, pure integer ops).  Keep the two formulas in

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from data_engineering_project_utn_spark.llm import dedup as dd
 from data_engineering_project_utn_spark.llm import similarity as sim
 from data_engineering_project_utn_spark.llm.compute import parallelize_compute
-from data_engineering_project_utn_spark.plans.llm_shared import _dot
+from data_engineering_project_utn_spark.plans.llm_shared import _dot, _reach_ctes
 from data_engineering_project_utn_spark.plans.registry import Builder, register
 from data_engineering_project_utn_spark.tables import load_table
 
@@ -651,13 +651,7 @@ def llm_knn_join_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
               / (sqrt({_dot('a.embedding', 'a.embedding')})
                  * sqrt({_dot('b.embedding', 'b.embedding')})) >= 0.35
     ),
-    edges AS (SELECT doc_a AS src, doc_b AS dst FROM cpairs
-              UNION SELECT doc_b, doc_a FROM cpairs),
-    reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    )
+    {_reach_ctes('cpairs')}
     SELECT src AS doc_id, LEAST(src, MIN(dst)) AS keeper_doc
     FROM reach GROUP BY src ORDER BY doc_id
     """,
@@ -731,13 +725,7 @@ def llm_ivf_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
               / (sqrt({_dot('a.embedding', 'a.embedding')})
                  * sqrt({_dot('b.embedding', 'b.embedding')})) >= 0.35
     ),
-    edges AS (SELECT doc_a AS src, doc_b AS dst FROM cpairs
-              UNION SELECT doc_b, doc_a FROM cpairs),
-    reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    )
+    {_reach_ctes('cpairs')}
     SELECT src AS doc_id, LEAST(src, MIN(dst)) AS keeper_doc
     FROM reach GROUP BY src ORDER BY doc_id
     """,

@@ -814,14 +814,13 @@ def incremental_dedup_batch_fn(
       ``plans.llm_dedup_plans._dedup_band_index_bucketed`` /
       ``_dedup_corpus_bucketed``): each trigger probes the index with
       IN-pushdown — nothing corpus-scale is scanned, shuffled, computed,
-      or pinned; per-trigger cost tracks the batch and its matches only.
+      or persisted; per-trigger cost tracks the batch and its matches only.
     * otherwise: the corpus shingle frame is computed ONCE per stream and
-      pinned; per-batch cost is batch-side work plus a cached-corpus
-      band scan.  The pin is a LIFETIME boundary — call the returned
-      function's ``release_corpus_pins()`` when the stream stops to free
-      the executor storage (ADVICE r12: a long-lived driver constructing
-      many streams otherwise accumulates pinned corpus frames until
-      ``release_all()``).
+      persisted; per-batch cost is batch-side work plus a cached-corpus
+      band scan.  The persist lives as long as the stream — call the
+      returned function's ``release_corpus_pins()`` when the stream stops
+      to free the executor storage (ADVICE r12: a long-lived driver
+      constructing many streams otherwise accumulates corpus frames).
     """
     from data_engineering_project_utn_spark.llm.dedup import incremental_neardup
     from data_engineering_project_utn_spark.persist import release_persisted
@@ -840,14 +839,14 @@ def incremental_dedup_batch_fn(
         try:
             sink(pairs, batch_id)
         finally:
-            # the sink has consumed the pairs; free this batch's pinned
+            # the sink has consumed the pairs; free this batch's tracked
             # shingle frames or N batches accumulate 2N persisted frames.
-            # Coarse (releases every tracked PERF intermediate; correctness
-            # pins like with_global_rank's are excluded — see persist.py) —
-            # documented: the streaming job owns the session.
+            # Coarse (releases every tracked intermediate; the corpus
+            # frame is an untracked persist and stays) — documented: the
+            # streaming job owns the session.
             release_persisted()
 
-    process.release_corpus_pins = _corpus_pin_releaser(mode.get("corpus_shingles"))
+    process.release_corpus_pins = _corpus_releaser(mode.get("corpus_shingles"))
     return process
 
 
@@ -859,9 +858,9 @@ def _lexical_probe_mode(
 ) -> dict:
     """The corpus-side keyword arguments of ``incremental_neardup`` for a
     stream: the at-rest IN-pushdown probe when ``band_index`` +
-    ``corpus_at_rest`` are given (pins NOTHING), else the corpus shingle
-    frame computed ONCE per stream — a lifetime pin, exempt from the
-    per-batch ``release_persisted`` — with the batch side broadcast
+    ``corpus_at_rest`` are given (persists NOTHING), else the corpus
+    shingle frame computed ONCE per stream — an untracked persist, so the
+    per-batch ``release_persisted`` keeps it — with the batch side broadcast
     (foreachBatch micro-batches are bounded by the stream's trigger
     contract, the safe side of the r12 build-side discipline; see
     ``llm.dedup._incremental_candidates``)."""
@@ -869,32 +868,29 @@ def _lexical_probe_mode(
         return {"band_index": band_index, "corpus_at_rest": corpus_at_rest}
     from data_engineering_project_utn_spark.llm.compute import parallelize_compute
     from data_engineering_project_utn_spark.llm.dedup import shingle_frame
-    from data_engineering_project_utn_spark.persist import pin_for_correctness
 
-    corpus_shingles = pin_for_correctness(
-        shingle_frame(
-            parallelize_compute(corpus),
-            neardup_kwargs.get("id_col", "doc_id"),
-            neardup_kwargs.get("text_col", "text"),
-            neardup_kwargs.get("n", 5),
-        )
-    )
+    corpus_shingles = shingle_frame(
+        parallelize_compute(corpus),
+        neardup_kwargs.get("id_col", "doc_id"),
+        neardup_kwargs.get("text_col", "text"),
+        neardup_kwargs.get("n", 5),
+    ).persist()
     return {"corpus_shingles": corpus_shingles, "broadcast_batch": True}
 
 
-def _corpus_pin_releaser(*frames):
-    """A release handle for a batch fn's lifetime-pinned corpus frames
-    (ADVICE r12): unpins exactly the frames this stream registered, so a
-    long-lived driver can free them when the stream stops without the
-    release_all() sledgehammer.  Idempotent; skips None (indexed mode
-    pins nothing)."""
-    from data_engineering_project_utn_spark.persist import release_pin
+def _corpus_releaser(*frames):
+    """A release handle for a batch fn's stream-lifetime corpus frames
+    (ADVICE r12): unpersists exactly the frames this stream persisted, so
+    a long-lived driver can free them when the stream stops.  Returns how
+    many it freed; idempotent; skips None (indexed mode persists
+    nothing)."""
+    held = [f for f in frames if f is not None]
 
     def release() -> int:
-        freed = 0
-        for f in frames:
-            if f is not None and release_pin(f):
-                freed += 1
+        freed = len(held)
+        for f in held:
+            f.unpersist()
+        held.clear()
         return freed
 
     return release
@@ -917,53 +913,49 @@ def incremental_snm_batch_fn(
     (``llm.dedup.incremental_snm_pairs``).
 
     The corpus rank structure (``snm_ranked_corpus`` — global rank +
-    width-``window`` blocks, _blk-clustered) pins ONCE per stream; each
-    trigger ranks only (batch ∪ block-start keys), never the union, and
-    the probe joins ride the pinned clustering.  Per-doc semantics
+    width-``window`` blocks, _blk-clustered) persists ONCE per stream;
+    each trigger ranks only (batch ∪ block-start keys), never the union,
+    and the probe joins ride the persisted clustering.  Per-doc semantics
     depend only on (doc, corpus), so per-batch results union to the
     one-shot run (parity tested).  Batch twin: the oracle-gated
-    ``llm_incremental_snm``.  Free the lifetime pin via the returned
-    function's ``release_corpus_pins()``.
+    ``llm_incremental_snm``.  Free the stream-lifetime persist via the
+    returned function's ``release_corpus_pins()``.
 
-    Per-trigger storage hygiene (ADVICE r13): the rank machinery pins
-    per trigger — ``incremental_snm_pairs`` ranks (batch ∪ starts) and
-    (batch) through ``with_global_rank``, each a correctness pin — and
-    foreachBatch runs ``process`` on the STREAM-EXECUTION thread, where
-    no caller-side ``pin_scope`` is active, so without a local scope
-    those pins would land in the global registry and accumulate for the
-    stream's lifetime (``release_persisted`` deliberately skips pins).
-    Each trigger therefore opens its own ``pin_scope()`` on the callback
-    thread: the sink fully materializes the batch's pairs inside the
-    scope, and scope exit frees that trigger's rank pins and perf
-    persists.  The stream-lifetime corpus pin is registered at FACTORY
-    time on the caller's thread, outside any per-trigger scope, so the
-    per-trigger release never touches it (leak-tested).
+    Per-trigger storage hygiene (ADVICE r13): each trigger tracks
+    persists — ``incremental_snm_pairs`` ranks (batch ∪ starts) and
+    (batch) through ``with_global_rank`` — on the STREAM-EXECUTION
+    thread, where no caller-side scope is active, so without a local
+    scope they would land in the global registry and accumulate for the
+    stream's lifetime.  Each trigger therefore opens its own
+    ``persist_scope()`` on the callback thread: the sink fully
+    materializes the batch's pairs inside the scope, and scope exit frees
+    that trigger's persists.  The corpus structure is an untracked
+    persist made at FACTORY time, so the per-trigger release never
+    touches it (leak-tested).
     """
     from data_engineering_project_utn_spark.llm.dedup import (
         incremental_snm_pairs,
         snm_ranked_corpus,
     )
-    from data_engineering_project_utn_spark.persist import pin_scope
+    from data_engineering_project_utn_spark.persist import persist_scope
 
     indexed = rank_index is not None and block_starts is not None
     ranked = None
     if not indexed:
-        # once per stream, as a LIFETIME pin so the per-batch release
-        # below keeps it (pin=True routes around the perf registry)
+        # once per stream, untracked so no per-trigger release frees it
         ranked = snm_ranked_corpus(
             corpus,
             snm_kwargs.get("id_col", "doc_id"),
             snm_kwargs.get("text_col", "text"),
             snm_kwargs.get("n", 5),
             window,
-            pin=True,
-        )
+        ).persist()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        # this trigger's rank pins + perf persists free at scope exit
-        # (after the sink has materialized the pairs); the factory-time
-        # corpus pin lives outside the scope and survives
-        with pin_scope():
+        # this trigger's tracked persists free at scope exit (after the
+        # sink has materialized the pairs); the factory-time corpus
+        # persist is untracked and survives
+        with persist_scope():
             if indexed:
                 # at-rest mode (`_snm_rank_index_bucketed` structures):
                 # the batch's target blocks push into the bucketed index
@@ -990,7 +982,7 @@ def incremental_snm_batch_fn(
                 )
             sink(pairs, batch_id)
 
-    process.release_corpus_pins = _corpus_pin_releaser(ranked)
+    process.release_corpus_pins = _corpus_releaser(ranked)
     return process
 
 
@@ -1587,11 +1579,11 @@ def make_curation_batch_fn(
 
     1. near-dup-checked against the corpus at rest
        (``llm.dedup.incremental_neardup`` — asymmetric band join, never
-       corpus²; the corpus shingle frame pins ONCE per stream, so the
+       corpus²; the corpus shingle frame persists ONCE per stream, so the
        per-trigger cost is batch-side work only), plus — when
        ``editdist_threshold`` is set — the EDIT-DISTANCE arm
        (``verifier="editdist"`` at its own, stricter threshold,
-       sharing the same pinned corpus shingles: near-verbatim
+       sharing the same persisted corpus shingles: near-verbatim
        enforcement independent of the Jaccard knob),
     2. if the semantic arm is configured (``corpus_embeddings`` +
        ``centroids`` given): SEMANTICALLY near-dup-checked against the
@@ -1633,28 +1625,25 @@ def make_curation_batch_fn(
     )
 
     # one corpus-side mode (at-rest index probe, or a once-per-stream
-    # shingle pin) shared by the MinHash and edit-distance arms
+    # shingle persist) shared by the MinHash and edit-distance arms
     mode = _lexical_probe_mode(corpus, band_index, corpus_at_rest, neardup_kwargs)
 
     corpus_cells = None
     if corpus_embeddings is not None and centroids is not None:
         from data_engineering_project_utn_spark.llm import similarity as sim
         from data_engineering_project_utn_spark.llm.similarity import norm
-        from data_engineering_project_utn_spark.persist import pin_for_correctness
 
         # the at-rest assignment (WITH its norms — probes must never
         # recompute corpus norms per batch): once per stream, NOT per
-        # micro-batch.  Registered via pin_for_correctness so it is
-        # exempt from the per-batch release_persisted() below but still
-        # freed by release_all()/pin_scope exit — here the registry is a
-        # LIFETIME boundary, not a correctness pin: the descent is
-        # deterministic, so a post-release lazy recompute would still be
-        # value-identical
-        corpus_cells = pin_for_correctness(
+        # micro-batch — an untracked persist, so the per-batch
+        # release_persisted() below keeps it
+        corpus_cells = (
             sim.ivf_cells_2level(
                 corpus_embeddings, centroids, vec_col=embedding_col,
                 nprobe_super=nprobe_super,
-            ).withColumn("_nrm", norm(F.col(embedding_col)))
+            )
+            .withColumn("_nrm", norm(F.col(embedding_col)))
+            .persist()
         )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -1737,10 +1726,9 @@ def make_curation_batch_fn(
         finally:
             release_persisted()
 
-    # lifetime-pin release handle (ADVICE r12): frees this stream's
-    # corpus shingle + cell pins when the stream stops, without the
-    # release_all() sledgehammer
-    process.release_corpus_pins = _corpus_pin_releaser(
+    # stream-lifetime release handle (ADVICE r12): frees this stream's
+    # corpus shingle + cell persists when the stream stops
+    process.release_corpus_pins = _corpus_releaser(
         mode.get("corpus_shingles"), corpus_cells
     )
     return process

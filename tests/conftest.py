@@ -56,7 +56,6 @@ tests/test_streaming.py::TestWindowedHLL::test_stream_registers_match_batch_and_
 tests/test_bucketed_join.py::test_bucketed_join_has_no_shuffle
 tests/test_bucketed_join.py::test_deduped_corpus_write_back_bucketed
 tests/test_bucketed_join.py::test_snm_rank_index_probe_no_corpus_exchange
-tests/test_distributed_ntile.py::test_auto_strategy_picks_by_row_count
 tests/test_distributed_ntile.py::test_matches_window_ntile[1000-7-16]
 tests/test_distributed_ntile.py::test_more_partitions_than_rows
 tests/test_llm_ops.py::TestDedupProps::test_capped_band_buckets_bound_duplicate_skew

@@ -4029,9 +4029,9 @@ class TestIndexedIncrementalProbe:
         assert out2.count() == 0
 
     def test_batch_factories_expose_release_handle(self, spark, sf_dir, at_rest):
-        """ADVICE r12: the streaming factories' lifetime corpus pins get a
-        per-stream release handle; indexed mode pins nothing."""
-        from data_engineering_project_utn_spark import persist
+        """ADVICE r12: the streaming factories' stream-lifetime corpus
+        persists get a per-stream release handle; indexed mode persists
+        nothing."""
         from data_engineering_project_utn_spark.streaming.pipeline import (
             incremental_dedup_batch_fn,
         )
@@ -4040,13 +4040,16 @@ class TestIndexedIncrementalProbe:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         sunk = []
 
-        before = len(persist._PINNED)
+        jsc = spark.sparkContext._jsc.sc()
         fn = incremental_dedup_batch_fn(docs, lambda df, bid: sunk.append(df.count()))
-        assert len(persist._PINNED) == before + 1
         fn(docs.filter(F.col("doc_id") < 10), 0)
+        # the batch's own persists are released; the corpus shingles stay
+        held = jsc.getPersistentRDDs().size()
         assert fn.release_corpus_pins() == 1
-        assert len(persist._PINNED) == before
+        assert jsc.getPersistentRDDs().size() == held - 1
         assert fn.release_corpus_pins() == 0  # idempotent
+
+        before = jsc.getPersistentRDDs().size()
 
         fn_idx = incremental_dedup_batch_fn(
             docs,
@@ -4054,8 +4057,8 @@ class TestIndexedIncrementalProbe:
             band_index=band_index,
             corpus_at_rest=corpus_bkt,
         )
-        assert len(persist._PINNED) == before  # indexed mode pins nothing
         fn_idx(docs.filter(F.col("doc_id") < 10), 1)
+        assert jsc.getPersistentRDDs().size() <= before  # indexed mode persists nothing
         assert fn_idx.release_corpus_pins() == 0
         assert sunk[0] == sunk[1]  # same flags either mode
 
@@ -4402,7 +4405,6 @@ class TestSnmRankIndexProbe:
         ), plan
 
     def test_streaming_factory_indexed_mode_parity(self, spark, sf_dir, snm_at_rest):
-        from data_engineering_project_utn_spark import persist
         from data_engineering_project_utn_spark.streaming.pipeline import (
             incremental_snm_batch_fn,
         )
@@ -4412,7 +4414,8 @@ class TestSnmRankIndexProbe:
         incoming = docs.filter((F.col("doc_id") % 3 == 0) & (F.col("doc_id") < 60))
         corpus = docs.filter(F.col("doc_id") % 3 != 0)
         got: list = []
-        before = len(persist._PINNED)
+        jsc = spark.sparkContext._jsc.sc()
+        before = jsc.getPersistentRDDs().size()
         fn = incremental_snm_batch_fn(
             bkt.filter(F.col("doc_id") % 3 != 0),
             lambda df, bid: got.extend(
@@ -4423,8 +4426,9 @@ class TestSnmRankIndexProbe:
             rank_index=idx,
             block_starts=starts,
         )
-        assert len(persist._PINNED) == before  # indexed mode pins nothing
         fn(incoming, 0)
+        # indexed mode persists nothing; the trigger's scope freed its own
+        assert jsc.getPersistentRDDs().size() <= before
         want = {
             (r["doc_new"], r["doc_existing"])
             for r in dd.incremental_snm_pairs(

@@ -182,7 +182,7 @@ def test_pack_sequences_matches_python_fold(spark, rows, window):
 @_settings
 def test_with_global_rank_partition_count_invariant(spark, n_rows, parts):
     """The distributed global rank must be a pure function of the data —
-    identical for every num_partitions (range-boundary sampling must never
+    identical for every num_partitions (the sampled bucket bounds must never
     leak into the ranks), including partitions ≫ rows."""
     from data_engineering_project_utn_spark.operators.histogram import (
         with_global_rank,
@@ -428,21 +428,20 @@ def test_chunk_documents_coverage_law(spark, texts, chunk, stride_frac):
 )
 @_settings
 def test_bounded_rank_equals_sampled_rank_law(spark, vals, parts):
-    """with_global_rank_bounded must agree RANK-FOR-RANK with the sampled
-    with_global_rank on arbitrary doubles — including NULLs (first), NaNs
-    (last), ties (broken by id), and values straying outside the declared
-    [0, 1] domain (clamped into edge buckets but still exactly ordered by
-    the within-bucket window)."""
+    """with_global_rank(domain=(0, 1)) must agree RANK-FOR-RANK with
+    with_global_rank() over sampled bounds on arbitrary doubles — including
+    NULLs (first), NaNs (last), ties (broken by id), and values straying
+    outside the declared [0, 1] domain (clamped into edge buckets but still
+    exactly ordered by the within-bucket window)."""
     from data_engineering_project_utn_spark.operators.histogram import (
         with_global_rank,
-        with_global_rank_bounded,
     )
 
     rows = [(v, i) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "v double, id long")
     bounded = {
         int(r["id"]): int(r["_rank0"])
-        for r in with_global_rank_bounded(df, ["v", "id"], 0.0, 1.0, parts).collect()
+        for r in with_global_rank(df, ["v", "id"], parts, domain=(0.0, 1.0)).collect()
     }
     sampled = {
         int(r["id"]): int(r["_rank0"])

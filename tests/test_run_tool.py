@@ -69,3 +69,8 @@ def test_unknown_or_raising_query_is_an_error_not_a_stop(
     assert "build failed" in records["boom"]["error"]
     assert (summary["ok"], summary["errors"]) == (1, 2)
     assert summary["ok"] < summary["queries"]  # main() exits 1
+
+
+def test_options_may_sit_between_positionals(run_tool, sf_dir):
+    args, names = run_tool.parse_args(["time", sf_dir, "--reps", "1", CHEAP[0]])
+    assert (args.verb, args.sf_dir, args.reps, names) == ("time", sf_dir, 1, [CHEAP[0]])

@@ -660,7 +660,7 @@ class TestIncrementalDedupStream:
         """VERDICT r12 #7: the sorted-neighborhood incremental arm —
         streamed per-batch pair sets must union to the one-shot run
         (insertion-rank semantics depend only on (doc, corpus)), with
-        the corpus rank structure pinned ONCE per stream and freed by
+        the corpus rank structure persisted ONCE per stream and freed by
         the release handle."""
         import pandas as pd
 
@@ -705,10 +705,6 @@ class TestIncrementalDedupStream:
         jsc = spark.sparkContext._jsc.sc()
         rdds_before = jsc.getPersistentRDDs().size()
         fn = sp.incremental_snm_batch_fn(corpus, sink, window=2, threshold=0.5)
-        # factory-time pins (the stream-lifetime corpus rank structure)
-        # are registered on THIS thread; everything a trigger adds on the
-        # stream-execution thread must be gone once the stream drains
-        pins_after_factory = len(persist._PINNED)
         stream = (
             spark.readStream.schema(doc_schema)
             .option("maxFilesPerTrigger", 1)
@@ -722,13 +718,13 @@ class TestIncrementalDedupStream:
         )
         q.awaitTermination(120)
 
-        # ADVICE r13: the per-trigger rank pins (two with_global_rank
-        # calls per micro-batch, registered on the stream-execution
-        # thread where no caller pin_scope is active) must NOT
-        # accumulate across triggers — each process() opens its own
-        # pin_scope, so after the stream drains the global registry
-        # holds exactly the factory-time pins
-        assert len(persist._PINNED) == pins_after_factory
+        # ADVICE r13: the per-trigger rank persists (two with_global_rank
+        # calls per micro-batch, tracked on the stream-execution thread
+        # where no caller scope is active) must NOT accumulate across
+        # triggers — each process() opens its own persist_scope, so once
+        # the stream drains only the factory's two frames stay cached:
+        # the corpus rank structure and its rank's bucketed frame
+        assert jsc.getPersistentRDDs().size() <= rdds_before + 2
 
         one_shot = {
             (r["doc_new"], r["doc_existing"])
@@ -742,11 +738,11 @@ class TestIncrementalDedupStream:
         # the near-verbatim copies flag against their sort-adjacent
         # corpus docs; fresh docs pass
         assert {p[0] for p in one_shot} == {10, 12}
-        assert fn.release_corpus_pins() == 1  # the per-stream rank pin
+        assert fn.release_corpus_pins() == 1  # the per-stream rank structure
         # executor storage drains too: free the one-shot parity run's
-        # frames and the factory's internal rank pin, then the
+        # frames and the factory's internal rank frame, then the
         # persistent-RDD count must return to its pre-test level
-        persist.release_all()
+        persist.release_persisted()
         import time
 
         for _ in range(50):
@@ -1313,9 +1309,8 @@ class TestCurationStream:
 
     def test_curation_gate_at_rest_mode_parity(self, spark, sf_dir):
         """The composed curation gate over the AT-REST structures (band
-        index + bucketed corpus): identical accept set to the pinned
-        mode, and NOTHING pinned for the lexical arms."""
-        from data_engineering_project_utn_spark import persist
+        index + bucketed corpus): identical accept set to the persisted-
+        corpus mode, and NOTHING persisted for the lexical arms."""
         from data_engineering_project_utn_spark.plans.llm_dedup_plans import (
             _dedup_band_index_bucketed,
             _dedup_corpus_bucketed,
@@ -1341,16 +1336,18 @@ class TestCurationStream:
             editdist_threshold=0.9,
         )
         fn_pinned(batch, 0)
-        fn_pinned.release_corpus_pins()
+        assert fn_pinned.release_corpus_pins() == 1  # the corpus shingles
 
-        before = len(persist._PINNED)
+        jsc = spark.sparkContext._jsc.sc()
+        before = jsc.getPersistentRDDs().size()
         fn_idx = sp.make_curation_batch_fn(
             corpus, sink, min_quality=0.0, threshold=0.5,
             editdist_threshold=0.9,
             band_index=bidx, corpus_at_rest=bkt,
         )
-        assert len(persist._PINNED) == before  # lexical arms pin nothing
         fn_idx(batch, 1)
+        # lexical arms persist nothing that outlives the batch
+        assert jsc.getPersistentRDDs().size() <= before
         assert got[1] == got[0] and len(got[0]) > 0
         assert fn_idx.release_corpus_pins() == 0
 

@@ -7,8 +7,9 @@ Usage::
     python tools/run.py check <sf_dir> (<name>... | --tag T | --all) [--out PATH]
     python tools/run.py plan  <sf_dir> (<name>... | --tag T | --all) [--out DIR]
 
-For each query the runner clears Spark's cache, builds the query under the
-job group ``run:<verb>:<name>`` and acts on it:
+For each query the runner releases the tracked persists (``persist.py``),
+clears Spark's cache, builds the query under the job group
+``run:<verb>:<name>`` and acts on it:
 
 * ``time`` computes the result in full through the ``noop`` sink, ``--reps``
   times (``count()`` would let the optimizer prune columns and whole
@@ -48,6 +49,7 @@ from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_engineering_project_utn_spark.persist import release_persisted  # noqa: E402
 from data_engineering_project_utn_spark.plans import all_queries  # noqa: E402
 from data_engineering_project_utn_spark.session import get_spark  # noqa: E402
 from tests.oracle_harness import compare  # noqa: E402
@@ -67,6 +69,7 @@ HAZARDS = (
 
 
 def _build(spark, q, sf_dir):
+    release_persisted()  # drop the tracked handles before the cache they name
     spark.catalog.clearCache()
     return q.build(spark, sf_dir)
 
@@ -164,7 +167,9 @@ def run(spark, verb, sf_dir, names, reps=5, out=None):
     return records, summary
 
 
-def main(argv=None) -> int:
+def parse_args(argv=None):
+    """Parse the command line; return (args, query names in run order).
+    Options may sit between positionals (``time <dir> --reps 2 q1 q2``)."""
     p = argparse.ArgumentParser(
         description="Run registry queries: time, check against the oracle, or audit plans."
     )
@@ -175,7 +180,7 @@ def main(argv=None) -> int:
     p.add_argument("--all", action="store_true", help="the whole registry")
     p.add_argument("--reps", type=int, default=5, help="timed builds per query (time)")
     p.add_argument("--out", help="sweep record file (check) or explain directory (plan)")
-    args = p.parse_args(argv)
+    args = p.parse_intermixed_args(argv)
     if sum((bool(args.names), args.tag is not None, args.all)) != 1:
         p.error("select queries by name, by --tag or by --all, exactly one way")
     if args.reps < 1:
@@ -190,7 +195,11 @@ def main(argv=None) -> int:
         )
     if not names:
         p.error(f"no query carries the tag {args.tag!r}")
+    return args, names
 
+
+def main(argv=None) -> int:
+    args, names = parse_args(argv)
     spark = get_spark(app_name=f"utn-run-{args.verb}")
     spark.sparkContext.setLogLevel("ERROR")
     _, summary = run(spark, args.verb, args.sf_dir, names, args.reps, args.out)
