@@ -48,12 +48,13 @@ def with_global_rank(
     B = 4·P bucket bounds fixed before the plan runs.  The rows ride a
     hash exchange on the bucket into P partitions; only the B per-bucket
     counts are collected (model-size, like IVF centroids — never rows),
-    turned into rank offsets on the driver and broadcast back; a window
-    within each bucket finishes the order.  No single-partition stage
-    anywhere.  Because the bounds are literals in the plan, every
-    re-evaluation assigns every row to the same bucket, so the bucketed
-    frame is a releasable perf persist (``track_persist``): recomputing
-    it after a release cannot desynchronize the offsets.
+    turned into rank offsets on the driver and put back into the plan as
+    literals; a window within each bucket finishes the order.  No
+    single-partition stage anywhere.  Because the bounds are literals in
+    the plan, every re-evaluation assigns every row to the same bucket,
+    so the bucketed frame is a releasable perf persist
+    (``track_persist``): recomputing it after a release cannot
+    desynchronize the offsets.
 
     The bounds come from one of two places:
 
@@ -102,25 +103,24 @@ def with_global_rank(
     # collected to the driver (model-size: one long per bucket) and the
     # prefix sum computed there — a declarative window over the count frame
     # would plan an Exchange SinglePartition, and the benched headline
-    # asserts no such stage exists anywhere in its plan.
+    # asserts no such stage exists anywhere in its plan.  The offsets go
+    # back into the plan as a literal array indexed by bucket, the total
+    # as a literal: no offsets frame, no join.
     cnt_rows = bucketed.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt")).collect()
     counts = {int(r["_bkt"]): int(r["_cnt"]) for r in cnt_rows}
-    total = sum(counts.values())
+    offsets = [0] * (max(counts, default=0) + 1)
     acc = 0
-    rows = []
     for b in sorted(counts):
-        rows.append((b, acc, total))
+        offsets[b] = acc
         acc += counts[b]
-    offsets = bucketed.sparkSession.createDataFrame(
-        rows, schema="_bkt int, _offset bigint, _total bigint"
-    )
+    offset = F.array(*[F.lit(o).cast("bigint") for o in offsets])[F.col("_bkt")]
     cols = [F.col(c) for c in order_cols]
     w = Window.partitionBy("_bkt").orderBy(*cols)
-    rank0 = (F.row_number().over(w) + F.col("_offset") - 1).cast("bigint")
+    rank0 = (F.row_number().over(w) + offset - 1).cast("bigint")
     return (
-        bucketed.join(F.broadcast(offsets), "_bkt")
+        bucketed.withColumn("_total", F.lit(acc).cast("bigint"))
         .withColumn("_rank0", rank0)
-        .drop("_bkt", "_offset")
+        .drop("_bkt")
     )
 
 
@@ -209,7 +209,7 @@ def relative_to_next(
     satisfy it from an exchange it already pays for (the decile headline
     folds it into ``distributed_ntile``'s bucket exchange — one
     shuffle instead of two)."""
-    keys = analytical.select(F.col("table_id").alias("read_table_id")).distinct()
+    keys = analytical.select(F.col("table_id").alias("read_table_id"))
     num = epoch_ms(F.col("arrival_timestamp"), F.col("last_write_table_insert"))
     den = epoch_ms(F.col("next_write_table_insert"), F.col("last_write_table_insert"))
     out = (
@@ -285,7 +285,7 @@ def decile_by_percent_rank(
     Bucket = floor(percent_rank · n) + 1 clipped to n, with
     percent_rank = rank0 / (N − 1) over the global total order — the exact
     arithmetic SQL ``percent_rank()`` defines, but via ``with_global_rank``
-    (bucket exchange + broadcast offsets) instead of an empty-partition
+    (bucket exchange + literal offsets) instead of an empty-partition
     window, which Spark would plan as Exchange SinglePartition.  Differs
     from NTILE at bucket boundaries when group sizes don't divide evenly —
     a different (equally standard) quantile convention, value-checked by

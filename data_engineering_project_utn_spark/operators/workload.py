@@ -6,15 +6,16 @@ Reproduces the reference's ``tables_workload_count`` view
 averages (`:338-412`), and the HAVING freshness-alarm variant
 (`Dashboard/update_tables.py:242-264`).
 
-Scale notes: both sides of the FULL OUTER JOIN are already aggregated
-(small — one row per (instance, table)), so the join is cheap and
-broadcast-able when one workload class is rare; the freshness aggregation
-shuffles once on (instance_id, read_table_id).
+Scale notes: the workload classifier is one aggregation (one shuffle on
+(instance, table)), not the view's two aggregates and FULL OUTER JOIN;
+the semi-joins on its small result need no DISTINCT (a semi-join never
+multiplies left rows); the freshness aggregation shuffles once on
+(instance_id, read_table_id).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_engineering_project_utn_spark.functions.scalar import davg, safe_div
@@ -30,26 +31,31 @@ def tables_workload_count(output_table: DataFrame) -> DataFrame:
     instances; we join on both keys, the stated GROUP BY intent.  Divergence
     documented per SURVEY.md §7.2.)
     Null counts mean "absent from that side", never 0 (FIXTURES.md F4).
+
+    Computed as ONE aggregation, not two aggregates and the join: rows
+    group by (instance, table, ``_side``), where ``_side`` is NULL when
+    both keys are set — both sides meet in one group, as matched join
+    rows do — and ``is_select`` when either key is NULL, so such groups
+    stay one row per side, as the outer join leaves NULL keys unmatched.
     """
-    selects = (
-        output_table.filter(F.col("query_type") == "select")
-        .groupBy("instance_id", F.col("read_table_id").alias("table_id"))
-        .agg(F.count(F.lit(1)).alias("select_count"))
+    is_select = F.col("query_type") == "select"
+    table_id = F.when(is_select, F.col("read_table_id")).otherwise(
+        F.col("write_table_id")
     )
-    transforms = (
-        output_table.filter(F.col("query_type").isin("update", "delete"))
-        .groupBy("instance_id", F.col("write_table_id").alias("table_id"))
-        .agg(F.count(F.lit(1)).alias("transform_count"))
-    )
+    side = F.when(F.col("instance_id").isNull() | table_id.isNull(), is_select)
+
+    def absent_as_null(c: Column) -> Column:
+        n = F.count(F.when(c, 1))
+        return F.when(n > 0, n)
+
     return (
-        selects.alias("s")
-        .join(transforms.alias("t"), on=["instance_id", "table_id"], how="full_outer")
-        .select(
-            "instance_id",
-            "table_id",
-            F.col("transform_count"),
-            F.col("select_count"),
+        output_table.filter(F.col("query_type").isin("select", "update", "delete"))
+        .groupBy("instance_id", table_id.alias("table_id"), side.alias("_side"))
+        .agg(
+            absent_as_null(~is_select).alias("transform_count"),
+            absent_as_null(is_select).alias("select_count"),
         )
+        .drop("_side")
     )
 
 
@@ -67,42 +73,6 @@ def analytical_tables(workload: DataFrame, threshold: float = 0.80) -> DataFrame
     )
 
 
-def analytical_table_keys(
-    output_table: DataFrame, threshold: float = 0.80
-) -> DataFrame:
-    """The analytical-table id set (column ``table_id``) in ONE
-    conditional aggregation instead of ``tables_workload_count``'s
-    two-aggregate FULL OUTER JOIN — for consumers that only need the
-    keys (the decile family semi-joins on table_id alone).  Equivalent
-    set: the outer join's NULL counts and the conditional sums' zeros
-    land on the same side of the share > threshold cut (NULL select
-    share filters false, as does 0; absent transforms COALESCE to 0 in
-    the anchor and sum to 0 here), verified by the shared decile
-    oracles.  One shuffle on (instance, table) and a model-size
-    result."""
-    key = F.when(
-        F.col("query_type") == "select", F.col("read_table_id")
-    ).otherwise(F.col("write_table_id"))
-    wl = (
-        output_table.filter(
-            F.col("query_type").isin("select", "update", "delete")
-        )
-        .groupBy("instance_id", key.alias("table_id"))
-        .agg(
-            F.sum(
-                F.when(F.col("query_type") == "select", 1).otherwise(0)
-            ).alias("select_count"),
-            F.sum(
-                F.when(F.col("query_type") != "select", 1).otherwise(0)
-            ).alias("transform_count"),
-        )
-    )
-    share = F.col("select_count").cast("double") / (
-        F.col("transform_count") + F.col("select_count")
-    ).cast("double")
-    return wl.filter(share > threshold).select("table_id")
-
-
 def ingestion_freshness(
     output_table: DataFrame, analytical: DataFrame, limit: int = 12
 ) -> DataFrame:
@@ -112,7 +82,7 @@ def ingestion_freshness(
     The semi-join is on the (small) aggregated classifier output —
     broadcast-able; the aggregation shuffles on (instance_id, read_table_id).
     """
-    keys = analytical.select(F.col("table_id").alias("read_table_id")).distinct()
+    keys = analytical.select(F.col("table_id").alias("read_table_id"))
     return (
         output_table.filter(F.col("query_type") == "select")
         .join(F.broadcast(keys), on="read_table_id", how="left_semi")

@@ -136,11 +136,7 @@ def ri_ingestion_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     determinism contract."""
     out = _output_table(spark, sf_dir)
     wl = wl_ops.tables_workload_count(out)
-    keys = (
-        wl_ops.analytical_tables(wl)
-        .select(F.col("table_id").alias("read_table_id"))
-        .distinct()
-    )
+    keys = wl_ops.analytical_tables(wl).select(F.col("table_id").alias("read_table_id"))
     since_us = F.unix_micros(F.col("arrival_timestamp")) - F.unix_micros(
         F.col("last_write_table_insert")
     )
@@ -365,7 +361,7 @@ _DECILE_ORACLE = WORKLOAD_CTE + """
 
 def _decile_rel(spark: SparkSession, sf_dir: str, dedup: bool = True) -> DataFrame:
     out = _output_table(spark, sf_dir)
-    analytical = wl_ops.analytical_table_keys(out)
+    analytical = wl_ops.analytical_tables(wl_ops.tables_workload_count(out))
     return hist_ops.relative_to_next(out, analytical, dedup=dedup).filter(
         F.col("relative_to_next").isNotNull()
     )

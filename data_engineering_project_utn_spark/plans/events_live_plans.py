@@ -511,7 +511,7 @@ def rl_producer_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     send); this reconstructs the same assignment over a total (ts,
     event_id) order and publishes the per-batch manifest (size, time
     span).  The global index comes from operators/histogram.py
-    with_global_rank — bucket exchange + broadcast offsets, no
+    with_global_rank — bucket exchange + literal offsets, no
     single-partition window — so the batching is itself a distributed op,
     not a driver enumeration."""
     e = load_table(spark, sf_dir, "events")

@@ -60,6 +60,23 @@ FLATTENED_SCHEMA = T.StructType(
     ]
 )
 
+# The historical-plane output table, ``intervals.output_table`` over
+# FLATTENED_SCHEMA rows (`Dashboard_Historical_Final.py:241-312`).
+OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("instance_id", T.LongType()),
+        T.StructField("query_id", T.LongType()),
+        T.StructField("query_type", T.StringType()),
+        T.StructField("write_table_id", T.LongType()),
+        T.StructField("read_table_id", T.LongType()),
+        T.StructField("arrival_timestamp", T.TimestampType()),
+        T.StructField("last_write_table_insert", T.TimestampType()),
+        T.StructField("next_write_table_insert", T.TimestampType()),
+        T.StructField("time_since_last_ingest_ms", T.DoubleType()),
+        T.StructField("time_to_next_ingest_ms", T.DoubleType()),
+    ]
+)
+
 # query_type domain observed in reference predicates
 # (`Dashboard_Historical_Final.py:76,83,236,296`).
 INGESTION_QUERY_TYPES = ("insert", "copy")

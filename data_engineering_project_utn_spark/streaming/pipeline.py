@@ -5,7 +5,8 @@ Reference behaviors mapped:
 
 * T1 micro-batch poll loop (2 s sleep)        → micro-batch triggers
 * T2 60 s TRUNCATE "TTL tables"               → event-time tumbling window +
-                                                 watermark (state auto-evicted)
+                                                 watermark (state evicted in
+                                                 append/update mode only)
 * T3 MAX(ts) watermark probe                   → withWatermark
 * T4 hopping-window incremental processing     → foreachBatch over the same
                                                  batch operators (stateless
@@ -46,6 +47,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from data_engineering_project_utn_spark.operators import intervals as iv_ops
+from data_engineering_project_utn_spark.schema import FLATTENED_SCHEMA, OUTPUT_SCHEMA
 
 
 # ---------------------------------------------------------------------------
@@ -234,7 +236,9 @@ def live_window_counters(
 
     The reference TRUNCATEs its DuckDB tables every 60 s
     (`Dashboard_Live_Final.py:126-135`); a tumbling event-time window is
-    the declarative equivalent — watermark expiry replaces TRUNCATE.
+    the declarative equivalent.  The watermark evicts a window's state
+    in append or update mode only; in complete mode (``start_live_plane``)
+    Spark keeps every window, so state grows with the event time covered.
     """
     return (
         stream.withWatermark(ts_col, watermark)
@@ -1438,8 +1442,6 @@ def hopping_backfill(
     """
     from datetime import timedelta
 
-    from data_engineering_project_utn_spark.operators import intervals as iv_ops
-
     cur = start
     while cur < end:
         cur = min(cur + timedelta(hours=hop_hours), end)
@@ -1448,6 +1450,13 @@ def hopping_backfill(
             & (F.col("arrival_timestamp") < F.lit(cur))
         )
         yield cur, iv_ops.output_table(seen, iv_ops.ingestion_intervals(seen))
+
+
+#: Accumulator rows: the batch projected to FLATTENED_SCHEMA plus the
+#: batch id, both partition columns typed as written.
+_ACCUMULATOR_SCHEMA = T.StructType(
+    FLATTENED_SCHEMA.fields + [T.StructField("_batch_id", T.LongType())]
+)
 
 
 class IncrementalHistoricalPipeline:
@@ -1475,14 +1484,15 @@ class IncrementalHistoricalPipeline:
       batch's touched instances (partition pruning — input is bounded by
       the touched partitions' history, not total history) and rewrites only
       those instances' output partitions via dynamic partition overwrite.
-    * **Model-size driver state.** The batch's distinct instance ids are
-      collected and the accumulator read carries an ``isin`` partition
-      filter on them, so the driver list and the filter expression grow
-      with the instances one batch touches, not with history.
+    * **No rediscovery jobs.** The touched instances are the
+      ``instance_id=`` directories under the batch's ``_batch_id=<id>``,
+      listed without a Spark job (a replay whose first attempt touched
+      more instances recomputes a superset: still exact).  Both reads give
+      their schema (``FLATTENED_SCHEMA``, projected at ingest, and
+      ``OUTPUT_SCHEMA``), so neither runs a footer-inference job.
 
-    Read the output back with ``read_output`` (restores canonical column
-    order/types — Hive-style partition columns come back as inferred ints
-    at the end of the schema otherwise).
+    Read the output back with ``read_output`` (canonical column order and
+    types — Hive-style partition columns come last otherwise).
     """
 
     def __init__(
@@ -1496,14 +1506,14 @@ class IncrementalHistoricalPipeline:
         self.output_path = output_path
 
     def accumulated_for(self, instances: list) -> DataFrame:
-        """Accumulator rows for the given instances, via partition pruning
-        (the only accumulator read in the per-batch path)."""
-        flat = self.spark.read.parquet(self.accumulator_path).filter(
-            F.col("instance_id").isin(instances)
-        )
-        # partition-column inference narrows instance_id to int; restore
-        return flat.withColumn("instance_id", F.col("instance_id").cast("long")).drop(
-            "_batch_id"
+        """Accumulator rows (``FLATTENED_SCHEMA``) for the given instances,
+        via partition pruning (the only accumulator read in the per-batch
+        path)."""
+        return (
+            self.spark.read.schema(_ACCUMULATOR_SCHEMA)
+            .parquet(self.accumulator_path)
+            .filter(F.col("instance_id").isin(instances))
+            .drop("_batch_id")
         )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -1511,21 +1521,28 @@ class IncrementalHistoricalPipeline:
         # never match the isin() partition filter (NULL semantics) — silently
         # excluded from recompute.  Map nulls to -1 at ingest (the cleaning
         # layer's sentinel) so partitioning and the touched filter are total.
-        batch_df = batch_df.withColumn(
-            "instance_id", F.coalesce(F.col("instance_id").cast("long"), F.lit(-1))
-        )
-        probe = batch_df.select("instance_id").distinct().collect()
-        if not probe:
-            return
+        batch = batch_df.select(
+            *[F.col(f.name).cast(f.dataType) for f in FLATTENED_SCHEMA]
+        ).fillna(-1, subset=["instance_id"])
         (
-            batch_df.withColumn("_batch_id", F.lit(int(batch_id)))
+            batch.withColumn("_batch_id", F.lit(int(batch_id)).cast("long"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_batch_id", "instance_id")
             .parquet(self.accumulator_path)
         )
-        flat = self.accumulated_for([r["instance_id"] for r in probe])
-        out = iv_ops.output_table(flat, iv_ops.ingestion_intervals(flat))
+        fs, touched = _hadoop_fs(
+            self.spark, f"{self.accumulator_path}/_batch_id={batch_id}/instance_id=*"
+        )
+        # a glob that matches nothing (an empty batch) lists no directory
+        instances = [
+            int(st.getPath().getName().partition("=")[2])
+            for st in fs.globStatus(touched)
+        ]
+        if not instances:
+            return
+        flat = self.accumulated_for(instances)
+        out = iv_ops.output_table(flat)
         (
             out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -1534,17 +1551,12 @@ class IncrementalHistoricalPipeline:
         )
 
     def read_output(self) -> DataFrame:
-        """Output table with canonical column order and instance_id type."""
-        out = self.spark.read.parquet(self.output_path).withColumn(
-            "instance_id", F.col("instance_id").cast("long")
+        """Output table in ``OUTPUT_SCHEMA``'s column order and types."""
+        return (
+            self.spark.read.schema(OUTPUT_SCHEMA)
+            .parquet(self.output_path)
+            .select(*OUTPUT_SCHEMA.names)
         )
-        cols = [
-            "instance_id", "query_id", "query_type", "write_table_id",
-            "read_table_id", "arrival_timestamp", "last_write_table_insert",
-            "next_write_table_insert", "time_since_last_ingest_ms",
-            "time_to_next_ingest_ms",
-        ]
-        return out.select(*cols)
 
     def start(self, flat_stream: DataFrame, checkpoint: str, **trigger_kwargs):
         if not trigger_kwargs:
@@ -1913,6 +1925,9 @@ def start_live_plane(
     refresh loop).  N.B. with a per-query-connection transport (socket
     source) the producer must serve one replay per query, just as a
     Kafka topic serves each consumer group its own read.
+
+    The counters run in complete mode: the memory table and the sink see
+    every window so far, and no window's state is ever evicted.
 
     Returns ``{"counters_query", "sink_query" (None if no sink),
     "topk_query", "topk"}`` — caller owns ``stop()``.  Integration test

@@ -288,8 +288,7 @@ class TestBoundedRank:
             # prints the same node in its Final and Initial sections, with
             # fresh plan_ids after in-suite re-planning): every hash
             # exchange must be the explicit bucket repartition — the dedup
-            # aggregate and the offsets join must not have added an
-            # ENSURE_REQUIREMENTS shuffle
+            # aggregate must not have added an ENSURE_REQUIREMENTS shuffle
             kinds = set(
                 re.findall(r"Exchange hashpartitioning\((\w+)#\d+[^)]*\), (\w+)", plan)
             )

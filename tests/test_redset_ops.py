@@ -279,6 +279,54 @@ class TestWorkloadAndHistogram:
         assert both["select_count"].notna().all()
         assert both["transform_count"].notna().all()
 
+    def test_workload_null_keys_match_full_outer_join(self, spark):
+        """NULL instance or table keys never match across the reference
+        view's FULL OUTER JOIN, so such groups stay one row per side; the
+        one-aggregation classifier must return exactly the join's rows."""
+        rows = [
+            # (instance_id, query_type, read_table_id, write_table_id)
+            (1, "select", 10, None),
+            (1, "select", 10, None),
+            (1, "update", None, 10),
+            (1, "select", None, None),  # NULL read table
+            (1, "select", None, 7),
+            (1, "update", 5, None),  # NULL write table
+            (1, "delete", None, None),
+            (None, "select", 10, None),  # NULL instance
+            (None, "delete", None, 10),
+            (None, "select", None, None),
+            (None, "update", None, None),
+            (2, "select", 20, None),  # select-only table
+            (2, "delete", None, 30),  # transform-only table
+            (2, "insert", None, 20),  # neither side
+            (2, None, 20, 20),
+        ]
+        out = spark.createDataFrame(
+            rows,
+            "instance_id long, query_type string, read_table_id long, "
+            "write_table_id long",
+        )
+        selects = (
+            out.filter(F.col("query_type") == "select")
+            .groupBy("instance_id", F.col("read_table_id").alias("table_id"))
+            .agg(F.count(F.lit(1)).alias("select_count"))
+        )
+        transforms = (
+            out.filter(F.col("query_type").isin("update", "delete"))
+            .groupBy("instance_id", F.col("write_table_id").alias("table_id"))
+            .agg(F.count(F.lit(1)).alias("transform_count"))
+        )
+        want = selects.join(
+            transforms, on=["instance_id", "table_id"], how="full_outer"
+        ).select("instance_id", "table_id", "transform_count", "select_count")
+        got = wl_ops.tables_workload_count(out)
+        assert got.schema == want.schema
+        key = lambda r: tuple((v is None, v or 0) for v in r)  # noqa: E731
+        assert sorted(map(tuple, got.collect()), key=key) == sorted(
+            map(tuple, want.collect()), key=key
+        )
+        assert want.count() == 9  # NULL-keyed groups: one row per side
+
     def test_analytical_classifier(self, flat_df):
         out = iv_ops.output_table(flat_df, iv_ops.ingestion_intervals(flat_df))
         wl = wl_ops.tables_workload_count(out)

@@ -1032,6 +1032,8 @@ class TestIncrementalHistoricalPipeline:
         got = pipe.read_output()
         flat = spark.read.parquet(src)
         exp = iv_ops.output_table(flat, iv_ops.ingestion_intervals(flat))
+        fields = lambda df: [(f.name, f.dataType) for f in df.schema]  # noqa: E731
+        assert fields(got) == fields(exp)
         key = ["instance_id", "query_id", "arrival_timestamp", "last_write_table_insert"]
         g = got.select(*key).toPandas().sort_values(key).reset_index(drop=True)
         e = exp.select(*key).toPandas().sort_values(key).reset_index(drop=True)
@@ -1041,7 +1043,9 @@ class TestIncrementalHistoricalPipeline:
     def test_batch_replay_is_idempotent(self, spark, tmp_path):
         """foreachBatch is at-least-once: re-running the same (batch_df,
         batch_id) must leave accumulator and output unchanged (the retried
-        batch dynamically overwrites exactly its own partitions)."""
+        batch dynamically overwrites exactly its own partitions), and a
+        replay that touches fewer instances than its first attempt still
+        leaves the one-shot output (the first attempt's partitions stay)."""
         flat_pdf = flat_rows()
         pipe = sp.IncrementalHistoricalPipeline(
             spark,
@@ -1062,6 +1066,52 @@ class TestIncrementalHistoricalPipeline:
         a = out_pdf.sort_values(key).reset_index(drop=True)
         b = replay_pdf.sort_values(key).reset_index(drop=True)
         assert a.equals(b)
+
+        hot = int(flat_pdf["instance_id"].iloc[-1])
+        pipe.process_batch(b1.filter(F.col("instance_id") == hot), 1)
+        flat = spark.createDataFrame(flat_pdf)
+        want = iv_ops.output_table(flat, iv_ops.ingestion_intervals(flat))
+        got = pipe.read_output()
+        assert got.count() == want.count() > 0
+        assert got.exceptAll(want).count() == 0
+
+    def test_empty_batch_writes_no_output(self, spark, tmp_path):
+        import os
+
+        pipe = sp.IncrementalHistoricalPipeline(
+            spark,
+            accumulator_path=str(tmp_path / "acc"),
+            output_path=str(tmp_path / "out"),
+        )
+        empty = spark.createDataFrame(flat_rows()).limit(0)
+        pipe.process_batch(empty, 0)
+        assert not os.path.exists(str(tmp_path / "out"))
+
+    def test_batch_and_read_job_counts(self, spark, tmp_path):
+        """One batch runs at most 3 Spark jobs (accumulator write, output
+        recompute and write) and ``read_output`` none: the touched
+        instances come from a directory listing and both reads give their
+        schema, so nothing is probed or inferred."""
+        flat_pdf = flat_rows()
+        pipe = sp.IncrementalHistoricalPipeline(
+            spark,
+            accumulator_path=str(tmp_path / "acc"),
+            output_path=str(tmp_path / "out"),
+        )
+        pipe.process_batch(spark.createDataFrame(flat_pdf.iloc[:60]), 0)
+        b1 = spark.createDataFrame(flat_pdf.iloc[60:])
+        sc = spark.sparkContext
+
+        def jobs(group: str, fn) -> int:
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setJobGroup(None, None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        assert jobs("hist_batch", lambda: pipe.process_batch(b1, 1)) <= 3
+        assert jobs("hist_read", pipe.read_output) == 0
 
     def test_recompute_bounded_to_touched_partitions(self, spark, tmp_path):
         """A batch touching one instance must (a) read only that instance's
