@@ -32,6 +32,11 @@ def _ensure_session_confs(spark: SparkSession) -> None:
       otherwise refuses to scan (converted to µs below, matching DuckDB).
     * UTC session TZ — timestamp values are defined as naive-UTC
       (SURVEY.md §7.2); both runtime-settable SQL confs.
+
+    The codegen cache size that ``session.get_spark`` sets is a static
+    conf, read once per JVM when Spark's code generator is first used, so
+    it cannot be applied here: a vanilla session keeps Spark's default of
+    100 entries.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")

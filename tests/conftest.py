@@ -22,89 +22,39 @@ from data_engineering_project_utn_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# Two-tier suite (VERDICT r14 #2: the full suite grew to ~800 tests /
-# ~50 min and outran the driver's verify budget — `tests_ok: false` on a
-# TIMEOUT, zero failures).  The default tier skips the tests below —
-# every test that measured ≥ 8 s in the r15 full run (72 tests,
-# ~1650 s ≈ 57 % of the suite's wall time; mostly streaming end-to-end
-# equivalence runs and the heaviest oracle-parity params, which the
-# driver's own 50-query CORRECTNESS sample re-checks independently).
-# Set SPARK_GRAFT_SLOW_TESTS=1 to run EVERYTHING — the freeze-sweep
-# convention (OPTIMIZATION_r15.md records a full-tier pass per freeze).
+# Two-tier suite: the default tier skips the tests below, so that the whole
+# suite stays inside its time budget.  They are the tests that measured
+# >= 8 s (setup + call) in one run of the slow tier on a 4-core box with
+# the session's codegen cache sized by session.get_spark (22 tests, ~430 s
+# of that run's 640 s; the other 49 then ran under 8 s and are back in the
+# default tier): streaming end-to-end equivalence runs, property sweeps and
+# the heaviest oracle-parity params.  Set SPARK_GRAFT_SLOW_TESTS=1 to run
+# everything.
 _SLOW_NODEIDS = frozenset(
     line.strip()
     for line in """
 tests/test_bucketed_join.py::test_pca_balanced_grid_is_balanced_and_prunes
-tests/test_distributed_ntile.py::test_heavy_ties
 tests/test_llm_ops.py::TestDeepComponentClusters::test_round_cost_does_not_grow_with_round_index
-tests/test_llm_ops.py::TestPQResidual::test_residual_beats_flat_on_planted_clusters
 tests/test_oracle_parity.py::test_oracle_parity[llm_combined_dedup_clusters]
-tests/test_oracle_parity.py::test_oracle_parity[llm_editdist_neardup]
-tests/test_oracle_parity.py::test_oracle_parity[llm_graph_triangles_degree]
 tests/test_oracle_parity.py::test_oracle_parity[llm_incremental_snm_fresh_delta]
-tests/test_oracle_parity.py::test_oracle_parity[llm_ivfpq_residual_ann]
-tests/test_oracle_parity.py::test_oracle_parity[llm_knn_cosine]
-tests/test_oracle_parity.py::test_oracle_parity[llm_knn_join]
-tests/test_oracle_parity.py::test_oracle_parity[llm_knn_join_auto]
-tests/test_oracle_parity.py::test_oracle_parity[llm_uncertainty_sample]
 tests/test_properties.py::test_bounded_rank_equals_sampled_rank_law
-tests/test_streaming.py::TestIncrementalDedupStream::test_streamed_snm_union_equals_one_shot
 tests/test_streaming.py::TestSemanticCurationStream::test_semantic_probe_is_asymmetric_and_broadcast
 tests/test_streaming.py::TestSemanticIngestLoop::test_appended_vectors_join_the_probed_corpus
 tests/test_streaming.py::TestSemanticIngestLoop::test_intra_batch_vector_dups_keep_min_id
-tests/test_streaming.py::TestWindowedHLL::test_stream_registers_match_batch_and_estimate
-tests/test_bucketed_join.py::test_bucketed_join_has_no_shuffle
 tests/test_bucketed_join.py::test_deduped_corpus_write_back_bucketed
-tests/test_bucketed_join.py::test_snm_rank_index_probe_no_corpus_exchange
-tests/test_distributed_ntile.py::test_matches_window_ntile[1000-7-16]
-tests/test_distributed_ntile.py::test_more_partitions_than_rows
 tests/test_llm_ops.py::TestDedupProps::test_capped_band_buckets_bound_duplicate_skew
-tests/test_llm_ops.py::TestDedupProps::test_chain_pairing_cluster_recall_boundary_clusters[0]
-tests/test_llm_ops.py::TestDedupProps::test_chain_pairing_cluster_recall_boundary_clusters[3]
-tests/test_llm_ops.py::TestDedupProps::test_chain_pairing_recovers_genuine_duplicate_clusters_exactly
-tests/test_llm_ops.py::TestPrincipalDirectionsK::test_k2_reproduces_gated_pair
-tests/test_llm_ops.py::TestSnmRankIndexProbe::test_blk_pushdown_reaches_index_scan
-tests/test_llm_ops.py::TestSnmRankIndexProbe::test_pushdown_probe_matches_in_memory
-tests/test_llm_ops.py::TestSnmRankIndexProbe::test_streaming_factory_indexed_mode_parity
-tests/test_oracle_parity.py::test_oracle_parity[llm_dedup_golden_record]
-tests/test_oracle_parity.py::test_oracle_parity[llm_dedup_golden_record_at_rest]
-tests/test_oracle_parity.py::test_oracle_parity[llm_embedding_dedup_clusters]
-tests/test_oracle_parity.py::test_oracle_parity[llm_embedding_dedup_clusters_auto]
-tests/test_oracle_parity.py::test_oracle_parity[llm_graph_triangles]
-tests/test_oracle_parity.py::test_oracle_parity[llm_ivf_trained]
-tests/test_oracle_parity.py::test_oracle_parity[llm_ivfpq_rank_eval]
-tests/test_oracle_parity.py::test_oracle_parity[llm_jaccard_prefix_pos]
 tests/test_oracle_parity.py::test_oracle_parity[llm_mmr_topk_ann]
 tests/test_oracle_parity.py::test_oracle_parity[llm_pq_recall_opq]
-tests/test_oracle_parity.py::test_oracle_parity[llm_pq_recall_residual]
-tests/test_oracle_parity.py::test_oracle_parity[llm_pq_recall_trained]
-tests/test_oracle_parity.py::test_oracle_parity[llm_pq_residual_trained]
 tests/test_oracle_parity.py::test_oracle_parity[llm_sorted_neighborhood_multipass]
-tests/test_oracle_parity.py::test_oracle_parity[llm_winnowing]
-tests/test_plans.py::test_graph_family_gates_nonempty[llm_ccnet_assign]
-tests/test_plans.py::test_graph_family_gates_nonempty[llm_ivfpq_residual_bcast]
-tests/test_plans.py::test_graph_family_gates_nonempty[llm_pq_recall_trained]
-tests/test_plans.py::test_partitioning_independence[llm_incremental_snm]
 tests/test_properties.py::test_incremental_semantic_neardup_asymmetry_law
 tests/test_properties.py::test_multipass_snm_superset_of_each_pass
-tests/test_properties.py::test_sorted_neighborhood_equals_bruteforce_window
-tests/test_streaming.py::TestCurationModelArm::test_model_gate_streamed_equals_one_shot
 tests/test_streaming.py::TestDayInTheLife::test_surviving_corpus_matches_one_shot
-tests/test_streaming.py::TestIngestLoop::test_accepted_docs_join_the_probed_corpus
 tests/test_streaming.py::TestIngestLoop::test_compaction_policy_knob
-tests/test_streaming.py::TestIngestLoop::test_crash_between_appends_converges
-tests/test_streaming.py::TestIngestLoop::test_full_replay_is_idempotent_without_ledger
-tests/test_streaming.py::TestIngestLoop::test_ledger_skips_committed_batch
-tests/test_streaming.py::TestLivePlaneEndToEnd::test_live_plane_over_tcp_matches_batch
 tests/test_streaming.py::TestSemanticCurationStream::test_streamed_accept_set_equals_one_shot_with_semantic_arm
 tests/test_streaming.py::TestSemanticDrift::test_planted_drift_triggers_retrain_and_recovers
 tests/test_streaming.py::TestSemanticIngestLoop::test_replay_is_idempotent
 tests/test_streaming.py::TestSemanticIngestLoop::test_semantic_compaction_policy
 tests/test_streaming.py::TestSocketSink::test_sink_roundtrip_over_tcp
-tests/test_streaming.py::TestStreamStreamJoin::test_interval_join_matches_batch
-tests/test_streaming.py::TestStreamStreamJoin::test_join_state_is_interval_bounded
-tests/test_streaming.py::TestWindowedCM::test_stream_counters_match_batch_per_window
-tests/test_streaming.py::TestWindowedQuantileSketch::test_stream_sample_matches_batch_and_bounds_state
 """.strip().splitlines()
 )
 
@@ -113,7 +63,7 @@ def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS") == "1":
         return
     skip_slow = pytest.mark.skip(
-        reason="slow tier (>=10s): set SPARK_GRAFT_SLOW_TESTS=1 for the full suite"
+        reason="slow tier (>=8s): set SPARK_GRAFT_SLOW_TESTS=1 for the full suite"
     )
     for item in items:
         if item.nodeid in _SLOW_NODEIDS:

@@ -44,6 +44,11 @@ def test_time_records_reps_and_jobs(run_tool, spark, sf_dir):
     assert rec["jobs"] >= 1
 
 
+def test_time_warm_rep_compiles_nothing(run_tool, spark, sf_dir):
+    records, _ = run_tool.run(spark, "time", sf_dir, CHEAP[1:], reps=2)
+    assert records[CHEAP[1]]["compiles"] == 0  # the first rep's classes stay cached
+
+
 def test_plan_counts_exchanges_and_writes_explain(run_tool, spark, sf_dir, tmp_path):
     records, _ = run_tool.run(spark, "plan", sf_dir, CHEAP[:1], out=str(tmp_path))
     rec = records[CHEAP[0]]

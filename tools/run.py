@@ -14,9 +14,14 @@ clears Spark's cache, builds the query under the job group
 * ``time`` computes the result in full through the ``noop`` sink, ``--reps``
   times (``count()`` would let the optimizer prune columns and whole
   operators), and records each rep's seconds, their minimum and median,
-  and the Spark jobs one build-and-compute launches.  Job counts do not
-  depend on machine load, so they are the evidence for a change that
-  removes jobs from a driver loop.
+  the Spark jobs one build-and-compute launches (``jobs``) and the classes
+  Spark's code generator compiled for it (``compiles``), both of the last
+  rep.  Job counts do not depend on machine load, so they are the evidence
+  for a change that removes jobs from a driver loop.  ``compiles`` is the
+  rise of ``CodegenMetrics.METRIC_COMPILATION_TIME``'s count, which Spark
+  bumps once per generated class it compiles, that is once per miss of
+  its JVM-wide codegen cache; a warm rep whose classes all stay cached
+  reads 0.
 * ``check`` compares the result with the query's DuckDB oracle
   (``tests.oracle_harness.compare``: row count, column set and an
   order-insensitive full-precision value hash).
@@ -76,19 +81,23 @@ def _build(spark, q, sf_dir):
 
 def _time(spark, q, sf_dir, group, reps, out):
     tracker = spark.sparkContext.statusTracker()
+    compiled = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     secs = []
     for _ in range(reps):
         before = set(tracker.getJobIdsForGroup(group))
+        compiled_before = compiled.getCount()
         t0 = time.perf_counter()
         _build(spark, q, sf_dir).write.format("noop").mode("overwrite").save()
         secs.append(round(time.perf_counter() - t0, 3))
         jobs = len(set(tracker.getJobIdsForGroup(group)) - before)
+        compiles = compiled.getCount() - compiled_before
     return {
         "status": "OK",
         "reps": secs,
         "min": min(secs),
         "median": round(statistics.median(secs), 3),
         "jobs": jobs,  # of the last rep
+        "compiles": compiles,  # of the last rep
     }
 
 
