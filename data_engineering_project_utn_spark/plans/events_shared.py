@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_project_utn_spark.operators import intervals as iv_ops
+from data_engineering_project_utn_spark.sources.io import file_status
 from data_engineering_project_utn_spark.tables import load_table
 
 FLAT_CTE = """
@@ -130,26 +131,39 @@ def events_as_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OUTPUT_TABLE_CACHE: dict[tuple[int, str], DataFrame] = {}
+# One entry per sf_dir: the events file's ``file_status`` and the persisted
+# output table built from it.
+_OUTPUT_TABLE_CACHE: dict[str, tuple[tuple | None, DataFrame]] = {}
 
 
 def _output_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """output_table is the shared input of five registered queries, and each
     consumer references it more than once in its own plan — without
     persistence Spark recomputes the window+union+dedup chain per reference.
-    Memoize one persisted copy per (session, sf_dir); inputs are immutable
-    parquet, so reuse is semantics-preserving (the cache() the reference
-    gets from DuckDB table materialization, SURVEY §4.1)."""
-    key = (id(spark), sf_dir)
-    memo = _OUTPUT_TABLE_CACHE.get(key)
-    # the memo lives as long as Spark's cache entry: after
+    Memoize one persisted copy per sf_dir, for one session and one status of
+    the events file (the cache() the reference gets from DuckDB table
+    materialization, SURVEY §4.1).
+
+    A rebuild for another session or a rewritten events file replaces the
+    entry and unpersists the old copy first: Spark's cache matches a new
+    frame to a cached one by plan, and a rewritten file keeps its plan, so
+    the old copy would otherwise be served for the new rows.  A stopped
+    session's copy went with its SparkContext and is only dropped."""
+    key = file_status(f"{sf_dir}/events.parquet")
+    entry = _OUTPUT_TABLE_CACHE.get(sf_dir)
+    # the memo also lives only as long as Spark's cache entry: after
     # spark.catalog.clearCache() (or an unpersist) the frame's storage
     # level reads NONE — ``is_cached`` does not reset — and a rebuild
     # re-persists it
-    if memo is None or memo.storageLevel == StorageLevel.NONE:
-        flat = events_as_flat(spark, sf_dir)
-        memo = iv_ops.output_table(flat, iv_ops.ingestion_intervals(flat)).persist()
-        _OUTPUT_TABLE_CACHE[key] = memo
+    if entry is not None:
+        old_key, old = entry
+        if old.sparkSession is spark and old_key == key and old.storageLevel != StorageLevel.NONE:
+            return old
+        if old.sparkSession.sparkContext is spark.sparkContext:
+            old.unpersist()
+    flat = events_as_flat(spark, sf_dir)
+    memo = iv_ops.output_table(flat, iv_ops.ingestion_intervals(flat)).persist()
+    _OUTPUT_TABLE_CACHE[sf_dir] = (key, memo)
     return memo
 
 

@@ -5,12 +5,19 @@ messages, and DuckDB tables; here every format is a declarative Spark
 reader/writer and "tables" are temp views.  The streaming twins of S4/S5
 live in ``streaming/pipeline.py``.
 
-Scale notes: all readers hand Catalyst a schema up front (no inferSchema
-scan), so filters/pruning push into the file scan; the JSON-lines reader
-routes through ``clean_redset`` — one codegen'd projection, no Python.
+Scale notes: readers hand Catalyst a schema up front, so filters/pruning
+push into the file scan; a parquet file read without one has its footer
+inferred once per file status (``read_parquet``), not once per read; the
+JSON-lines reader routes through ``clean_redset`` — one codegen'd
+projection, no Python.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+import stat
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,8 +58,57 @@ def topic_view(df: DataFrame, topic: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# SQL confs whose values change the schema Spark infers from a parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+# Inferred schemas of single parquet files: one entry per (absolute path,
+# inference conf values), holding the ``file_status`` it was inferred at,
+# the idiom of ``plans/staleness.py``'s digest caches.  A rewritten file
+# fails the status check and is inferred again, replacing its entry, so
+# nothing ever has to clear this.  A rewrite with the same size and the
+# same mtime in ns is the one case it cannot see.  Values are StructTypes,
+# never DataFrames, so no entry outlives or pins a session.  Two threads
+# that miss together both infer; each entry is one tuple stored whole, so
+# a schema is never paired with another read's status.
+_SCHEMAS: dict[tuple, tuple[tuple[str, int, int], T.StructType]] = {}
+
+
+def file_status(path: str) -> tuple[str, int, int] | None:
+    """``(absolute path, mtime_ns, size)`` of one local file; None for what
+    ``os.stat`` cannot describe as one file: a directory dataset, a URI
+    with a scheme, a missing path."""
+    if urlparse(path).scheme:
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return os.path.abspath(path), st.st_mtime_ns, st.st_size
+
+
 def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """S1/S2 parquet scan (`producer_Final.py:102`)."""
+    """S1/S2 parquet scan (`producer_Final.py:102`).
+
+    Without ``schema``, a single local file's schema is inferred once per
+    file status and inference confs, and later reads pass it to
+    ``spark.read.schema``: footer inference is a Spark job, a schema'd read
+    runs none.  A directory dataset or a URI falls back to plain inference."""
+    status = file_status(path) if schema is None else None
+    if status is not None:
+        key = (status[0], tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+        memo = _SCHEMAS.get(key)
+        if memo is None or memo[0] != status:
+            # stat before inferring: a rewrite in between leaves an entry
+            # whose status is already stale, never a wrong hit
+            memo = _SCHEMAS[key] = (status, spark.read.parquet(path).schema)
+        schema = memo[1]
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
@@ -181,9 +237,6 @@ def _clear_orphan_dir(spark: SparkSession, name: str) -> None:
     """Remove a warehouse directory left behind without a catalog entry
     (a fresh session's in-memory catalog forgets tables; their files
     survive and would collide with the next CTAS or RENAME)."""
-    import os
-    import shutil
-
     wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     for prefix in ("file://", "file:"):
         if wh.startswith(prefix):
@@ -263,8 +316,6 @@ def data_file_count(spark: SparkSession, name: str) -> int:
     after each append (``append_bucketed_table`` adds one file per
     touched bucket per call; probe cost grows with file count through
     per-file footer/open overhead — measured in SCALE.md r14)."""
-    import os
-
     loc = table_location(spark, name)
     for prefix in ("file://", "file:"):
         if loc.startswith(prefix):
@@ -292,9 +343,6 @@ def compact_partitioned_dir(
     recovers).  ``repartition(col)`` puts each partition value in one
     shuffle partition, so ``partitionBy`` emits exactly one file per
     value — the read-optimal layout the per-trigger appends erode."""
-    import os
-    import shutil
-
     tmp, aside = f"{path}__compacting", f"{path}__precompact"
     if not os.path.exists(path) and os.path.exists(aside):
         os.rename(aside, path)  # crash recovery: restore the aside

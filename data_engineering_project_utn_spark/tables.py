@@ -1,7 +1,11 @@
 """Loaders for the driver-provided parquet tables (TESTDATA.md).
 
-All loads are plain ``spark.read.parquet`` — schema lives in the files,
-Catalyst handles column pruning / predicate pushdown into the scan.
+The schema lives in the files.  Every load goes through
+``sources.io.read_parquet``, which infers a table file's schema once per
+file status and then passes it to ``spark.read.schema``, so a rebuild of a
+query over unchanged tables runs no footer-inference job; a rewritten file
+is inferred again.  Catalyst handles column pruning / predicate pushdown
+into the scan.
 """
 
 from __future__ import annotations
@@ -9,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from data_engineering_project_utn_spark.sources.io import read_parquet
 
 TABLE_NAMES = (
     "region",
@@ -44,7 +50,7 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     # Nanosecond-timestamp columns surface as long (see session.py conf);
     # truncate ns→µs exactly like DuckDB does when reading the same file.
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":

@@ -67,6 +67,31 @@ def test_output_table_memo_follows_spark_cache(spark, sf_dir):
     assert sorted(map(tuple, again.collect())) == rows
 
 
+def test_output_table_memo_follows_a_rewritten_events_file(spark, sf_dir, tmp_path):
+    """A rebuild after events.parquet is rewritten returns the new rows, equal
+    to a cold build on a fresh copy.  The rewritten file keeps the old plan,
+    so this also needs the replaced frame unpersisted: Spark's cache would
+    serve its rows to the new frame."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    build = QUERIES["ri_output_freshness"].build
+    live, fresh = tmp_path / "live", tmp_path / "fresh"
+    live.mkdir()
+    fresh.mkdir()
+    shutil.copy(f"{sf_dir}/events.parquet", live / "events.parquet")
+    full = build(spark, str(live)).count()
+
+    events = pq.read_table(live / "events.parquet")
+    half = events.slice(0, events.num_rows // 2)
+    pq.write_table(half, live / "events.parquet")
+    pq.write_table(half, fresh / "events.parquet")
+    rebuilt = sorted(map(tuple, build(spark, str(live)).collect()))
+    assert rebuilt == sorted(map(tuple, build(spark, str(fresh)).collect()))
+    assert 0 < len(rebuilt) < full
+
+
 def test_star_join_broadcasts_dimensions(spark, sf_dir):
     """nation/region/supplier are broadcast-side; lineitem never shuffles
     through a nested loop."""

@@ -49,6 +49,13 @@ def test_time_warm_rep_compiles_nothing(run_tool, spark, sf_dir):
     assert records[CHEAP[1]]["compiles"] == 0  # the first rep's classes stay cached
 
 
+def test_time_warm_rep_builds_without_jobs(run_tool, spark, sf_dir):
+    records, _ = run_tool.run(spark, "time", sf_dir, CHEAP[1:], reps=2)
+    rec = records[CHEAP[1]]
+    # its four load_table calls reuse the schemas the first rep inferred
+    assert rec["build_jobs"] == 0 and rec["jobs"] >= 1
+
+
 def test_plan_counts_exchanges_and_writes_explain(run_tool, spark, sf_dir, tmp_path):
     records, _ = run_tool.run(spark, "plan", sf_dir, CHEAP[:1], out=str(tmp_path))
     rec = records[CHEAP[0]]

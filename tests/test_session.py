@@ -1,8 +1,12 @@
-"""session.get_spark sizes Spark's codegen cache to the engine's working set.
+"""Session lifecycle checks, each in a fresh Python process with its own JVM.
 
-Spark builds its generated-class cache once per JVM, from the SQL conf of
-the first thread that compiles.  The shared test session's JVM has long
-done that, so the check runs in a fresh Python process with its own JVM.
+* session.get_spark sizes Spark's codegen cache to the engine's working
+  set.  Spark builds its generated-class cache once per JVM, from the SQL
+  conf of the first thread that compiles; the shared test session's JVM
+  has long done that.
+* The package's memos survive ``spark.stop()`` and a new session without
+  serving or pinning the stopped session's frames; stopping the shared
+  test session would end every later test.
 """
 
 from __future__ import annotations
@@ -64,3 +68,48 @@ def test_codegen_cache_holds_a_working_set_above_spark_default(sf_dir):
     counts = json.loads(proc.stdout.strip().splitlines()[-1])
     assert counts["first"] > SPARK_DEFAULT_ENTRIES, counts  # the pass outgrows the default
     assert counts["second"] == 0, counts  # and every class is reused warm
+
+
+MEMO_SCRIPT = textwrap.dedent(
+    """
+    import json, sys
+    sys.path.insert(0, {repo!r})
+    from data_engineering_project_utn_spark.plans import all_queries
+    from data_engineering_project_utn_spark.plans.events_shared import _OUTPUT_TABLE_CACHE
+    from data_engineering_project_utn_spark.session import get_spark
+    from data_engineering_project_utn_spark.tables import load_table
+
+    def session():
+        spark = get_spark(
+            app_name="memo-after-stop", master="local[2]", shuffle_partitions=2,
+            extra_conf={{"spark.driver.memory": "1g", "spark.ui.showConsoleProgress": "false"}},
+        )
+        spark.sparkContext.setLogLevel("ERROR")
+        return spark
+
+    def builds(spark):
+        return [
+            sorted(map(repr, df.collect()))
+            for df in (all_queries()["ri_output_freshness"].build(spark, {sf_dir!r}),
+                       load_table(spark, {sf_dir!r}, "orders"))
+        ]
+
+    spark = session()
+    cold = builds(spark)
+    spark.stop()
+    spark = session()
+    warm = builds(spark)
+    stale = [k for k, (_, df) in _OUTPUT_TABLE_CACHE.items() if df.sparkSession is not spark]
+    print(json.dumps({{"equal": warm == cold, "rows": [len(r) for r in warm], "stale": stale}}))
+    spark.stop()
+    """
+)
+
+
+def test_memos_reused_after_stop_serve_the_new_session(sf_dir):
+    script = MEMO_SCRIPT.format(repo=REPO, sf_dir=sf_dir)
+    proc = subprocess.run([sys.executable, "-c", script], capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["equal"] and min(out["rows"]) > 0, out  # equal to the cold builds
+    assert out["stale"] == [], out  # no frame of the stopped session is kept

@@ -2,13 +2,17 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from data_engineering_project_utn_spark.schema import REDSET_SCHEMA
 from data_engineering_project_utn_spark.sources import io as sio
+from data_engineering_project_utn_spark.tables import load_table
 from tests.fixtures import redset_raw_rows
 
 
@@ -180,3 +184,82 @@ def test_table_location_matches_describe(spark):
     )
     assert table_location(spark, name) == via_describe
     spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+
+
+# ---------------------------------------------------------------------------
+# The inferred-schema memo behind read_parquet / tables.load_table
+# ---------------------------------------------------------------------------
+
+
+def _jobs(spark, fn, group):
+    """(fn's result, Spark jobs fn launched); the memo's hit is a read that
+    runs no footer-inference job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_follows_a_rewritten_file(spark, tmp_path):
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": pa.array([0, 1], pa.int64())}), path)
+    assert load_table(spark, str(tmp_path), "region").collect() == [(0,), (1,)]
+    _, jobs = _jobs(spark, lambda: load_table(spark, str(tmp_path), "region"), "memo-rewrite-hit")
+    assert jobs == 0  # unchanged file: the memo hits
+
+    pq.write_table(pa.table({"r_name": ["AFRICA", "ASIA", "EUROPE"], "r_w": [0.5, 1.5, 2.5]}), path)
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.dtypes == [("r_name", "string"), ("r_w", "double")]
+    assert sorted(df.collect()) == [("AFRICA", 0.5), ("ASIA", 1.5), ("EUROPE", 2.5)]
+
+
+def test_memo_hit_keeps_the_events_timestamp_fixups(spark, tmp_path):
+    """ns ``ts`` (a bigint under nanosAsLong) becomes µs TIMESTAMP, and a µs
+    non-UTC column (TIMESTAMP_NTZ) becomes TIMESTAMP, on a hit as on a miss."""
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array([1_700_000_000_123_456_789, 1_700_000_001_000_000_999], pa.timestamp("ns")),
+            "seen": pa.array([dt.datetime(2024, 1, 2, 3, 4, 5, 6), None], pa.timestamp("us")),
+        }),
+        tmp_path / "events.parquet",
+    )
+    cold = load_table(spark, str(tmp_path), "events")
+    warm, jobs = _jobs(spark, lambda: load_table(spark, str(tmp_path), "events"), "memo-fixups-hit")
+    assert jobs == 0
+    assert warm.dtypes == cold.dtypes == [("event_id", "bigint"), ("ts", "timestamp"), ("seen", "timestamp")]
+    rows = warm.selectExpr("event_id", "unix_micros(ts)", "unix_micros(seen)").collect()
+    assert rows == [(1, 1_700_000_000_123_456, 1_704_164_645_000_006), (2, 1_700_000_001_000_000, None)]
+    assert rows == cold.selectExpr("event_id", "unix_micros(ts)", "unix_micros(seen)").collect()
+
+
+def test_partitioned_directory_falls_back_to_inference(spark, tmp_path):
+    df = spark.createDataFrame(redset_raw_rows(40))
+    sio.write_parquet(df, str(tmp_path / "pp"), partition_by=["query_type"])
+    assert sio.file_status(str(tmp_path / "pp")) is None
+    for _ in range(2):
+        back = sio.read_parquet(spark, str(tmp_path / "pp"))
+        assert set(back.columns) == set(df.columns)
+        got = sorted(map(tuple, back.select(*df.columns).collect()))
+        assert got == sorted(map(tuple, df.collect()))
+
+
+def test_changing_an_inference_conf_misses_the_memo(spark, tmp_path):
+    path = str(tmp_path / "ntz.parquet")
+    pq.write_table(pa.table({"t": pa.array([dt.datetime(2024, 1, 1)], pa.timestamp("us"))}), path)
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        assert sio.read_parquet(spark, path).dtypes == [("t", "timestamp_ntz")]
+        spark.conf.set(key, "false")
+        df, jobs = _jobs(spark, lambda: sio.read_parquet(spark, path), "memo-conf-miss")
+        assert jobs >= 1 and df.dtypes == [("t", "timestamp")]
+        spark.conf.set(key, "true")
+        df, jobs = _jobs(spark, lambda: sio.read_parquet(spark, path), "memo-conf-back")
+        assert jobs == 0 and df.dtypes == [("t", "timestamp_ntz")]
+    finally:
+        spark.conf.set(key, prev)

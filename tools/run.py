@@ -14,10 +14,12 @@ clears Spark's cache, builds the query under the job group
 * ``time`` computes the result in full through the ``noop`` sink, ``--reps``
   times (``count()`` would let the optimizer prune columns and whole
   operators), and records each rep's seconds, their minimum and median,
-  the Spark jobs one build-and-compute launches (``jobs``) and the classes
-  Spark's code generator compiled for it (``compiles``), both of the last
-  rep.  Job counts do not depend on machine load, so they are the evidence
-  for a change that removes jobs from a driver loop.  ``compiles`` is the
+  the Spark jobs one build-and-compute launches (``jobs``), those of them
+  launched inside ``q.build`` (``build_jobs``, run under the job group
+  ``run:time:<name>:build``) and the classes Spark's code generator
+  compiled for it (``compiles``), all of the last rep.  Job counts do not
+  depend on machine load, so they are the evidence for a change that
+  removes jobs from a driver loop or from a build.  ``compiles`` is the
   rise of ``CodegenMetrics.METRIC_COMPILATION_TIME``'s count, which Spark
   bumps once per generated class it compiles, that is once per miss of
   its JVM-wide codegen cache; a warm rep whose classes all stay cached
@@ -80,16 +82,23 @@ def _build(spark, q, sf_dir):
 
 
 def _time(spark, q, sf_dir, group, reps, out):
-    tracker = spark.sparkContext.statusTracker()
-    compiled = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    compiled = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    build_group = f"{group}:build"
     secs = []
     for _ in range(reps):
         before = set(tracker.getJobIdsForGroup(group))
+        build_before = set(tracker.getJobIdsForGroup(build_group))
         compiled_before = compiled.getCount()
         t0 = time.perf_counter()
-        _build(spark, q, sf_dir).write.format("noop").mode("overwrite").save()
+        sc.setJobGroup(build_group, q.name)  # run() clears the group if this raises
+        df = _build(spark, q, sf_dir)
+        sc.setJobGroup(group, q.name)
+        df.write.format("noop").mode("overwrite").save()
         secs.append(round(time.perf_counter() - t0, 3))
-        jobs = len(set(tracker.getJobIdsForGroup(group)) - before)
+        build_jobs = len(set(tracker.getJobIdsForGroup(build_group)) - build_before)
+        jobs = build_jobs + len(set(tracker.getJobIdsForGroup(group)) - before)
         compiles = compiled.getCount() - compiled_before
     return {
         "status": "OK",
@@ -97,6 +106,7 @@ def _time(spark, q, sf_dir, group, reps, out):
         "min": min(secs),
         "median": round(statistics.median(secs), 3),
         "jobs": jobs,  # of the last rep
+        "build_jobs": build_jobs,  # of the last rep
         "compiles": compiles,  # of the last rep
     }
 
