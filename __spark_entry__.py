@@ -7,7 +7,8 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All queries live in ``data_engineering_project_utn_spark.plans`` — one
 registry entry per implemented operator (SURVEY.md §2 + LLM-pipeline ops),
-each with its DuckDB oracle twin.  See plans/registry.py for the
+each with its DuckDB oracle twin.  ``queries()`` and ``oracle_sql()``
+list them in registration order.  See plans/registry.py for the
 determinism contract that makes Spark and DuckDB hash-match bit-exactly.
 """
 

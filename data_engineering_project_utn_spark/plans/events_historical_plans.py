@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from data_engineering_project_utn_spark.operators import histogram as hist_ops
 from data_engineering_project_utn_spark.operators import intervals as iv_ops
 from data_engineering_project_utn_spark.operators import workload as wl_ops
-from data_engineering_project_utn_spark.plans import events_shared as _ev
 from data_engineering_project_utn_spark.plans.events_shared import (
     INTERVALS_CTE,
     OUTPUT_CTE,
@@ -398,7 +397,6 @@ register(
 )(_decile_histogram(distributed=True))
 register(
     "ri_decile_histogram_window",
-    priority=1,
     oracle=_DECILE_ORACLE,
     tags=("reference", "historical", "ntile"),
 )(_decile_histogram(distributed=False))
@@ -406,7 +404,6 @@ register(
 
 @register(
     "ri_decile_percentrank",
-    priority=1,
     oracle=must_replace(
         _DECILE_ORACLE,
         """NTILE(10) OVER (ORDER BY relative_to_next, instance_id, query_id, read_table_id)

@@ -202,7 +202,6 @@ def rl_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_mmss_format",
-    priority=1,
     oracle="""
     WITH d AS (SELECT event_id, CAST(FLOOR(value * 1000) AS BIGINT) AS duration_ms
                FROM events)
@@ -343,7 +342,6 @@ def rl_user_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_duration_percentiles",
-    priority=1,
     oracle="""
     SELECT event_type,
            COUNT(*) AS n,
@@ -379,7 +377,6 @@ _EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 @register(
     "rl_hourly_type_pivot",
-    priority=1,
     oracle="SELECT EXTRACT(hour FROM ts) AS hour, "
     + ", ".join(
         f"COUNT(CASE WHEN event_type = '{t}' THEN 1 END) AS {t}"
@@ -432,7 +429,6 @@ def _profile_oracle() -> str:
 
 @register(
     "rl_events_profile",
-    priority=1,
     oracle=_profile_oracle(),
     tags=("reference", "profiling", "introspection"),
 )
@@ -451,7 +447,6 @@ def rl_events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_ema_scan",
-    priority=1,
     oracle="""
     SELECT COUNT(value) AS n_obs, TRUE AS scan_matches_sequential FROM events
     """,
@@ -489,7 +484,6 @@ def rl_ema_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_producer_batches",
-    priority=1,
     oracle="""
     WITH ranked AS (
         SELECT event_id, ts,
@@ -532,7 +526,6 @@ def rl_producer_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_user_ema_scan",
-    priority=1,
     oracle="""
     SELECT COUNT(DISTINCT user_id) AS n_keys, TRUE AS scan_matches_sequential
     FROM events
@@ -607,7 +600,6 @@ def rl_trailing_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_user_sessions",
-    priority=1,
     oracle="""
     WITH marked AS (
         SELECT user_id, event_id, ts,
@@ -753,7 +745,6 @@ def rl_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_event_transitions",
-    priority=2,
     oracle="""
     WITH seq AS (SELECT user_id, event_type,
                         lag(event_type) OVER (PARTITION BY user_id
@@ -807,7 +798,6 @@ def rl_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_cohort_retention",
-    priority=2,
     oracle="""
     WITH firsts AS (SELECT user_id, CAST(MIN(ts) AS DATE) AS cohort_day
                     FROM events GROUP BY user_id),
@@ -874,7 +864,6 @@ def rl_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_funnel",
-    priority=2,
     oracle="""
     WITH t1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
                 WHERE event_type = 'view' GROUP BY user_id),
@@ -939,7 +928,6 @@ def rl_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_rfm_segments",
-    priority=2,
     oracle="""
     WITH per AS (
         SELECT user_id, MAX(ts) AS last_ts,

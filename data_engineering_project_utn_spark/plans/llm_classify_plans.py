@@ -1,8 +1,5 @@
 """Classifier plan family: in-engine trained linear probe + k-NN
 label-vote eval over the embeddings table (llm/classify.py).
-
-Family split per the staleness-ledger design (plans/llm.py): editing
-this module stales only the classifier gates.
 """
 
 from __future__ import annotations
@@ -13,9 +10,6 @@ from pyspark.sql import functions as F
 from data_engineering_project_utn_spark.llm import classify as cl
 from data_engineering_project_utn_spark.llm.compute import parallelize_compute
 from data_engineering_project_utn_spark.persist import track_persist
-
-# module-object import so the staleness closure includes llm_shared.py
-from data_engineering_project_utn_spark.plans import llm_shared as _llm_shared  # noqa: F401
 from data_engineering_project_utn_spark.plans.llm_shared import (
     _QUALITY_CTES,
     _cos,

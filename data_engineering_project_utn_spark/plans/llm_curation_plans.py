@@ -10,10 +10,6 @@ from data_engineering_project_utn_spark.llm import dedup as dd
 from data_engineering_project_utn_spark.llm import sampling as sa
 from data_engineering_project_utn_spark.llm import text as tx
 from data_engineering_project_utn_spark.llm.compute import parallelize_compute
-# module-object import so the staleness closure includes llm_shared.py —
-# the fragment names below are plain strings, which the closure BFS cannot
-# follow on their own (plans/staleness.py walks modules and callables)
-from data_engineering_project_utn_spark.plans import llm_shared as _llm_shared  # noqa: F401
 from data_engineering_project_utn_spark.plans.llm_shared import (
     _LANGID_CTES,
     _MINHASH_CTES,
@@ -28,7 +24,6 @@ from data_engineering_project_utn_spark.tables import load_table
 
 @register(
     "llm_corpus_report",
-    priority=1,
     oracle=f"""
     WITH tk AS (SELECT doc_id, lang, source, text, {_TOKS} AS t FROM documents)
     SELECT lang, source,
@@ -67,7 +62,6 @@ _SAMPLE_DEFAULT = 0.1
 
 @register(
     "llm_quality_topk_per_lang",
-    priority=1,
     oracle="WITH " + _QUALITY_CTES + """
     SELECT lang, doc_id, quality, rank FROM (
         SELECT lang, doc_id, quality,
@@ -97,7 +91,6 @@ def llm_quality_topk_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_stratified_sample",
-    priority=1,
     oracle=f"""
     SELECT doc_id, lang, source FROM documents
     WHERE md5(CAST(doc_id AS VARCHAR)) <
@@ -123,7 +116,6 @@ def llm_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_shard_assignment",
-    priority=1,
     oracle="""
     SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS shuffle_key,
            CAST((row_number() OVER (ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) - 1) % 8
@@ -158,7 +150,6 @@ _PACK_CTES = f"""t AS (SELECT source AS stream, doc_id,
 
 @register(
     "llm_pack_sequences",
-    priority=1,
     oracle=f"""
     WITH {_PACK_CTES}
     SELECT stream, doc_id, n_tokens, tokens_before,
@@ -211,7 +202,6 @@ def llm_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_temperature_mixture",
-    priority=2,
     oracle=rf"""
     WITH per AS (
         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -247,7 +237,6 @@ def llm_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_temperature_mixture_t25",
-    priority=1,
     oracle=rf"""
     WITH per AS (
         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -507,7 +496,6 @@ def llm_mixture_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_dsir_importance",
-    priority=2,
     oracle=f"""
     WITH tk AS (SELECT doc_id, lang, {_TOKS} AS t FROM documents),
     bgs AS (SELECT doc_id, (lang = 'en') AS is_tgt, t[i] || ' ' || t[i + 1] AS bg
@@ -562,7 +550,6 @@ def llm_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_stratified_exact",
-    priority=2,
     oracle="""
     WITH ranked AS (SELECT doc_id, lang, source,
                            row_number() OVER (PARTITION BY lang
@@ -602,7 +589,6 @@ def llm_stratified_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_ccnet_buckets",
-    priority=2,
     oracle=f"""
     WITH {_SURPRISAL_CTES},
     {_LANGID_CTES},
@@ -711,7 +697,6 @@ def llm_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_ccnet_assign",
-    priority=2,
     oracle=f"""
     WITH {_SURPRISAL_CTES},
     {_LANGID_CTES},
@@ -815,7 +800,6 @@ def llm_ccnet_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_packing_waste",
-    priority=2,
     oracle=f"""
     WITH {_PACK_CTES},
     per AS (SELECT stream, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -874,7 +858,6 @@ def llm_packing_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_gopher_filters",
-    priority=2,
     oracle=f"""
     WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
     m AS (SELECT doc_id,
@@ -974,7 +957,6 @@ _CHUNK_ORACLE = f"""
 
 @register(
     "llm_chunk_documents",
-    priority=1,
     oracle=_CHUNK_ORACLE,
     tags=("llm", "curation", "chunking"),
 )

@@ -9,10 +9,6 @@ from pyspark.sql import functions as F
 from data_engineering_project_utn_spark.llm import dedup as dd
 from data_engineering_project_utn_spark.llm import text as tx
 from data_engineering_project_utn_spark.llm.compute import parallelize_compute
-# module-object import so the staleness closure includes llm_shared.py —
-# the fragment names below are plain strings, which the closure BFS cannot
-# follow on their own (plans/staleness.py walks modules and callables)
-from data_engineering_project_utn_spark.plans import llm_shared as _llm_shared  # noqa: F401
 from data_engineering_project_utn_spark.plans.llm_shared import (
     _MINHASH_CTES,
     _QUALITY_CTES,
@@ -137,7 +133,6 @@ def _minhash_neardup(bucketed: bool) -> Builder:
 
 register(
     "llm_minhash_neardup",
-    priority=0,
     oracle=_MINHASH_NEARDUP_ORACLE,
     tags=("llm", "dedup", "minhash", "bench"),
 )(_minhash_neardup(bucketed=False))
@@ -357,7 +352,6 @@ def llm_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_bottomk_neardup",
-    priority=0,
     oracle="WITH " + must_replace(
         _MINHASH_CTES,
         """sig AS (SELECT doc_id, shset,
@@ -391,7 +385,6 @@ def llm_bottomk_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_minhash_capped",
-    priority=1,
     oracle="WITH " + must_replace(
         _MINHASH_CTES,
         """cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -436,7 +429,6 @@ def llm_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_dedup_clusters",
-    priority=0,
     oracle="WITH RECURSIVE " + _MINHASH_CTES + """
     , pairs AS (SELECT doc_a, doc_b FROM j WHERE jaccard > 0.5),
     """ + _reach_ctes("pairs") + """
@@ -458,7 +450,6 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_ngram_jaccard",
-    priority=0,
     oracle=f"""
     WITH tk AS (SELECT doc_id, lang, source, {_TOKS} AS t FROM documents),
     sh AS (SELECT doc_id, lang, source, list_distinct({_SH3}) AS s FROM tk),
@@ -502,7 +493,6 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_simhash",
-    priority=0,
     oracle=f"""
     WITH tk AS (SELECT doc_id, list_distinct({_TOKS}) AS toks FROM documents),
     tb AS (SELECT doc_id,
@@ -587,7 +577,6 @@ def _incremental_dedup(verifier: str, at_rest: bool) -> Builder:
 
 register(
     "llm_incremental_dedup",
-    priority=1,
     oracle=_INCR_DEDUP_ORACLE,
     tags=("llm", "dedup", "incremental"),
 )(_incremental_dedup("jaccard", at_rest=False))
@@ -944,7 +933,6 @@ def llm_hot_band_suspects(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_decontamination",
-    priority=1,
     oracle=f"""
     WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
     sh AS (SELECT doc_id, list_distinct(list_transform({_SH3}, s -> md5(s))) AS s
@@ -997,7 +985,6 @@ _SPAN_CTES = f"""tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
 
 @register(
     "llm_dup_spans",
-    priority=2,
     oracle=f"""
     WITH {_SPAN_CTES},
     st AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
@@ -1030,7 +1017,6 @@ def llm_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_dup_span_list",
-    priority=2,
     oracle=f"""
     WITH {_SPAN_CTES}
     SELECT doc_id, start_pos, end_pos,
@@ -1057,7 +1043,6 @@ def llm_dup_span_list(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_span_scrub",
-    priority=2,
     oracle=f"""
     WITH {_SPAN_CTES},
     tokpos AS (SELECT doc_id, unnest(t) AS tok,
@@ -1107,7 +1092,6 @@ def llm_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_incremental_dup_spans",
-    priority=2,
     oracle=f"""
     WITH {_SPAN_CTES},
     st AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
@@ -1143,7 +1127,6 @@ def llm_incremental_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_rrf_ensemble",
-    priority=2,
     oracle="WITH " + _MINHASH_CTES + f""",
     mh AS MATERIALIZED (
         SELECT doc_a, doc_b,
@@ -1247,7 +1230,6 @@ def llm_rrf_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_rrf_neighborhood",
-    priority=2,
     oracle="WITH " + _MINHASH_CTES + f""",
     mh AS MATERIALIZED (
         SELECT doc_a, doc_b,
@@ -1369,7 +1351,6 @@ _SPAN_CM_CTES = must_replace(
 
 @register(
     "llm_dup_spans_cm",
-    priority=2,
     oracle=f"""
     WITH {_SPAN_CM_CTES},
     st AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
@@ -1465,7 +1446,6 @@ def _jaccard_prefix_join(positional: bool) -> Builder:
 
 register(
     "llm_jaccard_prefix_join",
-    priority=2,
     oracle=_PREFIX_JACCARD_ORACLE,
     tags=("llm", "dedup", "jaccard"),
 )(_jaccard_prefix_join(positional=False))
@@ -1473,7 +1453,6 @@ register(
 
 @register(
     "llm_containment",
-    priority=2,
     oracle=f"""
     WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
     {_RARE_SHINGLE_CTES},
@@ -1545,7 +1524,6 @@ _QUALITY_RENAMED = must_replace(
 
 @register(
     "llm_dedup_keepers_quality",
-    priority=2,
     oracle="WITH RECURSIVE " + _MINHASH_CTES + ",\n    " + _QUALITY_RENAMED + """
     , pairs AS (SELECT doc_a, doc_b FROM j WHERE jaccard > 0.5),
     """ + _reach_ctes("pairs") + """,
@@ -1600,7 +1578,6 @@ def llm_dedup_keepers_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_cross_source_dups",
-    priority=2,
     oracle="WITH " + _MINHASH_CTES + """
     , pairs AS (SELECT doc_a, doc_b, jaccard FROM j WHERE jaccard > 0.5),
     lab AS (SELECT p.jaccard,
@@ -1653,7 +1630,6 @@ def llm_cross_source_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_containment_sketch",
-    priority=2,
     oracle=f"""
     WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
     {_RARE_SHINGLE_CTES},
@@ -1712,7 +1688,6 @@ def llm_containment_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_contamination_fraction",
-    priority=2,
     oracle=f"""
     WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
     sh AS (SELECT doc_id, unnest(list_distinct(list_transform({_SH3}, s -> md5(s)))) AS sh
@@ -1752,7 +1727,6 @@ def llm_contamination_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_cluster_size_stats",
-    priority=2,
     oracle="WITH RECURSIVE " + _MINHASH_CTES + """
     , pairs AS (SELECT doc_a, doc_b FROM j WHERE jaccard > 0.5),
     """ + _reach_ctes("pairs") + """,
@@ -1792,7 +1766,6 @@ def llm_cluster_size_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_dedup_agreement",
-    priority=2,
     oracle="WITH " + _MINHASH_CTES + f""",
     lsh AS (SELECT doc_a AS id_a, doc_b AS id_b FROM j WHERE jaccard > 0.5),
     psh AS (SELECT doc_id AS did, unnest(list_distinct({_SHINGLES})) AS g FROM tk),
@@ -1893,7 +1866,6 @@ def llm_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "llm_jaccard_prefix_pos",
-    priority=2,
     oracle=_PREFIX_JACCARD_ORACLE,
     tags=("llm", "dedup", "jaccard"),
 )(_jaccard_prefix_join(positional=True))
@@ -1992,13 +1964,11 @@ def _semdedup_pairs(bcast: bool) -> Builder:
 
 register(
     "llm_semdedup_pairs",
-    priority=2,
     oracle=_SEMDEDUP_ORACLE,
     tags=("llm", "dedup", "similarity", "semantic"),
 )(_semdedup_pairs(bcast=False))
 register(
     "llm_semdedup_bcast",
-    priority=2,
     oracle=_SEMDEDUP_ORACLE,
     tags=("llm", "dedup", "similarity", "semantic", "scale-twin"),
 )(_semdedup_pairs(bcast=True))
@@ -2084,7 +2054,6 @@ def _semdedup_2level_oracle(cap: int) -> str:
 
 @register(
     "llm_semdedup_2level",
-    priority=1,
     oracle=_semdedup_2level_oracle(16),
     tags=("llm", "dedup", "similarity", "semantic", "scale-twin"),
 )
@@ -2137,7 +2106,6 @@ def _semdedup_multiprobe_oracle(cap: int, nprobe_super: int) -> str:
 
 @register(
     "llm_semdedup_multiprobe",
-    priority=1,
     oracle=_semdedup_multiprobe_oracle(16, 2),
     tags=("llm", "dedup", "similarity", "semantic", "scale-twin"),
 )
@@ -2173,7 +2141,6 @@ def llm_semdedup_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_semdedup_capped",
-    priority=1,
     oracle=_semdedup_capped_oracle(16),
     tags=("llm", "dedup", "similarity", "semantic", "scale-twin"),
 )

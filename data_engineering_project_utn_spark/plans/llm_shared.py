@@ -1,10 +1,8 @@
 """Shared DuckDB-oracle SQL fragments for the LLM plan families.
 
 One definition per formula (tokenizer, shingles, quality score, minhash
-chain, vector dot) so a gate can never drift from its siblings — family
-modules import these; editing a shared fragment correctly marks every
-dependent query stale (plans/staleness.py), while editing one family's
-module stales only that family (the reason plans/llm.py was split).
+chain, vector dot) so a gate can never drift from its siblings; the
+family modules import these.
 """
 
 from __future__ import annotations

@@ -74,13 +74,11 @@ def _ivf_ann(bcast: bool) -> Builder:
 
 register(
     "llm_ivf_ann",
-    priority=0,
     oracle=_IVF_ANN_ORACLE,
     tags=("llm", "similarity", "ann", "ivf"),
 )(_ivf_ann(bcast=False))
 register(
     "llm_ivf_bcast",
-    priority=1,
     oracle=_IVF_ANN_ORACLE,
     tags=("llm", "similarity", "ann", "ivf", "broadcast"),
 )(_ivf_ann(bcast=True))
@@ -88,7 +86,6 @@ register(
 
 @register(
     "llm_ivf_nprobe",
-    priority=1,
     oracle=f"""
     WITH cents AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
     scored AS (
@@ -135,7 +132,6 @@ def llm_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_knn_cosine",
-    priority=0,
     oracle=f"""
     WITH q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id = 0)
     SELECT e.vec_id,
@@ -179,7 +175,6 @@ _SIGS_CTE = _sigs_cte(8) + """, q AS (SELECT vec_id AS q_id, embedding AS qv, bu
 
 @register(
     "llm_lsh_ann",
-    priority=0,
     oracle=f"""
     WITH {_SIGS_CTE}
     SELECT s.vec_id,
@@ -206,7 +201,6 @@ def llm_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_knn_join",
-    priority=0,
     oracle="WITH " + _sigs_cte(6) + f""",
     pairs AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -374,7 +368,6 @@ def llm_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_label_blocked_pairs",
-    priority=1,
     oracle="WITH " + _sigs_cte(4) + f"""
     , pairs AS (
         SELECT a.label, a.vec_id AS id_a, b.vec_id AS id_b,
@@ -479,7 +472,6 @@ def llm_label_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_ivf_trained",
-    priority=1,
     oracle="""
     SELECT COUNT(*) AS n_vectors, TRUE AS cells_bounded,
            TRUE AS objective_improved
@@ -786,7 +778,6 @@ def _power_iter_oracle(iters: int = 4, x_scale: int = 10**6, v_scale: int = 1 <<
 
 @register(
     "llm_top_component",
-    priority=2,
     oracle=_power_iter_oracle(),
     tags=("llm", "similarity", "linalg"),
 )
@@ -812,7 +803,6 @@ def llm_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_pca_explained",
-    priority=2,
     oracle=_power_iter_oracle().replace(
         "\n    SELECT CAST(dim AS BIGINT) AS dim, CAST(v AS BIGINT) AS v_fp FROM v4 ORDER BY dim",
         """,
@@ -921,7 +911,6 @@ def _second_pi_oracle(
 
 @register(
     "llm_second_component",
-    priority=2,
     oracle=_second_pi_oracle(),
     tags=("llm", "similarity", "linalg"),
 )
@@ -945,7 +934,6 @@ def llm_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_pca_project",
-    priority=2,
     oracle=_second_pi_oracle().replace(
         "\n    SELECT CAST(dim AS BIGINT) AS dim, CAST(w AS BIGINT) AS v2_fp "
         "FROM u4 ORDER BY dim",
@@ -1080,7 +1068,6 @@ def _kpca_oracle(
 
 @register(
     "llm_pca_components",
-    priority=2,
     oracle=_kpca_oracle(k=3, iters=4),
     tags=("llm", "similarity", "linalg"),
 )
@@ -1111,7 +1098,6 @@ def llm_pca_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_pca_grid_ann",
-    priority=2,
     oracle=f"""
     WITH {{KPCA}},
     proj AS MATERIALIZED (SELECT xq0.vec_id, SUM(xq0.x * a.v) AS p1,
@@ -1167,7 +1153,6 @@ def llm_pca_grid_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_pca_grid_ann_balanced",
-    priority=2,
     oracle=f"""
     WITH {{KPCA}},
     proj AS MATERIALIZED (SELECT xq0.vec_id, SUM(xq0.x * a.v) AS p1,
@@ -1229,7 +1214,6 @@ def llm_pca_grid_ann_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_pca_grid_ann_multiprobe",
-    priority=2,
     oracle=f"""
     WITH {{KPCA}},
     proj AS MATERIALIZED (SELECT xq0.vec_id, SUM(xq0.x * a.v) AS p1,
@@ -1297,7 +1281,6 @@ def llm_pca_grid_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_gram_matrix",
-    priority=2,
     oracle=f"""
     WITH xq AS (SELECT vec_id, unnest(range(0, len(embedding))) AS dim,
                CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1000000.0) AS BIGINT) AS x
@@ -1330,7 +1313,6 @@ def llm_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_pq_adc",
-    priority=2,
     oracle="""
     WITH xq AS (SELECT vec_id, unnest(range(0, len(embedding))) AS dim,
                 CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1000000.0) AS BIGINT) AS x
@@ -1398,7 +1380,6 @@ def llm_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_ivfpq_ann",
-    priority=2,
     oracle="""
     WITH cents AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
     cscored AS (
@@ -1484,7 +1465,6 @@ def llm_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_pq_recall",
-    priority=2,
     oracle="""
     WITH xq AS (SELECT vec_id, unnest(range(0, len(embedding))) AS dim,
                 CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1000000.0) AS BIGINT) AS x
@@ -1624,7 +1604,6 @@ def _pq_train_oracle(k: int = 16, dsub: int = 32, iters: int = 2) -> str:
 
 @register(
     "llm_pq_trained",
-    priority=2,
     oracle=_pq_train_oracle(),
     tags=("llm", "similarity", "ann", "pq", "kmeans"),
 )
@@ -1657,7 +1636,6 @@ def llm_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_pq_recall_trained",
-    priority=2,
     oracle="WITH " + ",\n    ".join(_pq_train_ctes()) + """,
     dt AS (SELECT v.vec_id, c.j, v.s,
                   CAST(SUM((v.x - c.c) * (v.x - c.c)) AS BIGINT) AS dist
@@ -1731,7 +1709,6 @@ def llm_pq_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_pq_recall_residual",
-    priority=2,
     oracle="""
     WITH cents AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
     cscored AS (
@@ -1967,7 +1944,6 @@ _OPQ_SQL = """
 
 @register(
     "llm_pq_recall_opq",
-    priority=2,
     oracle=_OPQ_SQL,
     tags=("llm", "similarity", "ann", "ivf", "pq", "opq", "report"),
 )
@@ -2142,7 +2118,6 @@ def _mmr_oracle(k: int = 5, pool: int = 50, lam: str = "0.7", oml: str = "0.3") 
 
 @register(
     "llm_mmr_topk",
-    priority=2,
     oracle=_mmr_oracle(),
     tags=("llm", "similarity", "retrieval", "rerank"),
 )
@@ -2176,7 +2151,6 @@ def llm_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_ann_rank_eval",
-    priority=2,
     oracle=f"""
     WITH {_sigs_cte(8)},
     q AS (SELECT vec_id AS q_id, embedding AS qv, bucket AS q_bucket
@@ -2318,7 +2292,6 @@ _RESIDUAL_TRAIN_PRELUDE = [
 
 @register(
     "llm_pq_residual_trained",
-    priority=2,
     oracle=(
         "WITH "
         + ",\n    ".join(_pq_train_ctes(prelude=_RESIDUAL_TRAIN_PRELUDE))
@@ -2549,13 +2522,11 @@ def _ivfpq_residual_ann(bcast: bool) -> Builder:
 
 register(
     "llm_ivfpq_residual_ann",
-    priority=2,
     oracle=_IVFPQ_RESIDUAL_SQL,
     tags=("llm", "similarity", "ann", "ivf", "pq"),
 )(_ivfpq_residual_ann(bcast=False))
 register(
     "llm_ivfpq_residual_bcast",
-    priority=2,
     oracle=_IVFPQ_RESIDUAL_SQL,
     tags=("llm", "similarity", "ann", "ivf", "pq", "scale-twin"),
 )(_ivfpq_residual_ann(bcast=True))
@@ -2590,7 +2561,6 @@ def _ivf_2level_ann_oracle(nprobe: int = 2, k: int = 10) -> str:
 
 @register(
     "llm_ivf_2level_ann",
-    priority=1,
     oracle=_ivf_2level_ann_oracle(),
     tags=("llm", "similarity", "ann", "ivf", "scale-twin"),
 )
@@ -2705,7 +2675,6 @@ def _2level_rank_eval_oracle(nprobes: "tuple[int, ...]" = (1, 2, 4)) -> str:
 
 @register(
     "llm_2level_rank_eval",
-    priority=1,
     oracle=_2level_rank_eval_oracle(),
     tags=("llm", "similarity", "ann", "ivf", "report"),
 )
@@ -2834,7 +2803,6 @@ def _ivf_2level_multiprobe_oracle(
 
 @register(
     "llm_ivf_2level_multiprobe",
-    priority=1,
     oracle=_ivf_2level_multiprobe_oracle(),
     tags=("llm", "similarity", "ann", "ivf", "scale-twin"),
 )
@@ -2957,7 +2925,6 @@ def _2level_super_rank_eval_oracle(
 
 @register(
     "llm_2level_super_rank_eval",
-    priority=1,
     oracle=_2level_super_rank_eval_oracle(),
     tags=("llm", "similarity", "ann", "ivf", "report"),
 )
@@ -3109,7 +3076,6 @@ def _ivfpq_rank_eval_oracle(nprobes: "tuple[int, ...]" = (1, 2, 4)) -> str:
 
 @register(
     "llm_ivfpq_rank_eval",
-    priority=1,
     oracle=_ivfpq_rank_eval_oracle(),
     tags=("llm", "similarity", "ann", "ivf", "pq", "report"),
 )
@@ -3260,7 +3226,6 @@ def _mmr_ann_oracle(k: int = 5, pool: int = 32, lam: str = "0.7", oml: str = "0.
 
 @register(
     "llm_mmr_topk_ann",
-    priority=1,
     oracle=_mmr_ann_oracle(),
     tags=("llm", "similarity", "retrieval", "rerank", "ann"),
 )
@@ -3348,7 +3313,6 @@ def llm_mmr_topk_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_sq8_error",
-    priority=2,
     oracle="""
     WITH xq AS (SELECT vec_id, unnest(range(0, len(embedding))) AS dim,
                 CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1000000.0) AS BIGINT) AS x
@@ -3409,7 +3373,6 @@ _HARD_NEGATIVES_ORACLE = f"""
 
 @register(
     "llm_hard_negatives",
-    priority=1,
     oracle=_HARD_NEGATIVES_ORACLE,
     tags=("llm", "similarity", "training", "report"),
 )

@@ -8,10 +8,6 @@ from pyspark.sql import functions as F
 
 from data_engineering_project_utn_spark.llm import text as tx
 from data_engineering_project_utn_spark.llm.compute import parallelize_compute
-# module-object import so the staleness closure includes llm_shared.py —
-# the fragment names below are plain strings, which the closure BFS cannot
-# follow on their own (plans/staleness.py walks modules and callables)
-from data_engineering_project_utn_spark.plans import llm_shared as _llm_shared  # noqa: F401
 from data_engineering_project_utn_spark.plans.llm_shared import (
     _QUALITY_CTES,
     _RARE_SHINGLE_CTES,
@@ -659,7 +655,6 @@ def llm_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_tfidf_topk",
-    priority=2,
     oracle=f"""
     WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
     tok AS (SELECT doc_id, unnest(t) AS term FROM tk),
@@ -714,7 +709,6 @@ def _bloom_bit_sql(item: str, seed: int, m: int) -> str:
 
 @register(
     "llm_bloom_decontam",
-    priority=2,
     oracle=f"""
     WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
     sh AS (SELECT doc_id,
@@ -810,7 +804,6 @@ _HLL64_RAW_SQL = (
 
 @register(
     "llm_hll_by_source",
-    priority=2,
     oracle=rf"""
     WITH hashed AS (
         SELECT source, {_HLL64_BUCKET_SQL} AS bucket,
@@ -878,7 +871,6 @@ def llm_hll_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_cm_by_source",
-    priority=2,
     oracle=rf"""
     WITH tok AS (SELECT source, unnest({_TOKS}) AS token FROM documents),
     exact AS (SELECT source, token, CAST(COUNT(*) AS BIGINT) AS exact_cnt
@@ -945,7 +937,6 @@ def llm_cm_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_tfidf_cosine_pairs",
-    priority=2,
     oracle=f"""
     WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
     {_RARE_SHINGLE_CTES},
@@ -1031,7 +1022,6 @@ def _pagerank_oracle(iters: int = 3, scale: int = 10**6) -> str:
 
 @register(
     "llm_pagerank",
-    priority=2,
     oracle=_pagerank_oracle(),
     tags=("llm", "graph"),
 )
@@ -1062,7 +1052,6 @@ def llm_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_quantile_sketch",
-    priority=2,
     oracle="""
     WITH samp AS MATERIALIZED (
         SELECT doc_id, n_chars FROM (
@@ -1168,7 +1157,6 @@ def _wpagerank_oracle(iters: int = 3, scale: int = 10**6) -> str:
 
 @register(
     "llm_pagerank_weighted",
-    priority=2,
     oracle=_wpagerank_oracle(),
     tags=("llm", "graph"),
 )
@@ -1205,7 +1193,6 @@ def llm_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_quantiles_by_source",
-    priority=2,
     oracle="""
     WITH samp AS MATERIALIZED (
         SELECT source, doc_id, n_chars FROM (
@@ -1345,13 +1332,11 @@ def _graph_triangles(orientation: str) -> Builder:
 
 register(
     "llm_graph_triangles",
-    priority=2,
     oracle=_TRIANGLE_ORACLE,
     tags=("llm", "graph"),
 )(_graph_triangles("id"))
 register(
     "llm_graph_triangles_degree",
-    priority=2,
     oracle=_TRIANGLE_ORACLE,
     tags=("llm", "graph"),
 )(_graph_triangles("degree"))
@@ -1359,7 +1344,6 @@ register(
 
 @register(
     "llm_bm25_topk",
-    priority=2,
     oracle=f"""
     WITH tok AS (SELECT doc_id AS did, unnest({_TOKS}) AS term FROM documents),
     tf AS (SELECT did, term, CAST(COUNT(*) AS BIGINT) AS tf
@@ -1410,7 +1394,6 @@ def llm_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_bigram_surprisal",
-    priority=2,
     oracle=f"""
     WITH {_SURPRISAL_CTES}
     SELECT doc_id, bits_fp, n_bigrams,
@@ -1449,7 +1432,6 @@ def llm_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_winnowing",
-    priority=2,
     oracle=f"""
     WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
     shp AS (SELECT doc_id AS did, CAST(greatest(len(t) - 4, 1) AS BIGINT) AS cnt,
@@ -1505,7 +1487,6 @@ def llm_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_token_pairs",
-    priority=2,
     oracle=f"""
     WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
     dt AS (SELECT doc_id, unnest(list_distinct(t)) AS tok FROM tk),
@@ -1557,7 +1538,6 @@ def llm_token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_zipf_slope",
-    priority=2,
     oracle=f"""
     WITH tok AS (SELECT unnest({_TOKS}) AS tok FROM documents),
     freq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS f FROM tok GROUP BY tok),
@@ -1630,7 +1610,6 @@ def llm_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_ngram_novelty",
-    priority=2,
     oracle=f"""
     WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
     sh AS (SELECT doc_id, unnest(list_distinct({_SHINGLES})) AS g FROM tk),

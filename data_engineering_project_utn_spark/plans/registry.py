@@ -8,7 +8,7 @@ strategies held to their plain twins' oracles); ``oracle=None`` would fall
 back to the driver's weaker rows-only check, and nothing currently needs
 it.  Only the genuinely non-SQL operators (stateful streaming EMA state
 machines) stay outside the registry, verified by streaming parity tests
-instead.
+instead.  ``all_queries()`` returns the queries in registration order.
 
 Determinism contract (how every query is written so the driver's
 order-insensitive value-hash matches bit-for-bit between Spark and DuckDB):
@@ -26,7 +26,7 @@ order-insensitive value-hash matches bit-for-bit between Spark and DuckDB):
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,9 +40,7 @@ class Query:
     name: str
     build: Builder
     oracle: str | None
-    doc: str = ""
-    tags: tuple[str, ...] = field(default_factory=tuple)
-    priority: int = 100
+    tags: tuple[str, ...] = ()
 
 
 def must_replace(template: str, old: str, new: str) -> str:
@@ -65,47 +63,24 @@ def register(
     name: str,
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
-    priority: int = 100,
 ) -> Callable[[Builder], Builder]:
-    """Register a query plan.
-
-    ``priority`` orders ``all_queries()`` (lower = earlier); the driver
-    iterates the dict in order and may stop after a fixed budget, so queries
-    without a prior green CORRECTNESS row get low priorities to be verified
-    first.  Ties keep registration order.
-    """
+    """Register the decorated builder under ``name`` with its DuckDB oracle
+    SQL and tags.  Names are unique; a duplicate fails at import time."""
 
     def deco(fn: Builder) -> Builder:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = Query(
-            name, fn, oracle, doc=(fn.__doc__ or ""), tags=tags, priority=priority
-        )
+        _REGISTRY[name] = Query(name, fn, oracle, tags)
         return fn
 
     return deco
 
 
 def all_queries() -> dict[str, Query]:
-    """Registry in driver-check order: stale queries first (never
-    driver-verified, or implementing source files changed since their last
-    green CORRECTNESS row — see plans/staleness.py), least-recently-green
-    before recently-green (so a mass staleness event — a shared module edit
-    — can't push a query that's been waiting since an older round past the
-    driver's ~50-query budget), then ascending priority, then registration
-    order (Python dicts preserve insertion order)."""
-    from .staleness import is_stale, last_green_round
-
-    items = sorted(
-        enumerate(_REGISTRY.items()),
-        key=lambda t: (
-            not is_stale(t[1][0], t[1][1].build),
-            last_green_round(t[1][0]),
-            t[1][1].priority,
-            t[0],
-        ),
-    )
-    return {name: q for _, (name, q) in items}
+    """Every registered query, in registration order (the order
+    ``plans/__init__`` imports the family modules, then source order
+    within each).  A copy: callers may add to it without registering."""
+    return dict(_REGISTRY)
 
 
 def get_query(name: str) -> Query:

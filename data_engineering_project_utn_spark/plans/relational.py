@@ -432,7 +432,6 @@ def rl_distinct_ship_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_customer_set_ops",
-    priority=1,
     oracle="""
     WITH f AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'),
     o AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O')
@@ -476,7 +475,6 @@ def rl_customer_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_order_rollup",
-    priority=1,
     oracle="""
     SELECT o_orderpriority, o_orderstatus,
            GROUPING(o_orderpriority) AS g_priority,
@@ -515,7 +513,6 @@ def rl_order_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_sole_late_supplier",
-    priority=2,
     oracle="""
     WITH li AS (SELECT l.l_orderkey, l.l_suppkey,
                        (l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY) AS late
@@ -571,7 +568,6 @@ def rl_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_small_quantity_revenue",
-    priority=2,
     oracle="""
     WITH pavg AS (SELECT l_partkey,
                          CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
@@ -615,7 +611,6 @@ def rl_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_global_sales_opportunity",
-    priority=2,
     oracle="""
     WITH pos AS (SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS s,
                         CAST(COUNT(*) AS BIGINT) AS n
@@ -680,7 +675,6 @@ def rl_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_nation_trade_volume",
-    priority=2,
     oracle="""
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
            CAST(YEAR(l.l_shipdate) AS BIGINT) AS l_year,
@@ -745,7 +739,6 @@ def rl_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_market_share",
-    priority=2,
     oracle="""
     WITH rev AS (
         SELECT CAST(YEAR(l.l_shipdate) AS BIGINT) AS l_year,
@@ -815,7 +808,6 @@ def rl_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_monthly_growth",
-    priority=2,
     oracle="""
     WITH m AS (SELECT date_trunc('month', o_orderdate) AS month,
                       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
@@ -872,7 +864,6 @@ def rl_monthly_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_returned_item_ranking",
-    priority=2,
     oracle="""
     SELECT c.c_custkey, c.c_name, n.n_name,
            CAST(c.c_acctbal AS DOUBLE) AS acctbal,
@@ -931,7 +922,6 @@ def rl_returned_item_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_promo_revenue",
-    priority=2,
     oracle="""
     SELECT
         CAST(100.0 * CAST(SUM(CASE WHEN p.p_type = 'PROMO'
@@ -982,7 +972,6 @@ def rl_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_top_supplier_revenue",
-    priority=2,
     oracle="""
     WITH rev AS (
         SELECT l_suppkey,
@@ -1039,7 +1028,6 @@ def rl_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_large_volume_orders",
-    priority=2,
     oracle="""
     WITH big AS (
         SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(14,2))) AS qty_dec
@@ -1094,7 +1082,6 @@ def rl_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_bracket_revenue",
-    priority=2,
     oracle="""
     SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(14,2))
                     * (1 - CAST(l.l_discount AS DECIMAL(5,2)))) AS DOUBLE)
@@ -1150,7 +1137,6 @@ def rl_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_min_cost_supplier",
-    priority=1,
     oracle="""
     WITH ps AS (
         SELECT l_partkey AS partkey, l_suppkey AS suppkey,
@@ -1238,7 +1224,6 @@ def rl_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_excess_stock_suppliers",
-    priority=1,
     oracle="""
     WITH fp AS (
         SELECT p_partkey FROM part WHERE p_name LIKE 'red%'),
@@ -1326,7 +1311,6 @@ def rl_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_important_stock",
-    priority=1,
     oracle="""
     WITH val AS (
         SELECT l.l_partkey,
@@ -1394,7 +1378,6 @@ def rl_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_shipping_priority_mix",
-    priority=1,
     oracle="""
     SELECT l.l_returnflag AS ship_class,
            CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -1445,7 +1428,6 @@ def rl_shipping_priority_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rl_forecast_revenue_change",
-    priority=1,
     oracle="""
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2))
                     * CAST(l_discount AS DECIMAL(5,2))) AS DOUBLE) AS revenue,
@@ -1614,13 +1596,11 @@ def _product_type_profit(bucketed: bool) -> Builder:
 
 register(
     "rl_product_type_profit",
-    priority=1,
     oracle=_Q9_ORACLE,
     tags=("relational", "join", "agg"),
 )(_product_type_profit(bucketed=False))
 register(
     "rl_product_type_profit_bucketed",
-    priority=1,
     oracle=_Q9_ORACLE,
     tags=("relational", "join", "agg", "bucketed", "scale-twin"),
 )(_product_type_profit(bucketed=True))
@@ -1628,7 +1608,6 @@ register(
 
 @register(
     "rl_parts_supplier_counts",
-    priority=1,
     oracle="""
     WITH excl AS (
         SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)

@@ -67,14 +67,13 @@ _INFERENCE_CONFS = (
 )
 
 # Inferred schemas of single parquet files: one entry per (absolute path,
-# inference conf values), holding the ``file_status`` it was inferred at,
-# the idiom of ``plans/staleness.py``'s digest caches.  A rewritten file
-# fails the status check and is inferred again, replacing its entry, so
-# nothing ever has to clear this.  A rewrite with the same size and the
-# same mtime in ns is the one case it cannot see.  Values are StructTypes,
-# never DataFrames, so no entry outlives or pins a session.  Two threads
-# that miss together both infer; each entry is one tuple stored whole, so
-# a schema is never paired with another read's status.
+# inference conf values), holding the ``file_status`` it was inferred at.
+# A rewritten file fails the status check and is inferred again, replacing
+# its entry, so nothing ever has to clear this.  A rewrite with the same
+# size and the same mtime in ns is the one case it cannot see.  Values are
+# StructTypes, never DataFrames, so no entry outlives or pins a session.
+# Two threads that miss together both infer; each entry is one tuple stored
+# whole, so a schema is never paired with another read's status.
 _SCHEMAS: dict[tuple, tuple[tuple[str, int, int], T.StructType]] = {}
 
 

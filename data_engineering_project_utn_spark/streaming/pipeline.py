@@ -521,7 +521,7 @@ def sessionize_stream(
 ) -> DataFrame:
     """Gap-based sessionization on a stream via native ``session_window`` —
     the Structured Streaming twin of the batch lag+running-sum query
-    (plans/reference_events.py:rl_user_sessions).
+    (plans/events_live_plans.py:rl_user_sessions).
 
     Spark merges events into a per-key session while each arrives before
     the previous session end (last event + gap); the watermark closes and

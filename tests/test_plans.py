@@ -44,6 +44,50 @@ def _pushed_filters(scan_line: str) -> str:
     return tail.split("ReadSchema", 1)[0]
 
 
+def test_registry_is_registration_order_and_touches_no_file(monkeypatch):
+    """``all_queries()`` reads no file and returns the registry in
+    registration order: one contiguous block per family module, in the
+    order ``plans/__init__`` imports them.  The driver contract lists the
+    same keys in the same order."""
+    import builtins
+    import os
+
+    import __spark_entry__ as se
+
+    calls = []
+    real_stat, real_open = os.stat, builtins.open
+
+    def stat(*a, **kw):
+        calls.append(("stat", a))
+        return real_stat(*a, **kw)
+
+    def open_(*a, **kw):
+        calls.append(("open", a))
+        return real_open(*a, **kw)
+
+    monkeypatch.setattr(os, "stat", stat)
+    monkeypatch.setattr(builtins, "open", open_)
+    first = list(all_queries())
+    monkeypatch.undo()
+    assert calls == []
+    assert list(all_queries()) == first
+    assert list(se.queries()) == first
+    assert list(se.oracle_sql()) == first
+    modules = [QUERIES[n].build.__module__.rsplit(".", 1)[-1] for n in first]
+    blocks = [m for i, m in enumerate(modules) if i == 0 or m != modules[i - 1]]
+    assert blocks == [
+        "relational",
+        "events_historical_plans",
+        "events_live_plans",
+        "llm_text_plans",
+        "llm_dedup_plans",
+        "llm_similarity_plans",
+        "llm_multimodal_plans",
+        "llm_curation_plans",
+        "llm_classify_plans",
+    ]
+
+
 def test_interval_core_never_nested_loop(spark, sf_dir):
     """The as-of merge (J4 replacement) must stay a hash/sort-merge path —
     a BNLJ here is quadratic at scale."""

@@ -24,16 +24,13 @@ def run_tool():
     return mod
 
 
-def test_check_reports_ok_and_writes_sweep_record(run_tool, spark, sf_dir, tmp_path):
-    out = tmp_path / "sweep.json"
-    records, summary = run_tool.run(spark, "check", sf_dir, CHEAP, out=str(out))
+def test_check_reports_ok_and_writes_sweep_record(run_tool, spark, sf_dir, capsys):
+    """The sweep record is stdout: one JSON line per query, then the summary."""
+    records, summary = run_tool.run(spark, "check", sf_dir, CHEAP)
     assert [records[n]["status"] for n in CHEAP] == ["OK", "OK"]
     assert (summary["queries"], summary["ok"], summary["failed"], summary["errors"]) == (2, 2, 0, 0)
-    record = json.loads(out.read_text())
-    assert record["sf"] == sf_dir
-    assert record["queries_checked"] == 2
-    assert record["fails"] == {}
-    assert record["total_sec"] >= 0
+    lines = [json.loads(line) for line in capsys.readouterr().out.splitlines()]
+    assert lines == [records[n] for n in CHEAP] + [summary]
 
 
 def test_time_records_reps_and_jobs(run_tool, spark, sf_dir):
@@ -86,3 +83,11 @@ def test_unknown_or_raising_query_is_an_error_not_a_stop(
 def test_options_may_sit_between_positionals(run_tool, sf_dir):
     args, names = run_tool.parse_args(["time", sf_dir, "--reps", "1", CHEAP[0]])
     assert (args.verb, args.sf_dir, args.reps, names) == ("time", sf_dir, 1, [CHEAP[0]])
+
+
+@pytest.mark.parametrize("verb", ["time", "check"])
+def test_out_is_a_usage_error_except_for_plan(run_tool, sf_dir, verb, capsys):
+    with pytest.raises(SystemExit) as exc:
+        run_tool.parse_args([verb, sf_dir, CHEAP[0], "--out", "x"])
+    assert exc.value.code == 2
+    assert "--out applies to plan only" in capsys.readouterr().err

@@ -4,7 +4,7 @@
 Usage::
 
     python tools/run.py time  <sf_dir> (<name>... | --tag T | --all) [--reps N]
-    python tools/run.py check <sf_dir> (<name>... | --tag T | --all) [--out PATH]
+    python tools/run.py check <sf_dir> (<name>... | --tag T | --all)
     python tools/run.py plan  <sf_dir> (<name>... | --tag T | --all) [--out DIR]
 
 For each query the runner releases the tracked persists (``persist.py``),
@@ -35,10 +35,7 @@ clears Spark's cache, builds the query under the job group
 Each query prints one JSON line whose ``status`` is OK, FAIL (oracle
 mismatch) or ERROR (the lookup, build, action or oracle raised; the
 traceback goes to stderr and the loop goes on).  The run ends with one
-summary line and exits non-zero unless every query is OK.  For ``check``,
-``--out PATH`` writes the sweep record that ``tools/refresh_verified.py``
-reads: ``sf``, ``queries_checked``, ``fails`` (every query that is not
-OK), ``total_sec`` and every query's line under ``queries``.
+summary line and exits non-zero unless every query is OK.
 
 The end-to-end benchmark is ``perfbench/``; this tool isolates queries.
 """
@@ -172,17 +169,6 @@ def run(spark, verb, sf_dir, names, reps=5, out=None):
         "total_sec": round(time.perf_counter() - t_run, 1),
     }
     print(json.dumps(summary), flush=True)
-    if out and verb == "check":
-        record = {
-            "sf": sf_dir,
-            "queries_checked": len(records),
-            "fails": {n: r for n, r in records.items() if r["status"] != "OK"},
-            "total_sec": summary["total_sec"],
-            "queries": records,
-        }
-        with open(out, "w", encoding="utf-8") as fh:
-            json.dump(record, fh, indent=1)
-            fh.write("\n")
     return records, summary
 
 
@@ -198,14 +184,14 @@ def parse_args(argv=None):
     p.add_argument("--tag", help="every query carrying this registry tag")
     p.add_argument("--all", action="store_true", help="the whole registry")
     p.add_argument("--reps", type=int, default=5, help="timed builds per query (time)")
-    p.add_argument("--out", help="sweep record file (check) or explain directory (plan)")
+    p.add_argument("--out", help="directory for formatted explains (plan)")
     args = p.parse_intermixed_args(argv)
     if sum((bool(args.names), args.tag is not None, args.all)) != 1:
         p.error("select queries by name, by --tag or by --all, exactly one way")
     if args.reps < 1:
         p.error("--reps must be at least 1")
-    if args.out and args.verb == "time":
-        p.error("--out applies to check and plan")
+    if args.out and args.verb != "plan":
+        p.error("--out applies to plan only")
     if args.names:
         names = list(dict.fromkeys(args.names))
     else:
